@@ -11,8 +11,12 @@ op is exact (uint64 wraparound, Mersenne fold), so there is no
 float-order freedom for the two paths to disagree on.
 
 Build contract: compiled lazily with the system ``gcc`` into a
-tmpdir cache keyed by the source hash (one compile per host; every
-Spark python worker dlopens the cached .so). Any failure — no
+tmpdir cache keyed by the source hash, the machine architecture and
+the CPU feature flags (one compile per host type; every Spark python
+worker dlopens the cached .so). The object is built ``-march=native``,
+so a tmpdir shared across hosts — a network home, a container image
+baked on another CPU — must not hand one host's .so to a CPU that
+lacks its instructions (SIGILL, not a clean fallback). Any failure — no
 compiler, sandboxed tmp, bad flags — degrades silently to the numpy
 path: ``get_lib()`` returns ``None`` and callers fall back. Nothing
 outside this module may assume the library exists.
@@ -23,6 +27,7 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
+import platform
 import subprocess
 import tempfile
 from pathlib import Path
@@ -706,6 +711,28 @@ _LIB = None
 _TRIED = False
 
 
+def _cpu_flags() -> str:
+    """The first ``flags`` line of /proc/cpuinfo ('' where there is
+    none): the instruction-set extensions ``-march=native`` may use."""
+    try:
+        with open("/proc/cpuinfo") as f:
+            for line in f:
+                if line.startswith("flags"):
+                    return line.split(":", 1)[-1].strip()
+    except OSError:
+        pass
+    return ""
+
+
+def _build_dir(machine: str, cpu_flags: str) -> Path:
+    """Cache directory of the compiled library for one source text on
+    one host type (machine architecture + CPU feature flags)."""
+    key = hashlib.sha256(
+        "\0".join((_C_SRC, machine, cpu_flags)).encode()
+    ).hexdigest()[:16]
+    return Path(tempfile.gettempdir()) / f"eps-native-{key}"
+
+
 def get_lib():
     """Compile-once, dlopen-cached handle to the kernel library, or
     ``None`` when native compilation is unavailable (callers must fall
@@ -715,8 +742,7 @@ def get_lib():
         return _LIB
     _TRIED = True
     try:
-        key = hashlib.sha256(_C_SRC.encode()).hexdigest()[:16]
-        d = Path(tempfile.gettempdir()) / f"eps-native-{key}"
+        d = _build_dir(platform.machine(), _cpu_flags())
         so = d / "libepsnative.so"
         if not so.exists():
             d.mkdir(parents=True, exist_ok=True)

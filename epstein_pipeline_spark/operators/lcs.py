@@ -154,8 +154,10 @@ def lcs_verify(
     # the joined pair set is small in BYTES, so AQE's coalescing packs
     # it into one or two partitions and the per-pair LCS work — the
     # actual cost — serializes onto one core. An explicit partition
-    # count is exempt from AQE coalescing.
-    nparts = docs.sparkSession.sparkContext.defaultParallelism * 2
+    # count is exempt from AQE coalescing. One task per core, one
+    # wave: each Python task costs a fixed 0.2-0.35 s of worker setup
+    # even when empty, and a gray zone is often a handful of pairs.
+    nparts = docs.sparkSession.sparkContext.defaultParallelism
     joined = (
         pairs.join(t.withColumnRenamed("url", "url1").withColumnRenamed("_t", "_t1"), "url1")
         .join(t.withColumnRenamed("url", "url2").withColumnRenamed("_t", "_t2"), "url2")

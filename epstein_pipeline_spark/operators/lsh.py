@@ -28,6 +28,7 @@ from epstein_pipeline_spark.functions.minhash import (
     signature_jaccard_expr,
 )
 from epstein_pipeline_spark.functions.text import normalize_text_expr
+from epstein_pipeline_spark.session import spread_to_cores
 
 
 def minhash_signatures(
@@ -36,18 +37,15 @@ def minhash_signatures(
     """(url, sig: array<long>) for docs passing the length gate
     (reference dedup.py:346-350: len(text) > 100)."""
     udf = make_minhash_udf(cfg.shingle_k, cfg.num_perm, cfg.minhash_seed)
-    # even round-robin repartition before the signature UDF: small
-    # corpora scan as 1-3 input splits, which would serialize the UDF
-    # on as many tasks. Exactly defaultParallelism partitions: task
-    # results are handled driver-serially (~40 ms each with a Python
-    # stage in the loop), so 2x-overpartitioning a small corpus COSTS
-    # more than its balance buys (measured 3.3 s @64 parts vs 1.9 s
-    # @32 parts for the planted pass at 32 cores)
-    nparts = df.sparkSession.sparkContext.defaultParallelism
+    # at most one wave of Python tasks: small corpora scan as 1-3
+    # splits and are re-dealt to one task per core; an input with
+    # enough splits is read as is (spread_to_cores has the numbers)
     return (
-        df.filter(F.length(text_col) > cfg.minhash_min_len)
-        .select(F.col(id_col).alias("url"), normalize_text_expr(text_col).alias("_norm"))
-        .repartition(nparts)
+        spread_to_cores(
+            df.filter(F.length(text_col) > cfg.minhash_min_len).select(
+                F.col(id_col).alias("url"), normalize_text_expr(text_col).alias("_norm")
+            )
+        )
         .withColumn("sig", udf("_norm"))
         .drop("_norm")
     )

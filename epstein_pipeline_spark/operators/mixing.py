@@ -69,14 +69,19 @@ def mix_to_budgets(
     # split("") == [""] would count 1 token for empty/whitespace-only
     # docs (inflating totals and lowering thresholds), and NULL text
     # would contribute NULL n_tokens rows that drop from totals while
-    # still passing the u<threshold filter — coalesce + zero-gate both
+    # still passing the u<threshold filter — zero-gate both on "has a
+    # non-space char" (NULL rlike is NULL, which takes the 0 branch).
+    # F.trim strips only ' ', so edge whitespace is cut by regex: a
+    # leading tab would otherwise split off an empty first token.
+    text = F.col(text_col)
     n_tokens = (
         F.col(tokens_col)
         if tokens_col
         else F.when(
-            F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) == 0, F.lit(0)
+            text.rlike(r"\S"),
+            F.size(F.split(F.regexp_replace(text, r"^\s+|\s+$", ""), r"\s+")),
         )
-        .otherwise(F.size(F.split(F.trim(F.col(text_col)), r"\s+")))
+        .otherwise(F.lit(0))
         .cast("long")
     )
     base = docs.withColumn("n_tokens", n_tokens)

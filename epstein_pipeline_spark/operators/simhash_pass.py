@@ -22,6 +22,7 @@ from epstein_pipeline_spark.functions.simhash import (
     simhash_bands_expr,
 )
 from epstein_pipeline_spark.functions.text import normalize_text_expr
+from epstein_pipeline_spark.session import spread_to_cores
 
 
 def simhash_signatures(
@@ -30,14 +31,13 @@ def simhash_signatures(
     """(url, simhash: long) for docs passing the length gate
     (reference dedup.py:422-423: len > 50)."""
     udf = make_simhash_udf()
-    # even round-robin repartition before the signature UDF — same
-    # rationale (and the same exactly-defaultParallelism sizing) as
-    # minhash_signatures
-    nparts = df.sparkSession.sparkContext.defaultParallelism
+    # one wave of Python tasks — same guard as minhash_signatures
     return (
-        df.filter(F.length(text_col) > cfg.simhash_min_len)
-        .select(F.col(id_col).alias("url"), normalize_text_expr(text_col).alias("_norm"))
-        .repartition(nparts)
+        spread_to_cores(
+            df.filter(F.length(text_col) > cfg.simhash_min_len).select(
+                F.col(id_col).alias("url"), normalize_text_expr(text_col).alias("_norm")
+            )
+        )
         .withColumn("simhash", udf("_norm"))
         .drop("_norm")
     )

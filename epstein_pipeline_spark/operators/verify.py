@@ -70,8 +70,11 @@ def exact_jaccard_pairs(
     # scattered to; (b) the pair set is small in BYTES but heavy in
     # per-row compute, and AQE's byte-based coalescing would otherwise
     # pack it into one partition and serialize the work (explicit
-    # partition counts are exempt from coalescing).
-    nparts = docs.sparkSession.sparkContext.defaultParallelism * 2
+    # partition counts are exempt from coalescing). Exactly one task
+    # per core — one wave: every Python task pays a fixed 0.2-0.35 s
+    # of worker setup even when its partition is empty, so a second
+    # wave costs more than the balance it buys (session.spread_to_cores).
+    nparts = docs.sparkSession.sparkContext.defaultParallelism
     joined = (
         cand.select("url1", "url2")
         .join(t.withColumnRenamed("url", "url2").withColumnRenamed("_t", "_t2"), "url2")

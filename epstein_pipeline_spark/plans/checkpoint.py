@@ -19,8 +19,8 @@ Lineage: every commit appends per-partition rows
 ``<root>/_lineage/`` — the per-partition evidence the north rule
 requires for resumability audits — and records stage-level counters
 (docs_in, docs_out, pairs_emitted, plus shuffle_read_bytes /
-shuffle_write_bytes measured around the write action from the
-AppStatusStore executor totals) in the stage MANIFEST's ``counters``
+shuffle_write_bytes / tasks / task_ms measured around the write action
+from the AppStatusStore executor totals) in the stage MANIFEST's ``counters``
 dict, read back via ``latest(stage)["counters"]`` /
 ``stage_shuffle_write_mb``.
 """
@@ -43,18 +43,28 @@ LINEAGE_SCHEMA = (
 )
 
 
-def _shuffle_totals(spark) -> tuple[int, int] | None:
-    """Cumulative (shuffle_read_bytes, shuffle_write_bytes) across all
-    executors, from the AppStatusStore that backs the Spark UI (present
-    even with ``spark.ui.enabled=false``). Executor summaries are
-    app-lifetime totals and are never evicted (unlike per-stage data,
-    which ``spark.ui.retainedStages`` rolls over), so snapshot deltas
-    around a stage's write action attribute that stage's shuffle
-    traffic — the "shuffle bytes" counter the north rule's lineage
-    requires. Listener-bus delivery is async, so totals can lag task
-    completion by a beat; counters here are evidence, not accounting.
-    Returns None when the internal API is unavailable (counter is then
-    simply omitted — never fail a commit over metrics)."""
+_EXECUTOR_TOTALS = (
+    ("shuffle_read_bytes", "totalShuffleRead"),
+    ("shuffle_write_bytes", "totalShuffleWrite"),
+    ("tasks", "totalTasks"),
+    ("task_ms", "totalDuration"),
+)
+
+
+def _executor_totals(spark) -> dict[str, int] | None:
+    """Cumulative shuffle bytes read/written, tasks run and task time
+    (ms) across all executors, from the AppStatusStore that backs the
+    Spark UI (present even with ``spark.ui.enabled=false``). Executor
+    summaries are app-lifetime totals and are never evicted (unlike
+    per-stage data, which ``spark.ui.retainedStages`` rolls over), so
+    snapshot deltas around a stage's write action attribute that
+    stage's shuffle traffic — the "shuffle bytes" counter the north
+    rule's lineage requires — and its task count, the per-task fixed
+    cost that dominates small Python stages. Listener-bus delivery is
+    async, so totals can lag task completion by a beat; counters here
+    are evidence, not accounting. Returns None when the internal API
+    is unavailable (counters are then simply omitted — never fail a
+    commit over metrics)."""
     try:
         jsc = spark.sparkContext._jsc.sc()
         try:
@@ -65,12 +75,12 @@ def _shuffle_totals(spark) -> tuple[int, int] | None:
             pass
         jstore = jsc.statusStore()
         execs = jstore.executorList(False)  # active + dead, all of them
-        read = write = 0
+        totals = dict.fromkeys((k for k, _ in _EXECUTOR_TOTALS), 0)
         for i in range(execs.size()):
             e = execs.apply(i)
-            read += e.totalShuffleRead()
-            write += e.totalShuffleWrite()
-        return int(read), int(write)
+            for k, getter in _EXECUTOR_TOTALS:
+                totals[k] += int(getattr(e, getter)())
+        return totals
     except Exception:
         return None
 
@@ -246,22 +256,18 @@ class StageStore:
             except FileExistsError:
                 snap_id += 1
         out_dir = sdir / f"snapshot-{snap_id}"
-        sh0 = _shuffle_totals(df.sparkSession)
+        ex0 = _executor_totals(df.sparkSession)
         df.write.mode("overwrite").parquet(str(out_dir))
         # the directory now claims the id; the reservation marker has
         # done its job (a crash before this line leaves an orphan
         # marker, which merely skips an id — harmless)
         (sdir / f".reserve-{snap_id}").unlink(missing_ok=True)
-        sh1 = _shuffle_totals(df.sparkSession)
-        if sh0 is not None and sh1 is not None:
+        ex1 = _executor_totals(df.sparkSession)
+        if ex0 is not None and ex1 is not None:
             # the write action is what executes the (lazy) stage plan,
-            # so the delta is this stage's shuffle traffic; clamped in
-            # case an executor summary was replaced mid-window
-            counters = dict(
-                counters or {},
-                shuffle_read_bytes=max(0, sh1[0] - sh0[0]),
-                shuffle_write_bytes=max(0, sh1[1] - sh0[1]),
-            )
+            # so the delta is this stage's shuffle traffic and tasks;
+            # clamped in case an executor summary was replaced mid-window
+            counters = dict(counters or {}, **{k: max(0, ex1[k] - ex0[k]) for k in ex1})
 
         # per-partition lineage from parquet footers — driver-side
         # metadata reads AND a driver-side pyarrow write: committing

@@ -68,13 +68,13 @@ from epstein_pipeline_spark.plans.checkpoint import StageStore, resume_filter
 from epstein_pipeline_spark.plans.pipeline import PipelineResult, extract_stage
 
 
-def _delta_signatures(spark, docs_delta: DataFrame, cfg: DedupConfig) -> DataFrame:
+def _delta_signatures(docs_delta: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Delta signatures via the pipeline's OWN signatures_stage — one
     body, so base-run and delta signatures can never drift apart
     (the cluster-equivalence contract depends on byte-identity)."""
     from epstein_pipeline_spark.plans.pipeline import signatures_stage
 
-    return signatures_stage(spark, docs_delta, cfg)
+    return signatures_stage(docs_delta, cfg)
 
 
 def _touched_bucket_pairs(
@@ -274,7 +274,7 @@ def _run_incremental_impl(
 
     # 2. delta signatures (old view excludes this delta's snapshot if
     # a crashed run already appended it)
-    sigs_delta = appended("signatures", lambda: _delta_signatures(spark, docs_delta, cfg))
+    sigs_delta = appended("signatures", lambda: _delta_signatures(docs_delta, cfg))
     m_sig = store.latest("signatures")
     sig_paths = m_sig.get("paths", [m_sig["path"]])
     old_sigs = (

@@ -4,7 +4,8 @@ cli.py:556-636, restated per SURVEY.md §3.1).
 
 Stages (each a committed checkpoint, resumable):
 
-    extract    pages(html) -> text (JVM regex chain), normalize, hash
+    extract    pages(html) -> text (one mapInArrow pass: compiled chain for
+               ASCII pages, the re twins otherwise), normalize, hash
     exact      hash-group star pairs
     minhash    signatures -> LSH band join -> Jaccard verify
     simhash    64-bit signatures -> Hamming band join -> verify
@@ -45,6 +46,7 @@ from epstein_pipeline_spark.operators.pairs import canonicalize_pairs, union_fir
 from epstein_pipeline_spark.operators.simhash_pass import simhash_pass
 from epstein_pipeline_spark.operators.verify import exact_jaccard_pairs
 from epstein_pipeline_spark.plans.checkpoint import StageStore
+from epstein_pipeline_spark.session import spread_to_cores
 
 
 @dataclass
@@ -102,7 +104,7 @@ def extract_stage(pages: DataFrame) -> DataFrame:
     )
 
 
-def signatures_stage(spark: SparkSession, docs: DataFrame, cfg: DedupConfig) -> DataFrame:
+def signatures_stage(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(url, _len, sig, simhash) for docs passing the shorter length
     gate — ONE pass for both signature UDFs. Shared by the batch
     pipeline and incremental ingest: the base/delta cluster-
@@ -113,25 +115,26 @@ def signatures_stage(spark: SparkSession, docs: DataFrame, cfg: DedupConfig) -> 
     idempotent) — re-normalizing here was a redundant full-corpus
     regex pass in the single most expensive stage.
 
-    Repartition before the signature UDF only when the scan is
-    actually under-partitioned (< 2 tasks/core — e.g. a tiny corpus in
-    one parquet file would serialize the UDF on one task). At bench
-    scale the committed extract snapshot is already byte-balanced
-    across >= 6 splits/core (the adaptive split sizing above), and the
-    unconditional round-robin shuffle of the full text column was pure
-    overhead there: measured 16.0 vs 14.1 s at 4 cores/128k with
-    identical UDF work."""
+    One wave of Python tasks (``spread_to_cores``): the scan is
+    re-dealt only when it has fewer partitions than cores (a tiny
+    corpus in one parquet file would serialize the UDF on one task),
+    and then to exactly one task per core. Each Python task costs a
+    fixed 0.2-0.35 s of worker setup however few rows it holds, so
+    re-dealing a 4-file snapshot to 4x cores would buy 16 task
+    launches and a round-robin exchange of the whole text column, and
+    no balance. At scale the extract snapshot already has >= 6
+    splits/core (the adaptive split sizing above) and is read as is:
+    an unconditional re-deal measured 16.0 vs 14.1 s at 4 cores/128k."""
     from epstein_pipeline_spark.functions.minhash import make_minhash_udf
     from epstein_pipeline_spark.functions.simhash import make_simhash_udf
 
     mh_udf = make_minhash_udf(cfg.shingle_k, cfg.num_perm, cfg.minhash_seed)
     sh_udf = make_simhash_udf()
-    par = spark.sparkContext.defaultParallelism
-    gated = docs.filter(
-        F.length("text") > min(cfg.minhash_min_len, cfg.simhash_min_len)
-    ).select("url", F.col("text").alias("_norm"), F.length("text").alias("_len"))
-    if gated.rdd.getNumPartitions() < 2 * par:
-        gated = gated.repartition(4 * par)
+    gated = spread_to_cores(
+        docs.filter(
+            F.length("text") > min(cfg.minhash_min_len, cfg.simhash_min_len)
+        ).select("url", F.col("text").alias("_norm"), F.length("text").alias("_len"))
+    )
     return (
         gated.withColumn("sig", mh_udf("_norm"))
         .withColumn("simhash", sh_udf("_norm"))
@@ -258,7 +261,7 @@ def _run_dedup_staged(
     # checkpoint); downstream band-explosion and verify joins reuse the
     # committed table instead of re-running the pandas UDFs
     all_sigs = staged(
-        "signatures", lambda: signatures_stage(spark, docs, cfg), {"docs_in": n_docs}
+        "signatures", lambda: signatures_stage(docs, cfg), {"docs_in": n_docs}
     )
     mh_sigs = all_sigs.filter(F.col("_len") > cfg.minhash_min_len).select("url", "sig")
     sh_sigs = all_sigs.filter(F.col("_len") > cfg.simhash_min_len).select("url", "simhash")

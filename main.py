@@ -350,8 +350,9 @@ def cmd_rollback(args) -> None:
 
 def cmd_lineage(args) -> None:
     """Audit a store without writing Spark code: per-stage manifest
-    summary (snapshot id, rows, bytes, counters incl. shuffle bytes,
-    append-chain length) plus per-partition lineage row counts from
+    summary (snapshot id, rows, bytes, counters incl. shuffle bytes
+    and the tasks / task_ms the commit's write ran, append-chain
+    length) plus per-partition lineage row counts from
     the _lineage parquet — the north-rule resumability evidence,
     surfaced at the CLI. Reads MANIFEST.json + parquet footers
     directly (json/pyarrow only — genuinely no pyspark import, and

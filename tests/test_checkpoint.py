@@ -68,11 +68,21 @@ def test_shuffle_byte_counters(spark, tmp_path):
     assert c["shuffle_write_bytes"] > 0
     # a map-only commit right after must not inherit the agg's bytes:
     # totals are snapshotted around each write action, and the
-    # snapshot's listener-bus drain (inside _shuffle_totals) delivers
+    # snapshot's listener-bus drain (inside _executor_totals) delivers
     # the agg job's async metrics BEFORE the map-only window opens —
     # the == 0 pin relies on that drain, not on luck
     m2 = store.commit("maponly", spark.range(10))
     assert m2["counters"]["shuffle_write_bytes"] == 0
+
+
+def test_task_counters(spark, tmp_path):
+    """Each commit records the tasks its write ran and their summed
+    time, from the same executor-summary deltas as the shuffle bytes:
+    a 3-partition map-only write is exactly 3 tasks."""
+    store = StageStore(tmp_path)
+    m = store.commit("three", spark.range(0, 30, 1, numPartitions=3))
+    assert m["counters"]["tasks"] == 3
+    assert "task_ms" in m["counters"]
 
 
 def test_two_writer_append_conflict(spark, tmp_path):

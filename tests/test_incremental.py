@@ -229,7 +229,7 @@ def test_ingest_crash_recovery_resumes_and_matches_full(spark, pages, tmp_path):
     # snapshot id — the freshness rule compares ids, not timestamps
     store.append(
         "signatures",
-        _delta_signatures(spark, committed_delta, cfg),
+        _delta_signatures(committed_delta, cfg),
         extra={"for_extract_snapshot": m_ex["snapshot"]},
     )
     clusters_before = store.latest("clusters")["committed_at"]
@@ -542,7 +542,7 @@ def test_compact_extract_refuses_pending_ingest(spark, tmp_path):
 
     store.append(
         "signatures",
-        _delta_signatures(spark, spark.read.parquet(m_ex["path"]), DedupConfig()),
+        _delta_signatures(spark.read.parquet(m_ex["path"]), DedupConfig()),
         extra={"for_extract_snapshot": m_ex["snapshot"]},
     )
 

@@ -55,3 +55,19 @@ def test_tokens_col_passthrough(spark):
     docs = _corpus(spark, n=30).withColumn("tok_n", F.lit(100).cast("long"))
     out = mix_to_budgets(docs, {"web": 700, "books": 700}, tokens_col="tok_n")
     assert all(r["n_tokens"] == 100 for r in out.collect())
+
+
+def test_tab_newline_only_text_counts_zero_tokens(spark):
+    # F.trim strips only ' ', so a trim-based gate would count "\t\n"
+    # as 2 empty tokens
+    docs = spark.createDataFrame(
+        [
+            (1, "web", "\t\n"),
+            (2, "web", " \t \r\n "),
+            (3, "web", None),
+            (4, "web", "\tone two\n"),
+        ],
+        "doc_id long, source string, text string",
+    )
+    out = mix_to_budgets(docs, {"web": 10_000_000})
+    assert {r["doc_id"]: r["n_tokens"] for r in out.collect()} == {1: 0, 2: 0, 3: 0, 4: 2}

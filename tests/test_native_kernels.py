@@ -55,6 +55,15 @@ def test_native_available():
     assert _native.get_lib() is not None
 
 
+def test_build_dir_keyed_by_host_type():
+    # the .so is built -march=native: another architecture or another
+    # CPU feature set must never reuse it from a shared tmpdir
+    base = _native._build_dir("x86_64", "fpu sse2 avx2")
+    assert base == _native._build_dir("x86_64", "fpu sse2 avx2")
+    assert base != _native._build_dir("aarch64", "fpu sse2 avx2")
+    assert base != _native._build_dir("x86_64", "fpu sse2 avx2 avx512f")
+
+
 def test_minhash_native_matches_numpy_edges():
     if _native.get_lib() is None:
         return

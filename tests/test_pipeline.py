@@ -103,3 +103,14 @@ def test_lineage_covers_all_stages(spark, result):
         "labels",
         "clusters",
     } <= stages
+
+
+def test_signatures_stage_runs_one_python_wave(spark, result):
+    """The signatures commit launches at most two tasks per core: one
+    wave of Python tasks, plus at most one scan task per core when a
+    small extract snapshot has to be re-dealt (never the 4x-cores
+    re-deal, which alone is 4 waves)."""
+    _, store = result
+    par = spark.sparkContext.defaultParallelism
+    tasks = store.latest("signatures")["counters"]["tasks"]
+    assert 1 <= tasks <= 2 * par

@@ -2,11 +2,16 @@
 column pruning works, small dims broadcast, big tables don't, and the
 JVM-only paths stay inside WholeStageCodegen."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from epstein_pipeline_spark.config import DedupConfig
 from epstein_pipeline_spark.functions.text import content_hash_expr, normalize_text_expr
+from epstein_pipeline_spark.operators.lsh import minhash_signatures
+from epstein_pipeline_spark.operators.simhash_pass import simhash_signatures
+from epstein_pipeline_spark.plans.pipeline import signatures_stage
 
 SF = "/root/testdata/sf0.01"
 
@@ -105,11 +110,7 @@ def test_band_candidates_single_shuffle(spark, pages):
     """Band candidate generation must contain exactly one Exchange
     (the groupBy) before the dedup shuffle — the sizes-join/self-join
     cascade would show 3+."""
-    from epstein_pipeline_spark.operators.lsh import (
-        band_rows,
-        candidate_pairs_from_bands,
-        minhash_signatures,
-    )
+    from epstein_pipeline_spark.operators.lsh import band_rows, candidate_pairs_from_bands
 
     cfg = DedupConfig(band_bucket_cap=100)
     sigs = minhash_signatures(pages.select("url", "text"), cfg).localCheckpoint(eager=True)
@@ -267,3 +268,28 @@ def test_repetition_scores_is_shuffle_free(spark):
     # and the scan reads only what the query needs
     read_schema = [l for l in p.splitlines() if "ReadSchema" in l][0]
     assert "text" in read_schema and "lang" not in read_schema
+
+
+@pytest.mark.parametrize(
+    "sig", [signatures_stage, minhash_signatures, simhash_signatures],
+    ids=["signatures_stage", "minhash_signatures", "simhash_signatures"],
+)
+def test_signature_stages_run_one_wave(spark, sig):
+    """Every Python signature stage runs one wave of tasks: an input
+    with >= one partition per core is read as is (no Exchange), and an
+    under-partitioned one is re-dealt to exactly one partition per
+    core."""
+    par = spark.sparkContext.defaultParallelism
+    cfg = DedupConfig()
+
+    def exchanges(nparts):
+        docs = spark.range(0, 64, 1, numPartitions=nparts).select(
+            F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
+            F.repeat(F.concat(F.lit("word "), F.col("id").cast("string"), F.lit(" ")), 40)
+            .alias("text"),
+        )
+        p = sig(docs, cfg)._jdf.queryExecution().executedPlan().toString()
+        return re.findall(r"Exchange (\w+\(\d+\))", p)
+
+    assert exchanges(par) == []
+    assert exchanges(1) == [f"RoundRobinPartitioning({par})"]

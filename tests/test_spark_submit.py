@@ -79,6 +79,8 @@ def test_spark_submit_synth_then_dedup(zipfile_path, tmp_path):
     assert lin["stages"]["extract"]["rows"] == 300
     assert lin["stages"]["extract"]["counters"]["shuffle_write_bytes"] == 0
     assert lin["stages"]["labels"]["counters"]["shuffle_write_bytes"] > 0
+    assert lin["stages"]["signatures"]["counters"]["tasks"] >= 1
+    assert lin["stages"]["signatures"]["counters"]["task_ms"] > 0
     # per-partition rollup agrees with the manifests
     assert lin["lineage"]["extract/snapshot-0"]["rows_out"] == 300
     assert lin["lineage"]["labels/snapshot-0"]["partitions"] >= 1
