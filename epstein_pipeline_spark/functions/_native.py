@@ -17,9 +17,10 @@ worker dlopens the cached .so). The object is built ``-march=native``,
 so a tmpdir shared across hosts — a network home, a container image
 baked on another CPU — must not hand one host's .so to a CPU that
 lacks its instructions (SIGILL, not a clean fallback). Any failure — no
-compiler, sandboxed tmp, bad flags — degrades silently to the numpy
-path: ``get_lib()`` returns ``None`` and callers fall back. Nothing
-outside this module may assume the library exists.
+compiler, sandboxed tmp, bad flags — degrades to the numpy path with
+one ``RuntimeWarning`` naming the cause: ``get_lib()`` returns ``None``
+and callers fall back. Nothing outside this module may assume the
+library exists.
 """
 
 from __future__ import annotations
@@ -30,6 +31,7 @@ import os
 import platform
 import subprocess
 import tempfile
+import warnings
 from pathlib import Path
 
 import numpy as np
@@ -782,7 +784,14 @@ def get_lib():
         ]
         lib.extract_chain_batch.restype = None
         _LIB = lib
-    except Exception:
+    except Exception as e:
+        detail = getattr(e, "stderr", None) or b""
+        warnings.warn(
+            "native kernels unavailable, falling back to the Python paths: "
+            f"{e!r} {detail.decode(errors='replace')[-500:]}".rstrip(),
+            RuntimeWarning,
+            stacklevel=2,
+        )
         _LIB = None
     return _LIB
 

@@ -8,9 +8,11 @@ collapse whitespace runs to single spaces. ``content_hash_expr``
 mirrors ``content_hash`` (hashing.py:17-20): sha256 hex of the
 normalized text.
 
-All Spark-side versions are pure SQL expressions (JVM, codegen) — the
-fast path. The ``py_*`` twins are the byte-identity oracles used in
-tests.
+Normalization, hashing and the analysis columns are SQL expressions
+(JVM, codegen); the ``py_*`` twins are their byte-identity oracles.
+Extraction and OCR-noise cleaning exist only as the ``py_*`` twins —
+the spec — which ``plans.pipeline.extract_stage`` runs in one
+mapInArrow pass (a compiled chain for ASCII pages, the twins otherwise).
 
 Note on regex engines: Python ``\\s`` is unicode-aware, Java's is
 ASCII by default. We pass (?U) to make Java's \\s unicode-aware so the
@@ -88,16 +90,6 @@ def py_clean_ocr_noise(text: str) -> str:
     text = _PY_RULE.sub("", text)
     text = _PY_BLANKS.sub("\n\n", text)
     return text
-
-
-def clean_ocr_noise_expr(col: Column | str) -> Column:
-    """SQL twin of py_clean_ocr_noise (4 chained regexp_replace)."""
-    c = F.col(col) if isinstance(col, str) else col
-    c = F.regexp_replace(c, r"[\x00-\x08\x0b\x0c\x0e-\x1f]", "")
-    c = F.regexp_replace(c, r"(.)\1{9,}", "$1$1$1")
-    c = F.regexp_replace(c, r"(?m)^[\s\-_=~.*#]{4,}$", "")
-    c = F.regexp_replace(c, r"\n{3,}", "\n\n")
-    return c
 
 
 # ---------------------------------------------------------------------------
@@ -181,26 +173,6 @@ def py_extract_normalize_batch(
                 norm[i] = nb.decode("ascii")
                 hsh[i] = hashlib.sha256(nb).hexdigest()
     return ext, norm, hsh
-
-
-def extract_text_expr(col: Column | str) -> Column:
-    """SQL twin of py_extract_text over a binary html column.
-
-    Stays entirely in the JVM (decode + chained regexp_replace) so the
-    extract stage never crosses into Python at scale.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    t = F.decode(c, "UTF-8")
-    t = F.regexp_replace(t, r"(?is)<(script|style|nav|header|footer|title)[^>]*>.*?</\1>", "")
-    t = F.regexp_replace(t, r"(?i)</(p|div|h[1-6]|li|tr)>", "\n")
-    t = F.regexp_replace(t, r"(?s)<[^>]+>", "")
-    for ent, ch in _ENTITIES:
-        t = F.replace(t, F.lit(ent), F.lit(ch))
-    t = F.regexp_replace(t, r"[ \t]+", " ")
-    t = F.regexp_replace(t, r" ?\n ?", "\n")
-    t = F.regexp_replace(t, r"\n{2,}", "\n\n")
-    # Python str.strip() strips \n too; JVM trim() is space-only
-    return F.regexp_replace(t, r"(?U)^\s+|\s+$", "")
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,5 @@
-"""Stage checkpoint store with committed snapshots + per-partition
-lineage — the Iceberg-commit stand-in for the sandbox.
+"""Stage checkpoint store with committed snapshots — the
+Iceberg-commit stand-in for the sandbox.
 
 Reference semantics being reproduced (not code): SQLite
 ``processing_state(file_hash, stage, result_path, completed_at)`` with
@@ -12,17 +12,22 @@ and then commits by atomically renaming a manifest json into place —
 readers only ever see fully-written snapshots (the Iceberg snapshot
 contract). On a real cluster this class is swapped for Iceberg tables
 (``df.writeTo(tbl).createOrReplace()``); the interface is kept
-deliberately narrow so only this module changes.
+deliberately narrow so only this module knows the on-disk layout.
 
-Lineage: every commit appends per-partition rows
-(stage, snapshot, partition_id, rows_out, bytes_out, wall_ts) to
-``<root>/_lineage/`` — the per-partition evidence the north rule
-requires for resumability audits — and records stage-level counters
-(docs_in, docs_out, pairs_emitted, plus shuffle_read_bytes /
+One record per commit: the manifest (``MANIFEST.json``, plus its line
+in ``MANIFEST.log``) alone says what a snapshot is — its data files
+(name, rows, bytes per file, read from the parquet footers and aligned
+with ``paths`` across an append chain), its schema, and stage-level
+counters (docs_in, docs_out, pairs_emitted, plus shuffle_read_bytes /
 shuffle_write_bytes / tasks / task_ms measured around the write action
-from the AppStatusStore executor totals) in the stage MANIFEST's ``counters``
-dict, read back via ``latest(stage)["counters"]`` /
-``stage_shuffle_write_mb``.
+from the AppStatusStore executor totals), read back via
+``latest(stage)["counters"]`` / ``stage_shuffle_write_mb``. ``read``
+loads exactly the listed files with the recorded schema, so it starts
+no Spark job and a stray file in a snapshot directory is never data.
+Per-partition lineage (stage, snapshot, partition_id, rows_out,
+approx_bytes, committed_at) is derived from the manifests by
+``lineage_rows`` — the per-partition evidence the north rule requires
+for resumability audits.
 """
 
 from __future__ import annotations
@@ -33,15 +38,10 @@ import os
 import time
 import uuid
 from pathlib import Path
+from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-LINEAGE_SCHEMA = (
-    "stage string, snapshot int, partition_id int, rows_out long, "
-    "approx_bytes long, committed_at double"
-)
-
+if TYPE_CHECKING:  # pyspark stays unimported: `main.py lineage` runs without it
+    from pyspark.sql import DataFrame, SparkSession
 
 _EXECUTOR_TOTALS = (
     ("shuffle_read_bytes", "totalShuffleRead"),
@@ -115,10 +115,7 @@ class StageStore:
         return self._stage_dir(stage) / "MANIFEST.json"
 
     def latest(self, stage: str) -> dict | None:
-        m = self._manifest(stage)
-        if not m.exists():
-            return None
-        return json.loads(m.read_text())
+        return manifest_head(self._stage_dir(stage))
 
     def has(self, stage: str) -> bool:
         return self.latest(stage) is not None
@@ -132,8 +129,8 @@ class StageStore:
         extra: dict | None = None,
         expected_parent: object = "_CAPTURE_",
     ) -> dict:
-        """Write df as the next snapshot of `stage`, atomically commit,
-        record per-partition lineage. ``extra`` keys are merged into
+        """Write df as the next snapshot of `stage` and atomically commit
+        its manifest. ``extra`` keys are merged into
         the manifest (e.g. ``for_extract_snapshot`` — the lineage
         pointer the incremental plan's freshness rule compares; an id
         comparison is immune to wall-clock steps between process
@@ -224,7 +221,7 @@ class StageStore:
                 f.write(json.dumps(dict(manifest, published_at=time.time())) + "\n")
 
     def _write_snapshot(self, stage: str, df: DataFrame, counters: dict | None) -> dict:
-        """Write snapshot files + lineage; return the manifest dict
+        """Write snapshot files; return the manifest dict
         WITHOUT publishing it (callers publish exactly once — append
         must never expose a delta-only intermediate manifest)."""
         # never reuse a snapshot id, even after invalidate(): old readers
@@ -269,50 +266,25 @@ class StageStore:
             # clamped in case an executor summary was replaced mid-window
             counters = dict(counters or {}, **{k: max(0, ex1[k] - ex0[k]) for k in ex1})
 
-        # per-partition lineage from parquet footers — driver-side
-        # metadata reads AND a driver-side pyarrow write: committing
-        # lineage must not cost a Spark job per stage (9 stages x
-        # ~0.5-1 s of job-scheduling floor is pure fixed cost that
-        # erodes scaling efficiency at every cluster size)
-        import pyarrow as pa
+        # the snapshot's file list from the parquet footers — driver-
+        # side metadata reads, no Spark job. From here on the manifest,
+        # not the directory, says which files the snapshot has.
         import pyarrow.parquet as pq
 
-        now = time.time()
-        lineage_rows = []
-        total_rows = 0
-        bytes_out = 0
-        files = sorted(p for p in out_dir.glob("*.parquet") if p.is_file())
-        for i, p in enumerate(files):
-            n = pq.ParquetFile(p).metadata.num_rows
-            sz = p.stat().st_size
-            total_rows += n
-            bytes_out += sz
-            lineage_rows.append((stage, snap_id, i, int(n), int(sz), now))
-        if not lineage_rows:
-            lineage_rows = [(stage, snap_id, -1, 0, 0, now)]
-        ldir = self.root / "_lineage"
-        ldir.mkdir(exist_ok=True)
-        cols = list(zip(*lineage_rows))
-        ltable = pa.table(
-            {
-                "stage": pa.array(cols[0], pa.string()),
-                "snapshot": pa.array(cols[1], pa.int32()),
-                "partition_id": pa.array(cols[2], pa.int32()),
-                "rows_out": pa.array(cols[3], pa.int64()),
-                "approx_bytes": pa.array(cols[4], pa.int64()),
-                "committed_at": pa.array(cols[5], pa.float64()),
-            }
-        )
-        pq.write_table(ltable, ldir / f"lineage-{uuid.uuid4().hex}.parquet")
-
+        files = [
+            {"name": f.name, "rows": pq.ParquetFile(f).metadata.num_rows, "bytes": f.stat().st_size}
+            for f in sorted(out_dir.glob("*.parquet"))
+        ]
         return {
             "stage": stage,
             "snapshot": snap_id,
             "path": str(out_dir),
-            "rows": int(total_rows),
-            "bytes": bytes_out,
+            "files": [files],  # one list per chain path: a chain appends to it
+            "schema": df.schema.json(),
+            "rows": sum(f["rows"] for f in files),
+            "bytes": sum(f["bytes"] for f in files),
             "counters": counters or {},
-            "committed_at": now,
+            "committed_at": time.time(),
         }
 
     def append(
@@ -323,9 +295,10 @@ class StageStore:
         extra: dict | None = None,
     ) -> dict:
         """Commit ``delta`` as an APPEND snapshot: the new manifest
-        carries the parent's data paths plus the delta's, and ``read``
-        returns their union — the Iceberg append-snapshot contract
-        (incremental ingest never rewrites committed data files).
+        carries the parent's data paths and file lists plus the
+        delta's, and ``read`` returns their union — the Iceberg
+        append-snapshot contract (incremental ingest never rewrites
+        committed data files).
         The chained manifest is published exactly once (atomically);
         falls back to a plain commit when the stage has no snapshot.
 
@@ -348,10 +321,10 @@ class StageStore:
                 self._publish(stage, m, expected_parent=m["snapshot"])
             return m
         m = self._write_snapshot(stage, delta, counters)
-        parent_paths = parent.get("paths", [parent["path"]])
         m = dict(
             m,
-            paths=parent_paths + [m["path"]],
+            paths=parent.get("paths", [parent["path"]]) + [m["path"]],
+            files=parent["files"] + m["files"],
             rows=parent["rows"] + m["rows"],
             bytes=parent["bytes"] + m["bytes"],
             delta_rows=m["rows"],
@@ -359,9 +332,9 @@ class StageStore:
         )
         if extra:
             m = dict(m, **extra)
-        assert m["paths"][-1] == m["path"] and m["paths"][:-1] == parent_paths, (
+        assert m["paths"][-1] == m["path"] and len(m["files"]) == len(m["paths"]), (
             "append manifest must list snapshot paths in commit order "
-            "with the in-flight delta last"
+            "with the in-flight delta last, one file list per path"
         )
         self._publish(stage, m, expected_parent=parent["snapshot"])
         return m
@@ -377,13 +350,13 @@ class StageStore:
             return m or {}
         # REFUSE compaction of ANY chained stage while an ingest is
         # incomplete: the append chains ARE the recovery structure —
-        # crash recovery treats each stage's LAST snapshot (m["path"])
-        # as the in-flight delta and parent_paths[:-1] as the old
-        # corpus view. Collapsing any of them mid-ingest turns the
-        # recovery delta into the whole corpus / the whole signature
-        # table (reproduced: compacting `signatures` mid-pending-ingest
-        # duplicated base-base pair evidence the same way the extract
-        # case did). Iceberg analog: maintenance actions run on a
+        # crash recovery treats each stage's LAST snapshot (read_part
+        # "delta") as the in-flight delta and the ones before it
+        # ("parents") as the old corpus view. Collapsing any of them
+        # mid-ingest turns the recovery delta into the whole corpus /
+        # the whole signature table (reproduced: compacting
+        # `signatures` mid-pending-ingest duplicated base-base pair
+        # evidence the same way the extract case did). Iceberg analog: maintenance actions run on a
         # consistent table. Detection is run_incremental's OWN
         # completion rule: `clusters` commits LAST, so clusters fresh
         # for the extract head == the whole ingest completed. Applies
@@ -518,25 +491,8 @@ class StageStore:
 
     def snapshots(self, stage: str) -> list[dict]:
         """Publish-ordered manifest history for a stage — Iceberg's
-        ``table.snapshots()`` / metadata-log analog. Tolerates a
-        torn final line (crash mid-append); if the live head was
-        published before the log existed (stores written by earlier
-        versions) it is folded in so the current state always appears."""
-        log = self._stage_dir(stage) / "MANIFEST.log"
-        out: list[dict] = []
-        if log.exists():
-            for line in log.read_text().splitlines():
-                try:
-                    out.append(json.loads(line))
-                except json.JSONDecodeError:
-                    continue  # torn tail from a crash mid-append
-        cur = self.latest(stage)
-        if cur is not None and not any(
-            e.get("snapshot") == cur["snapshot"] and e.get("path") == cur.get("path")
-            for e in out
-        ):
-            out.append(cur)
-        return out
+        ``table.snapshots()`` / metadata-log analog."""
+        return manifest_history(self._stage_dir(stage))
 
     def _manifest_as_of(self, stage: str, snapshot_id: int) -> dict:
         """LAST logged manifest whose head is ``snapshot_id`` (later
@@ -553,22 +509,18 @@ class StageStore:
 
     def rollback(self, stage: str, snapshot_id: int) -> dict:
         """Set the stage head back to a previously-published snapshot —
-        Iceberg's ``rollback_to_snapshot``. The historical manifest is
-        re-published (optimistically, against the current head), so
-        readers atomically flip to the old state; data files are never
-        touched. Refuses if any referenced snapshot dir was expired.
+        Iceberg's ``rollback_to_snapshot``. The historical manifest
+        (file lists and schema included) is re-published
+        (optimistically, against the current head), so readers
+        atomically flip to the old state; data files are never
+        touched. Refuses if any listed data file was expired.
         NOTE: rolling back ``extract`` on a pipeline store leaves
         downstream ``for_extract_snapshot`` pointers ahead of the new
         head — the next ingest's freshness rule then recomputes
         downstream from the rolled-back corpus, which is exactly the
         semantic a rollback asks for."""
         m = self._manifest_as_of(stage, snapshot_id)
-        missing = [p for p in m.get("paths", [m["path"]]) if not Path(p).is_dir()]
-        if missing:
-            raise FileNotFoundError(
-                f"stage '{stage}': cannot roll back to snapshot {snapshot_id} — "
-                f"expired/missing snapshot dirs: {missing}"
-            )
+        _check_files(m, zip(m.get("paths", [m["path"]]), m["files"]))
         cur = self.latest(stage)
         self._publish(stage, m, expected_parent=cur["snapshot"] if cur else None)
         return m
@@ -582,18 +534,43 @@ class StageStore:
         m = self._manifest_as_of(stage, as_of) if as_of is not None else self.latest(stage)
         if m is None:
             raise FileNotFoundError(f"no committed snapshot for stage '{stage}'")
-        paths = m.get("paths", [m["path"]])
-        if as_of is not None:
-            missing = [p for p in paths if not Path(p).is_dir()]
-            if missing:
-                raise FileNotFoundError(
-                    f"stage '{stage}': snapshot {as_of} was expired — missing "
-                    f"dirs: {missing}"
-                )
-        return spark.read.parquet(*paths)
+        return self._load(spark, m, slice(None))
+
+    def read_part(
+        self, spark: SparkSession, stage: str, part: str, manifest: dict | None = None
+    ) -> DataFrame:
+        """One part of the append chain of ``manifest`` (default: the
+        head): ``"delta"`` is its last snapshot, ``"parents"`` every
+        snapshot before it (0 rows, same schema, when unchained)."""
+        m = manifest or self.latest(stage)
+        if m is None:
+            raise FileNotFoundError(f"no committed snapshot for stage '{stage}'")
+        return self._load(spark, m, {"delta": slice(-1, None), "parents": slice(None, -1)}[part])
+
+    def _load(self, spark: SparkSession, m: dict, part: slice) -> DataFrame:
+        """The listed files of chain slice ``part`` with the recorded
+        schema: no inference, so no Spark job. Roots stay the snapshot
+        dirs (32+ file paths start a parallel listing job); a brace-list
+        ``pathGlobFilter`` of the listed names (Spark's unique
+        ``part-<n>-<uuid>`` names, no glob metacharacters) keeps out the
+        rest."""
+        from pyspark.sql.types import StructType
+
+        chain = list(zip(m.get("paths", [m["path"]]), m["files"]))[part]
+        chain = [(p, fs) for p, fs in chain if fs]
+        _check_files(m, chain)
+        reader = spark.read.schema(StructType.fromJson(json.loads(m["schema"])))
+        if chain:
+            names = ",".join(f["name"] for _, fs in chain for f in fs)
+            reader = reader.option("pathGlobFilter", "{" + names + "}")
+        return reader.parquet(*(p for p, _ in chain))
 
     def lineage(self, spark: SparkSession) -> DataFrame:
-        return spark.read.schema(LINEAGE_SCHEMA).parquet(str(self.root / "_lineage"))
+        return spark.createDataFrame(
+            lineage_rows(self.root),
+            "stage string, snapshot int, partition_id int, rows_out long, "
+            "approx_bytes long, committed_at double",
+        )
 
     def invalidate(self, stage: str) -> None:
         m = self._manifest(stage)
@@ -605,3 +582,70 @@ def resume_filter(inputs: DataFrame, done: DataFrame, key: str = "url") -> DataF
     """Anti-join resume: rows of `inputs` not yet in `done` — exactly
     state.get_unprocessed semantics (state.py:86-111) as one join."""
     return inputs.join(done.select(key).distinct(), key, "left_anti")
+
+
+def _check_files(m: dict, chain) -> None:
+    """Refuse a manifest whose listed files (``(path, files)`` pairs)
+    are gone — expired or lost: reading around them drops rows."""
+    listed = [f"{p}/{f['name']}" for p, fs in chain for f in fs]
+    missing = [f for f in listed if not os.path.isfile(f)]
+    if missing:
+        raise FileNotFoundError(
+            f"stage '{m['stage']}': snapshot {m['snapshot']} was expired "
+            f"or lost data files — missing: {missing}"
+        )
+
+
+def manifest_head(sdir: Path) -> dict | None:
+    """The published manifest of one stage directory, or None."""
+    head = sdir / "MANIFEST.json"
+    return json.loads(head.read_text()) if head.exists() else None
+
+
+def manifest_history(sdir: Path) -> list[dict]:
+    """Publish-ordered manifests of one stage directory: the lines of
+    its ``MANIFEST.log``. Tolerates a torn final line (crash
+    mid-append); if the live head was published before the log existed
+    (stores written by earlier versions) it is folded in so the current
+    state always appears."""
+    out: list[dict] = []
+    log = sdir / "MANIFEST.log"
+    if log.exists():
+        for line in log.read_text().splitlines():
+            try:
+                out.append(json.loads(line))
+            except json.JSONDecodeError:
+                continue  # torn tail from a crash mid-append
+    cur = manifest_head(sdir)
+    if cur is not None and not any(
+        e.get("snapshot") == cur["snapshot"] and e.get("path") == cur.get("path")
+        for e in out
+    ):
+        out.append(cur)
+    return out
+
+
+def lineage_rows(root: str | Path) -> list[tuple]:
+    """Per-partition lineage of a store: one (stage, snapshot,
+    partition_id, rows_out, approx_bytes, committed_at) row per data
+    file of every snapshot a stage published — partition_id -1 marks a
+    snapshot with no files. Derived from the manifests and
+    ``MANIFEST.log`` alone: json reads, no Spark, and nothing is
+    created (a mistyped root yields no rows)."""
+    rows: list[tuple] = []
+    root = Path(root)
+    for sdir in sorted(root.iterdir()) if root.is_dir() else ():
+        if sdir.name.startswith("_") or not sdir.is_dir():
+            continue
+        seen: set[int] = set()
+        for m in manifest_history(sdir):
+            if m["snapshot"] in seen:  # re-publishes of one head
+                continue
+            seen.add(m["snapshot"])
+            own = m["files"][-1]  # the snapshot's own files; the rest are its parents'
+            parts = enumerate(own) if own else [(-1, {"rows": 0, "bytes": 0})]
+            rows += [
+                (sdir.name, m["snapshot"], i, f["rows"], f["bytes"], m["committed_at"])
+                for i, f in parts
+            ]
+    return rows

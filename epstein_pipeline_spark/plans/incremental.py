@@ -222,8 +222,7 @@ def _run_incremental_impl(
         # the delta; old_* views must exclude it
         m_ex = prior_ex
         timings["extract"] = 0.0
-        parent_paths = m_ex.get("paths", [m_ex["path"]])[:-1]
-        old_docs = spark.read.parquet(*parent_paths) if parent_paths else old_docs.limit(0)
+        old_docs = store.read_part(spark, "extract", "parents", m_ex)
     else:
         if not _fresh("clusters", prior_ex["snapshot"]):
             # a PREVIOUS ingest never completed; its docs are already
@@ -242,7 +241,7 @@ def _run_incremental_impl(
     ref_snap = m_ex["snapshot"]
     stamp = {"for_extract_snapshot": ref_snap}
     docs_all = store.read(spark, "extract")
-    docs_delta = spark.read.parquet(m_ex["path"])  # just the committed delta
+    docs_delta = store.read_part(spark, "extract", "delta", m_ex)  # just the committed delta
 
     # BROADCAST GATE: every delta-derived key set below (band keys,
     # content hashes, touched urls / cluster ids / relabel map) is
@@ -265,23 +264,17 @@ def _run_incremental_impl(
         m = store.latest(stage)
         if m is not None and m.get("for_extract_snapshot") == ref_snap:
             timings[stage] = 0.0
-            return spark.read.parquet(m["path"])
-        df = build()
-        t0 = time.time()
-        m = store.append(stage, df, extra=stamp)
-        timings[stage] = time.time() - t0
-        return spark.read.parquet(m["path"])
+        else:
+            df = build()
+            t0 = time.time()
+            m = store.append(stage, df, extra=stamp)
+            timings[stage] = time.time() - t0
+        return store.read_part(spark, stage, "delta", m)
 
     # 2. delta signatures (old view excludes this delta's snapshot if
     # a crashed run already appended it)
     sigs_delta = appended("signatures", lambda: _delta_signatures(docs_delta, cfg))
-    m_sig = store.latest("signatures")
-    sig_paths = m_sig.get("paths", [m_sig["path"]])
-    old_sigs = (
-        spark.read.parquet(*sig_paths[:-1])
-        if len(sig_paths) > 1
-        else store.read(spark, "signatures").limit(0)
-    )
+    old_sigs = store.read_part(spark, "signatures", "parents")
     sigs_all = store.read(spark, "signatures")
 
     # shared band projections (used by the prep block below and the

@@ -27,12 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from epstein_pipeline_spark.config import DEFAULT_CONFIG, DedupConfig
-from epstein_pipeline_spark.functions.text import (
-    clean_ocr_noise_expr,
-    content_hash_expr,
-    extract_text_expr,
-    normalize_text_expr,
-)
+from epstein_pipeline_spark.functions.text import content_hash_expr, normalize_text_expr
 from epstein_pipeline_spark.operators.cc import connected_components
 from epstein_pipeline_spark.operators.clusters import build_clusters
 from epstein_pipeline_spark.operators.exact import exact_pairs
@@ -69,9 +64,9 @@ def _extract_batches(batches):
     normalize chain + sha256 via ``py_extract_normalize_batch`` — a
     compiled byte-automaton chain for pure-ASCII docs (byte-identical
     to the ``py_*`` re twins, which remain the spec and the fallback;
-    the per-url invariant test pins expr == twin on whole corpora).
-    Python's ``re`` engine already ran this chain ~2x faster than the
-    JVM ``regexp_replace`` cascade (0.33 vs 0.71 ms/doc); the compiled
+    the per-url invariant test pins stage == twin on whole corpora).
+    Python's ``re`` engine ran this chain ~2x faster than a JVM
+    ``regexp_replace`` cascade (0.33 vs 0.71 ms/doc); the compiled
     chain is another ~4x on the bench corpus (0.096 ms/doc)."""
     import pyarrow as pa
 
@@ -96,9 +91,10 @@ def extract_stage(pages: DataFrame) -> DataFrame:
     """html binary -> extracted_text, normalized text, content hash —
     one Arrow pass over (url, warc_ts, lang, html) only (explicit
     projection: an opaque map defeats column pruning otherwise). The
-    extracted text is the byte-identical-per-url invariant checked
-    against the JVM ``extract_text_expr`` twin in tests; either path
-    is the spec, this one is the measured-faster implementation."""
+    single extract path of the engine — batch, incremental and
+    streaming ingest all call it; its output is pinned in tests to the
+    ``py_*`` re twins (``py_extract_text`` -> ``py_clean_ocr_noise``
+    -> ``py_normalize_text`` -> sha256), which are the spec."""
     return pages.select("url", "warc_ts", "lang", "html").mapInArrow(
         _extract_batches, schema=_EXTRACT_SCHEMA
     )

@@ -16,11 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
-from epstein_pipeline_spark.functions.text import (
-    clean_ocr_noise_expr,
-    content_hash_expr,
-    extract_text_expr,
-)
+from epstein_pipeline_spark.plans.pipeline import _EXTRACT_SCHEMA, extract_stage
 from epstein_pipeline_spark.sources.io import PAGES_SCHEMA
 
 
@@ -36,16 +32,10 @@ def incremental_dedup_ingest(
     Returns the StreamingQuery; callers drive it with
     processAllAvailable() in tests or leave it running in production.
     """
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
-    # hash key = content_hash(normalize(clean_ocr_noise(extract))) —
-    # byte-identical to the batch pipeline's extract_stage key so the
-    # two ingest paths agree on what "duplicate content" means
-    extracted = stream.select(
-        "url",
-        "warc_ts",
-        "lang",
-        clean_ocr_noise_expr(extract_text_expr("html")).alias("text"),
-    ).withColumn("content_hash", content_hash_expr("text"))
+    # the batch pipeline's own extract_stage (mapInArrow runs on
+    # streaming frames too): one content_hash definition, so the two
+    # ingest paths agree on what "duplicate content" means
+    extracted = extract_stage(spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir))
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
         # idempotent sink: each micro-batch OVERWRITES its own
@@ -115,15 +105,7 @@ def stateful_dedup_stream(
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
-    hashed = stream.select(
-        "url",
-        "warc_ts",
-        "lang",
-        clean_ocr_noise_expr(extract_text_expr("html")).alias("text"),
-    ).withColumn("content_hash", content_hash_expr("text"))
-
-    out_schema = "url string, warc_ts timestamp, lang string, text string, content_hash string"
+    hashed = extract_stage(spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir))
 
     def dedup_group(key, pdfs, state: GroupState):
         if state.hasTimedOut:
@@ -158,7 +140,7 @@ def stateful_dedup_stream(
     )
     deduped = hashed.groupBy("content_hash").applyInPandasWithState(
         dedup_group,
-        outputStructType=out_schema,
+        outputStructType=_EXTRACT_SCHEMA,
         stateStructType="seen boolean",
         outputMode="append",
         timeoutConf=timeout_conf,

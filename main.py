@@ -290,30 +290,15 @@ def cmd_snapshots(args) -> None:
     """Print a stage's publish-ordered snapshot history from the
     metadata log (Iceberg `table.snapshots()` analog) — pyspark-free
     read-only path like `lineage`."""
-    import os
+    from pathlib import Path
 
-    sdir = os.path.join(args.store, args.stage)
-    if not os.path.isdir(sdir):
+    from epstein_pipeline_spark.plans.checkpoint import manifest_head, manifest_history
+
+    sdir = Path(args.store, args.stage)
+    if not sdir.is_dir():
         raise SystemExit(f"snapshots: no such store stage directory: {sdir}")
-    hist = []
-    log = os.path.join(sdir, "MANIFEST.log")
-    if os.path.isfile(log):
-        with open(log) as f:
-            for line in f:
-                try:
-                    hist.append(json.loads(line))
-                except json.JSONDecodeError:
-                    continue  # torn tail from a crash mid-append
-    cur = None
-    mpath = os.path.join(sdir, "MANIFEST.json")
-    if os.path.isfile(mpath):
-        with open(mpath) as f:
-            cur = json.load(f)
-    if cur is not None and not any(
-        e.get("snapshot") == cur["snapshot"] and e.get("path") == cur.get("path")
-        for e in hist
-    ):
-        hist.append(cur)  # pre-log store: fold the live head in
+    hist = manifest_history(sdir)
+    cur = manifest_head(sdir)
     print(
         json.dumps(
             {
@@ -352,34 +337,26 @@ def cmd_lineage(args) -> None:
     """Audit a store without writing Spark code: per-stage manifest
     summary (snapshot id, rows, bytes, counters incl. shuffle bytes
     and the tasks / task_ms the commit's write ran, append-chain
-    length) plus per-partition lineage row counts from
-    the _lineage parquet — the north-rule resumability evidence,
-    surfaced at the CLI. Reads MANIFEST.json + parquet footers
-    directly (json/pyarrow only — genuinely no pyspark import, and
-    a READ-ONLY path: constructing StageStore would mkdir a mistyped
-    --store and mask the error as an empty audit)."""
-    import os
-    from collections import defaultdict
+    length) plus per-partition row counts per snapshot — the
+    north-rule resumability evidence, surfaced at the CLI. Everything
+    comes from the manifests and their MANIFEST.log
+    (``checkpoint.lineage_rows``): json reads only, no SparkSession,
+    and a READ-ONLY path — constructing StageStore would mkdir a
+    mistyped --store and mask the error as an empty audit."""
+    from pathlib import Path
 
-    import pyarrow.parquet as pq
+    from epstein_pipeline_spark.plans.checkpoint import lineage_rows, manifest_head
 
-    if not os.path.isdir(args.store):
+    root = Path(args.store)
+    if not root.is_dir():
         raise SystemExit(f"lineage: no such store directory: {args.store}")
-
-    def manifest(stage: str) -> dict | None:
-        p = os.path.join(args.store, stage, "MANIFEST.json")
-        if not os.path.isfile(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
-
     stages = args.stages.split(",") if args.stages else sorted(
-        d for d in os.listdir(args.store)
-        if not d.startswith("_") and manifest(d) is not None
+        d.name for d in root.iterdir()
+        if not d.name.startswith("_") and manifest_head(d) is not None
     )
     out = {}
     for st in stages:
-        m = manifest(st)
+        m = manifest_head(root / st)
         if m is None:  # named explicitly but never committed
             out[st] = {"committed": False}
             continue
@@ -390,29 +367,14 @@ def cmd_lineage(args) -> None:
             "snapshots_in_chain": len(m.get("paths", [m["path"]])),
             "counters": m.get("counters", {}),
         }
-    # per-partition lineage rollup: partitions + rows_out per (stage,
-    # snapshot) — the per-partition rows the north rule requires.
-    # partition_id -1 is the empty-snapshot sentinel, not a partition.
-    lin_dir = os.path.join(args.store, "_lineage")
-    parts: dict = defaultdict(lambda: {"partitions": 0, "rows_out": 0})
-    if os.path.isdir(lin_dir):
-        for f in sorted(os.listdir(lin_dir)):
-            if not f.endswith(".parquet"):
-                continue
-            t = pq.read_table(os.path.join(lin_dir, f))
-            for stage, snap, pid, rows in zip(
-                t["stage"].to_pylist(), t["snapshot"].to_pylist(),
-                t["partition_id"].to_pylist(), t["rows_out"].to_pylist(),
-            ):
-                k = f"{stage}/snapshot-{snap}"
-                if pid >= 0:
-                    parts[k]["partitions"] += 1
-                parts[k]["rows_out"] += rows
-    # numeric snapshot order (lexicographic would put 10 before 2)
-    ordered = sorted(parts.items(), key=lambda kv: (
-        kv[0].rsplit("/snapshot-", 1)[0], int(kv[0].rsplit("-", 1)[1])
-    ))
-    print(json.dumps({"stages": out, "lineage": dict(ordered)}))
+    # partitions + rows_out per (stage, snapshot), in stage then
+    # snapshot order; partition_id -1 marks an empty snapshot
+    lineage: dict = {}
+    for stage, snap, pid, rows, _, _ in sorted(lineage_rows(args.store), key=lambda r: r[:3]):
+        k = lineage.setdefault(f"{stage}/snapshot-{snap}", {"partitions": 0, "rows_out": 0})
+        k["partitions"] += int(pid >= 0)
+        k["rows_out"] += rows
+    print(json.dumps({"stages": out, "lineage": lineage}))
 
 
 def cmd_export(args) -> None:

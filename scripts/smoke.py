@@ -22,18 +22,18 @@ print("corpus:", corpus.stats)
 
 pages = pages_to_spark(spark, corpus, partitions=16)
 
-# extraction byte-identity check (sample)
+# extraction byte-identity check (sample): extract stage vs its spec
 sample = pages.limit(2000).collect()
-from epstein_pipeline_spark.functions.text import extract_text_expr
-ext = pages.select("url", extract_text_expr("html").alias("ext")).collect()
+from epstein_pipeline_spark.plans.pipeline import extract_stage
+ext = extract_stage(pages).select("url", F.col("extracted_text").alias("ext")).collect()
 py = {r["url"]: py_extract_text(bytes(r["html"])) for r in sample}
 mism = [r["url"] for r in ext if r["url"] in py and py[r["url"]] != r["ext"]]
 print("extraction mismatches:", len(mism), mism[:3])
 if mism:
     u = mism[0]
     got = [r["ext"] for r in ext if r["url"] == u][0]
-    print("PY :", repr(py[u][:300]))
-    print("JVM:", repr(got[:300]))
+    print("PY   :", repr(py[u][:300]))
+    print("STAGE:", repr(got[:300]))
 
 with tempfile.TemporaryDirectory() as tmp:
     store = StageStore(tmp)

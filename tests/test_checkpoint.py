@@ -1,9 +1,12 @@
 """StageStore: atomic snapshot commits, lineage rows, anti-join resume
 (reference state.py:15-111 semantics)."""
 
+import shutil
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
-from epstein_pipeline_spark.plans.checkpoint import StageStore, resume_filter
+from epstein_pipeline_spark.plans.checkpoint import StageStore, lineage_rows, resume_filter
 
 
 def test_commit_read_roundtrip(spark, tmp_path):
@@ -294,3 +297,68 @@ def test_snapshots_pre_log_store_folds_in_head(spark, tmp_path):
     snaps = store.snapshots("t")
     assert [e["snapshot"] for e in snaps] == [m["snapshot"]]
     assert store.read(spark, "t", as_of=m["snapshot"]).count() == 7
+
+
+def test_read_ignores_unlisted_files(spark, tmp_path):
+    """read loads the files the manifest lists, not whatever sits in a
+    snapshot directory: a stray parquet file planted in a published
+    snapshot (a late task attempt, a copy) is never data — neither for
+    the head nor for time travel."""
+    store = StageStore(tmp_path)
+    m0 = store.commit("s", spark.range(0, 40, 1, numPartitions=4))
+    store.append("s", spark.range(40, 50))
+    snap = Path(m0["path"])
+    shutil.copy(next(snap.glob("part-*.parquet")), snap / "part-99999-stray.parquet")
+    assert store.read(spark, "s").count() == 50
+    assert store.read(spark, "s", as_of=m0["snapshot"]).count() == 40
+
+
+def test_read_refuses_missing_listed_file(spark, tmp_path):
+    """A listed data file that is gone fails the read (and a rollback
+    to its snapshot) instead of silently dropping its rows."""
+    import pytest
+
+    store = StageStore(tmp_path)
+    m0 = store.commit("s", spark.range(0, 40, 1, numPartitions=4))
+    store.commit("s", spark.range(3))
+    (Path(m0["path"]) / m0["files"][0][0]["name"]).unlink()
+    with pytest.raises(FileNotFoundError, match="missing"):
+        store.read(spark, "s", as_of=m0["snapshot"])
+    with pytest.raises(FileNotFoundError, match="missing"):
+        store.rollback("s", m0["snapshot"])
+    assert store.read(spark, "s").count() == 3
+
+
+def test_empty_commit_reads_back_with_schema(spark, tmp_path):
+    """An empty commit reads back as 0 rows with its schema, and so
+    does the (empty) parent part of an unchained stage."""
+    store = StageStore(tmp_path)
+    store.commit("e", spark.range(10).selectExpr("id AS url", "'x' AS t").limit(0))
+    back = store.read(spark, "e")
+    assert back.count() == 0 and back.columns == ["url", "t"]
+    assert back.schema == spark.read.parquet(store.latest("e")["path"]).schema
+    parents = store.read_part(spark, "e", "parents")
+    assert parents.count() == 0 and parents.schema == back.schema
+
+
+def test_read_part_splits_the_chain(spark, tmp_path):
+    """read_part: "delta" is the last appended snapshot, "parents"
+    everything before it."""
+    store = StageStore(tmp_path)
+    store.commit("t", spark.range(10))
+    store.append("t", spark.range(10, 13))
+    assert sorted(r.id for r in store.read_part(spark, "t", "delta").collect()) == [10, 11, 12]
+    assert store.read_part(spark, "t", "parents").count() == 10
+
+
+def test_lineage_from_manifests_only(spark, tmp_path):
+    """Per-partition lineage comes from the manifests: one row per
+    data file of each published snapshot, no _lineage directory, and
+    a missing root yields no rows without being created."""
+    store = StageStore(tmp_path)
+    store.commit("s", spark.range(0, 30, 1, numPartitions=3))
+    store.append("s", spark.range(0, 5, 1, numPartitions=1))
+    rows = lineage_rows(tmp_path)
+    assert [(r[1], r[2], r[3]) for r in rows] == [(0, 0, 10), (0, 1, 10), (0, 2, 10), (1, 0, 5)]
+    assert not (tmp_path / "_lineage").exists()
+    assert lineage_rows(tmp_path / "nope") == [] and not (tmp_path / "nope").exists()

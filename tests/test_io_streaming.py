@@ -222,3 +222,30 @@ def test_jdbc_sink_roundtrip(spark, tmp_path):
     # mode=append: a second write adds rows (the JDBC sink contract)
     write_jdbc(df.limit(3), url, "docs", batch_size=100, **opts)
     assert back.count() == 260
+
+
+def test_streaming_hash_matches_batch_extract(spark, tmp_path):
+    """The streaming dedup key is the batch extract_stage key, also on
+    pages where Java and Python regexes disagree: a rule line of
+    U+00A0 spaces and dashes (Java's \\s is ASCII-only) and a
+    ``<ſcript>`` block (Python's (?i) folds ſ to s)."""
+    import datetime
+
+    from epstein_pipeline_spark.plans.pipeline import extract_stage
+    from epstein_pipeline_spark.sources.io import PAGES_SCHEMA
+
+    htmls = [
+        "<p>intro line</p>\n\u00a0\u00a0----\u00a0\u00a0\n<p>body text</p>",
+        "<p>kept text</p><ſcript>dropped text</ſcript>",
+    ]
+    ts = datetime.datetime(2024, 1, 1)
+    pages = spark.createDataFrame(
+        [(f"https://x/{i}", ts, h.encode(), None, "en") for i, h in enumerate(htmls)],
+        PAGES_SCHEMA,
+    )
+    indir, outdir, ckpt = (tmp_path / d for d in ("in", "out", "ckpt"))
+    pages.write.parquet(str(indir))
+    incremental_dedup_ingest(spark, str(indir), str(outdir), str(ckpt)).awaitTermination(120)
+    streamed = {r["url"]: r["content_hash"] for r in spark.read.parquet(str(outdir)).collect()}
+    batch = {r["url"]: r["content_hash"] for r in extract_stage(pages).collect()}
+    assert streamed == batch and len(batch) == 2

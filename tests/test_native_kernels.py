@@ -64,6 +64,27 @@ def test_build_dir_keyed_by_host_type():
     assert base != _native._build_dir("x86_64", "fpu sse2 avx2 avx512f")
 
 
+def test_failed_build_warns_once_and_falls_back(monkeypatch, tmp_path):
+    """A failed compile is not silent: one RuntimeWarning naming the
+    cause, then ``None`` (the numpy fallback), and no retry. monkeypatch
+    restores the cached handle and the build hooks afterwards."""
+    import subprocess
+
+    import pytest
+
+    def no_compiler(cmd, **kw):
+        raise subprocess.CalledProcessError(1, cmd, stderr=b"gcc: fatal error: no input")
+
+    monkeypatch.setattr(_native, "_TRIED", False)
+    monkeypatch.setattr(_native, "_LIB", None)
+    monkeypatch.setattr(_native, "_build_dir", lambda machine, flags: tmp_path / "build")
+    monkeypatch.setattr(_native.subprocess, "run", no_compiler)
+    with pytest.warns(RuntimeWarning, match="gcc: fatal error") as rec:
+        assert _native.get_lib() is None
+        assert _native.get_lib() is None  # cached: no second attempt, no second warning
+    assert len(rec) == 1
+
+
 def test_minhash_native_matches_numpy_edges():
     if _native.get_lib() is None:
         return

@@ -1,6 +1,8 @@
 """End-to-end pipeline: recall >= 0.99 vs planted truth, zero false
 positives, union-find label parity, kill/rerun resume."""
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -114,3 +116,42 @@ def test_signatures_stage_runs_one_python_wave(spark, result):
     par = spark.sparkContext.defaultParallelism
     tasks = store.latest("signatures")["counters"]["tasks"]
     assert 1 <= tasks <= 2 * par
+
+
+STAGES = [
+    "extract", "pairs_exact", "signatures", "minhash_candidates",
+    "minhash_scored", "pairs_simhash", "pairs_lcs", "pairs", "labels", "clusters",
+]
+
+
+def test_store_reads_start_no_spark_job(spark, result):
+    """Every stage of a run reads back from its manifest: the recorded
+    schema equals what a plain parquet read of the snapshot infers,
+    and the read itself starts no Spark job (no schema inference)."""
+    _, store = result
+    sc = spark.sparkContext
+    for stage in STAGES:
+        group = f"store-read-{stage}"
+        sc.setJobGroup(group, group)
+        try:
+            df = store.read(spark, stage)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], stage
+        assert df.schema == spark.read.parquet(store.latest(stage)["path"]).schema, stage
+
+
+def test_one_record_per_commit(result):
+    """A run leaves no _lineage/ directory: each stage directory holds
+    its snapshots, MANIFEST.json, MANIFEST.log (one line per publish)
+    and the publish lock — nothing else."""
+    _, store = result
+    assert not (store.root / "_lineage").exists()
+    assert {p.name for p in store.root.iterdir()} == set(STAGES)
+    for stage in STAGES:
+        sdir = store.root / stage
+        other = {p.name for p in sdir.iterdir() if not p.name.startswith("snapshot-")}
+        assert other == {"MANIFEST.json", "MANIFEST.log", ".MANIFEST.lock"}, stage
+        logged = [json.loads(x) for x in (sdir / "MANIFEST.log").read_text().splitlines()]
+        assert logged and all("files" in e and "schema" in e for e in logged), stage

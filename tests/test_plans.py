@@ -72,16 +72,16 @@ def test_exact_path_is_jvm_only(spark, pages):
 
 def test_extract_stage_arrow_pass_and_parity(spark, pages):
     """Round-6 change: extract runs as ONE MapInArrow pass over an
-    explicit (url, warc_ts, lang, html) projection — Python's regex
-    engine measures ~2x the JVM regexp_replace cascade on this chain,
-    and the twins are byte-identical (pinned here against the JVM
-    exprs on the whole fixture corpus, and independently by
-    test_text.test_extraction_byte_identical)."""
+    explicit (url, warc_ts, lang, html) projection, and its output is
+    byte-identical to the spec — the ``py_*`` re twins chained
+    extract -> clean -> normalize -> sha256 — on the whole fixture
+    corpus."""
+    import hashlib
+
     from epstein_pipeline_spark.functions.text import (
-        clean_ocr_noise_expr,
-        content_hash_expr,
-        extract_text_expr,
-        normalize_text_expr,
+        py_clean_ocr_noise,
+        py_extract_text,
+        py_normalize_text,
     )
     from epstein_pipeline_spark.plans.pipeline import extract_stage
 
@@ -90,20 +90,16 @@ def test_extract_stage_arrow_pass_and_parity(spark, pages):
     # exactly one Python crossing (the node renders once in the tree
     # and once in the details section of a formatted plan)
     assert p.count("MapInArrow") <= 2 and "MapInArrow" in p
-    jvm = pages.select(
-        "url",
-        extract_text_expr("html").alias("extracted_text"),
-    ).select(
-        "url",
-        "extracted_text",
-        normalize_text_expr(clean_ocr_noise_expr("extracted_text")).alias("text"),
-    ).withColumn("content_hash", content_hash_expr("text"))
     got = {r["url"]: r for r in out.collect()}
-    for r in jvm.collect():
+    rows = pages.select("url", "html").collect()
+    assert len(got) == len(rows)
+    for r in rows:
+        ext = py_extract_text(bytes(r["html"]))
+        text = py_normalize_text(py_clean_ocr_noise(ext))
         g = got[r["url"]]
-        assert g["extracted_text"] == r["extracted_text"]
-        assert g["text"] == r["text"]
-        assert g["content_hash"] == r["content_hash"]
+        assert g["extracted_text"] == ext
+        assert g["text"] == text
+        assert g["content_hash"] == hashlib.sha256(text.encode("utf-8")).hexdigest()
 
 
 def test_band_candidates_single_shuffle(spark, pages):

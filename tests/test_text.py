@@ -9,14 +9,10 @@ from pyspark.sql import functions as F
 from epstein_pipeline_spark.functions.text import (
     bpe_ish_token_count_expr,
     char_shingles,
-    clean_ocr_noise_expr,
     content_hash_expr,
-    extract_text_expr,
     lang_id_expr,
     normalize_text_expr,
-    py_clean_ocr_noise,
     py_content_hash,
-    py_extract_text,
     py_normalize_text,
     quality_score_expr,
     token_count_expr,
@@ -53,37 +49,17 @@ def test_content_hash_matches_reference(spark):
     assert py_content_hash("Hello   World") == hashlib.sha256(b"hello world").hexdigest()
 
 
-def test_clean_ocr_noise_matches(spark):
-    cases = [
-        "normal text",
-        "rrrrrrrrrrrrrrrun",  # 10+ repeats -> 3
-        "line\n----------\nnext",  # decorative rule dropped
-        "ctrl\x07chars\x1fgone",
-        "a\n\n\n\n\nb",
-    ]
-    got = _run_pairs(spark, clean_ocr_noise_expr, cases)
-    want = [py_clean_ocr_noise(c) for c in cases]
-    assert got == want
-
-
-def test_extraction_byte_identical(spark, pages):
-    rows = pages.select("url", "html", extract_text_expr("html").alias("ext")).collect()
-    mismatches = [r["url"] for r in rows if py_extract_text(bytes(r["html"])) != r["ext"]]
-    assert mismatches == []
-
-
 def test_extraction_reproduces_source_text_normalized(spark, pages):
     """Extracted text, normalized, must equal the generator's ground-
-    truth text, normalized — the per-url invariant."""
+    truth text, normalized — the per-url invariant, checked on the
+    extract stage's output."""
     from epstein_pipeline_spark.functions.text import normalize_text_expr as N
+    from epstein_pipeline_spark.plans.pipeline import extract_stage
 
     bad = (
-        pages.select(
-            "url",
-            N(extract_text_expr("html")).alias("a"),
-            N(F.col("text")).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
+        extract_stage(pages)
+        .join(pages.select("url", N(F.col("text")).alias("b")), "url")
+        .filter(N("extracted_text") != F.col("b"))
         .count()
     )
     assert bad == 0
