@@ -36,7 +36,12 @@ from pathlib import Path
 
 import numpy as np
 
-_C_SRC = r"""
+# Largest dedup table minhash_batch allocates, in 8-byte slots (8 MB):
+# a doc needing more (over 2^19 shingles) takes the no-dedup path,
+# which is bit-exact too, so one huge doc never sizes a worker's heap.
+MINHASH_SET_MAX_SLOTS = 1 << 20
+
+_C_SRC = f"#define MINHASH_SET_MAX_SLOTS {MINHASH_SET_MAX_SLOTS}ULL\n" + r"""
 #include <stdint.h>
 
 static const uint64_t M61 = (((uint64_t)1) << 61) - 1;
@@ -71,6 +76,8 @@ static inline uint64_t fold61(uint64_t y) {
      so this halves the dominant mul-fold loop. The open-addressing
      probe keys on x itself (already murmur-mixed); UINT64_MAX marks
      empty (x = fold61(..) < 2^61 can never collide with it).
+     A doc whose table would exceed MINHASH_SET_MAX_SLOTS skips the
+     dedup (dset == NULL): the same signature, by the same argument.
    - n < k: one shingle of the whole text (numpy: k = n).
    - n == 0: every slot = empty_slot. */
 #include <stdlib.h>
@@ -92,13 +99,17 @@ void minhash_batch(const uint8_t* data, const int64_t* offs, int64_t n_docs,
         int64_t n_sh = n - kk + 1;
         uint64_t want = 64;
         while ((int64_t)want < 2 * n_sh) want <<= 1;
-        if (want > set_cap) {
-            free(set);
-            set = (uint64_t*)malloc(want * sizeof(uint64_t));
-            set_cap = set ? want : 0;
+        uint64_t* dset = 0;  /* this doc's dedup table; NULL: no dedup */
+        if (want <= MINHASH_SET_MAX_SLOTS) {
+            if (want > set_cap) {
+                free(set);
+                set = (uint64_t*)malloc(want * sizeof(uint64_t));
+                set_cap = set ? want : 0;
+            }
+            dset = set;
         }
         uint64_t mask = want - 1;
-        if (set) memset(set, 0xff, want * sizeof(uint64_t));
+        if (dset) memset(dset, 0xff, want * sizeof(uint64_t));
         uint64_t top = 1;  /* BASE^(kk-1) mod 2^64 */
         for (int64_t j = 0; j < kk - 1; j++) top *= BASE;
         for (int64_t j = 0; j < num_perm; j++) o[j] = UINT64_MAX;
@@ -109,11 +120,11 @@ void minhash_batch(const uint8_t* data, const int64_t* offs, int64_t n_docs,
             x ^= x >> 33; x *= 0xFF51AFD7ED558CCDULL; x ^= x >> 33;
             x = fold61(x);
             int fresh = 1;
-            if (set) {
+            if (dset) {
                 uint64_t slot = x & mask;
                 for (;;) {
-                    uint64_t v = set[slot];
-                    if (v == UINT64_MAX) { set[slot] = x; break; }
+                    uint64_t v = dset[slot];
+                    if (v == UINT64_MAX) { dset[slot] = x; break; }
                     if (v == x) { fresh = 0; break; }
                     slot = (slot + 1) & mask;
                 }

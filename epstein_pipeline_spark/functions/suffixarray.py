@@ -15,8 +15,9 @@ parity-tested backend:
      different strings in the SA of s1 + SEP + s2 (SEP = a sentinel
      below every byte, so no common substring can span it).
 
-Both kernels are exposed through ``lcs_verify(kernel=...)``; the
-hypothesis suite pins them to each other and to the O(n*m) DP.
+The pipeline's verify pass runs the rolling-hash kernel; this one is
+its spec twin: the hypothesis suite pins the two to each other and to
+the O(n*m) DP.
 """
 
 from __future__ import annotations

@@ -1,32 +1,27 @@
-"""Within-cluster longest-common-substring verification (north_rule
-stage 3).
+"""Longest-common-substring kernels (north_rule stage 3).
 
 The reference's analog is the semantic verify pass + the 80%
 word-overlap gate in temporal dedup (processors/temporal_extractor.py:
 305-310); the north rule asks for substring-level verification of
-candidate pairs so false merges (e.g. shared boilerplate with distinct
-bodies) are dropped before the final connected-components round.
+candidate pairs so boilerplate-wrapped duplicates (site chrome
+depresses shingle Jaccard while the body is one giant common
+substring) can be rescued from the Jaccard gray zone.
 
-Semantics: keep a candidate edge iff
+Semantics: a gray-zone pair is rescued iff
     LCS(text1, text2) >= lcs_min_ratio * min(len(text1), len(text2))
+over the first ``lcs_max_chars`` characters, lengths in UTF-8 bytes
+(``py_lcs_ratio``). The verify operator (operators/verify.py) calls it
+in the same Python pass as the exact Jaccard.
 
 Implementation: suffix-array-free O((n+m) log min(n,m)) LCS via binary
 search over the answer length with numpy rolling-hash substring sets —
-equivalent result to the suffix-array LCP scan, but fully vectorized
-per pair and dependency-free. Runs as ``mapInPandas`` over the
-pair+texts DataFrame (Arrow batches, no per-row Python UDF).
+the same result as the suffix-array LCP scan (functions/suffixarray.py)
+and the O(n*m) DP, pinned to both in tests.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from epstein_pipeline_spark.config import DedupConfig
 
 _B = np.uint64(1_000_003)
 
@@ -109,104 +104,19 @@ def py_lcs_length(s1: str, s2: str) -> int:
     return lo
 
 
-def lcs_verify(
-    pairs: DataFrame,
-    docs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "url",
-    text_col: str = "text",
-    kernel: str = "rolling_hash",
-) -> DataFrame:
-    """Filter candidate pairs by the LCS ratio; adds lcs_ratio column.
+def py_lcs_ratio(t1: str | None, t2: str | None, max_chars: int) -> float:
+    """LCS(t1[:max_chars], t2[:max_chars]) / min of their UTF-8 byte
+    lengths; 1.0 when either truncated text is empty or null.
 
-    Exact-method pairs skip the check (identical normalized content).
-    Texts are truncated to cfg.lcs_max_chars for bounded per-pair cost.
-
-    ``kernel``: 'rolling_hash' (default, vectorized binary search) or
-    'suffix_array' (the literal north-rule form, functions/
-    suffixarray.py) — parity-pinned to each other and to the DP oracle
-    in tests; both run inside the same mapInPandas, so the plan is
-    identical either way.
-    """
-    if kernel == "rolling_hash":
-        lcs_fn = py_lcs_length
-    elif kernel == "suffix_array":
-        from epstein_pipeline_spark.functions.suffixarray import py_lcs_suffix_array
-
-        lcs_fn = py_lcs_suffix_array
-    else:
-        raise ValueError(f"kernel must be 'rolling_hash' or 'suffix_array', got {kernel!r}")
-    t = docs.select(
-        F.col(id_col).alias("url"), F.substring(F.col(text_col), 1, cfg.lcs_max_chars).alias("_t")
-    )
-    # semi-join the text table down to urls in the gray-zone pair set
-    # before the attach joins (same shape as exact_jaccard_pairs: the
-    # pair set is a sliver of the corpus; without the prefilter both
-    # joins shuffle the full truncated-text table). AQE broadcasts
-    # the tiny distinct-url aggregate when it fits.
-    urls = (
-        pairs.select(F.col("url1").alias("url"))
-        .unionByName(pairs.select(F.col("url2").alias("url")))
-        .distinct()
-    )
-    t = t.join(urls, "url", "left_semi")
-    # explicit round-robin repartition before the compute-bound UDF:
-    # the joined pair set is small in BYTES, so AQE's coalescing packs
-    # it into one or two partitions and the per-pair LCS work — the
-    # actual cost — serializes onto one core. An explicit partition
-    # count is exempt from AQE coalescing. One task per core, one
-    # wave: each Python task costs a fixed 0.2-0.35 s of worker setup
-    # even when empty, and a gray zone is often a handful of pairs.
-    nparts = docs.sparkSession.sparkContext.defaultParallelism
-    joined = (
-        pairs.join(t.withColumnRenamed("url", "url1").withColumnRenamed("_t", "_t1"), "url1")
-        .join(t.withColumnRenamed("url", "url2").withColumnRenamed("_t", "_t2"), "url2")
-        .repartition(nparts)
-    )
-    min_ratio = cfg.lcs_min_ratio
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in pairs.schema.fields
-    ) + ", lcs_ratio double"
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ratios = np.ones(len(pdf))
-            for i, (m, t1, t2) in enumerate(zip(pdf["method"], pdf["_t1"], pdf["_t2"])):
-                if m == "exact" or not t1 or not t2:
-                    continue
-                lcs = lcs_fn(t1, t2)
-                # both kernels measure the LCS in UTF-8 BYTES; the
-                # denominator must too, or multi-byte text inflates the
-                # ratio past 1.0 (len() counts chars)
-                min_len = min(len(t1.encode("utf-8")), len(t2.encode("utf-8")))
-                ratios[i] = lcs / max(1, min_len)
-            out = pdf.drop(columns=["_t1", "_t2"]).assign(lcs_ratio=ratios)
-            yield out[out["lcs_ratio"] >= min_ratio]
-
-    return joined.mapInPandas(compute, schema=out_schema)
-
-
-def lcs_rescue(
-    gray_pairs: DataFrame,
-    docs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
-    """Accept gray-zone candidates (failed the Jaccard threshold) whose
-    LCS ratio clears cfg.lcs_min_ratio — the boilerplate-wrapped-dup
-    case: site chrome depresses shingle Jaccard while the body is one
-    giant common substring. Output method='lcs'.
-
-    gray_pairs needs (url1, url2, score).
-    """
-    scored = gray_pairs.select("url1", "url2", "score", F.lit("gray").alias("method"))
-    kept = lcs_verify(scored, docs, cfg, id_col, text_col)
-    return kept.select(
-        "url1", "url2", F.round("lcs_ratio", 6).alias("score"), F.lit("lcs").alias("method")
-    )
+    ``t[:max_chars]`` counts code points, as Spark's ``substring`` does.
+    The kernel measures the LCS in UTF-8 BYTES, so the denominator
+    must too, or multi-byte text inflates the ratio past 1.0 (``len``
+    counts chars)."""
+    t1, t2 = (t1 or "")[:max_chars], (t2 or "")[:max_chars]
+    if not t1 or not t2:
+        return 1.0
+    min_len = min(len(t1.encode("utf-8")), len(t2.encode("utf-8")))
+    return py_lcs_length(t1, t2) / max(1, min_len)
 
 
 def py_lcs_dp(s1: str, s2: str) -> int:

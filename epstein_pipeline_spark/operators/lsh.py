@@ -141,8 +141,8 @@ def score_candidates(pairs: DataFrame, sigs: DataFrame, cfg: DedupConfig) -> Dat
     callers split accepted vs gray-zone.
 
     (A semi-join prefilter of the signature table on candidate urls —
-    the shape that pays off for the TEXT attach joins in
-    exact_jaccard_pairs / lcs_verify — was tried here in round 6 and
+    the shape that pays off for the TEXT attach join in
+    verify.verify_pairs — was tried here in round 6 and
     REJECTED by measurement: each filtered side re-scans the signature
     parquet, and decoding the 128-slot arrays twice more cost more
     than the avoided join shuffles at both parallelism levels.)"""

@@ -1,4 +1,5 @@
-"""Exact shingle-Jaccard verification of LSH candidates.
+"""One verify pass over LSH candidates: exact shingle Jaccard, plus the
+LCS ratio for the gray zone.
 
 The reference verifies candidates with the MinHash *estimate*
 (mh1.jaccard, processors/dedup.py:386) — an unbiased estimator of the
@@ -10,6 +11,12 @@ operator computes it for the (sublinear) candidate set: cost is
 O(pairs * text_len) — at web scale the candidate volume after banding
 is orders of magnitude below the corpus, so the exact verify is cheap
 relative to the scan.
+
+Pairs whose Jaccard lands in the gray zone [lcs_gray_low,
+jaccard_threshold) also get their longest-common-substring ratio
+(operators/lcs.py ``py_lcs_ratio``) in the same pass: the texts are
+attached once and the Python worker round trip is paid once, where a
+separate LCS stage would pay both again for a handful of pairs.
 
 Runs as mapInPandas over pair+text rows; shingle sets are the same
 vectorized byte-rolling-hash as the signature UDF (functions/minhash).
@@ -26,31 +33,38 @@ from pyspark.sql import functions as F
 
 from epstein_pipeline_spark.config import DedupConfig
 from epstein_pipeline_spark.functions.minhash import _shingle_hashes
-from epstein_pipeline_spark.functions.text import normalize_text_expr
+from epstein_pipeline_spark.operators.lcs import py_lcs_ratio
 
 
-def exact_jaccard_pairs(
-    cand: DataFrame,
-    docs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "url",
-    text_col: str = "text",
-    min_keep: float | None = None,
-    pre_normalized: bool = False,
-) -> DataFrame:
-    """(url1, url2, score=exact jaccard) for candidate pairs.
+def _jaccard(s1: np.ndarray, s2: np.ndarray) -> float:
+    """Jaccard of two sorted, deduped hash arrays (``_shingle_hashes``
+    output): the intersection is a searchsorted probe of the smaller
+    array into the larger, not the concat-and-sort np.intersect1d pays
+    per pair."""
+    if s1.shape[0] == 0 and s2.shape[0] == 0:
+        return 1.0
+    big, small = (s1, s2) if s1.shape[0] >= s2.shape[0] else (s2, s1)
+    if small.shape[0] == 0:
+        return 0.0
+    idx = np.searchsorted(big, small)
+    # idx == len(big) means small[i] > big[-1]; clamp and let the
+    # equality test reject it
+    np.minimum(idx, big.shape[0] - 1, out=idx)
+    inter = int(np.count_nonzero(big[idx] == small))
+    return inter / (s1.shape[0] + s2.shape[0] - inter)
 
-    ``min_keep`` drops pairs below the bound early (default:
-    cfg.lcs_gray_low, keeping the gray zone for the LCS stage).
-    ``pre_normalized=True`` skips the normalize pass over the whole
-    docs table (the pipeline's extract stage already normalized —
-    normalize is idempotent, so this is a pure cost cut there).
+
+def verify_pairs(cand: DataFrame, docs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """(url1, url2, score, lcs_ratio) for candidate pairs (url1, url2).
+
+    ``score`` is the exact char-k shingle Jaccard; rows below
+    cfg.lcs_gray_low are dropped. ``lcs_ratio`` is set on the gray rows
+    (score < cfg.jaccard_threshold) and null on the rest. ``docs``
+    holds (url, text) with text already normalized (the extract
+    stage's column).
     """
-    if min_keep is None:
-        min_keep = cfg.lcs_gray_low
-    k = cfg.shingle_k
-    tcol = F.col(text_col) if pre_normalized else normalize_text_expr(text_col)
-    t = docs.select(F.col(id_col).alias("url"), tcol.alias("_t"))
+    k, gray_low, threshold = cfg.shingle_k, cfg.lcs_gray_low, cfg.jaccard_threshold
+    max_chars = cfg.lcs_max_chars
     # semi-join the corpus text table down to urls that appear in a
     # candidate pair before attaching texts: candidates are a sliver
     # of the corpus, and the two attach joins would otherwise shuffle
@@ -61,7 +75,7 @@ def exact_jaccard_pairs(
         .unionByName(cand.select(F.col("url2").alias("url")))
         .distinct()
     )
-    t = t.join(urls, "url", "left_semi")
+    t = docs.select("url", F.col("text").alias("_t")).join(urls, "url", "left_semi")
     # explicit hash-repartition on url1 before the UDF, for two
     # reasons: (a) candidate pairs are chain+star shaped (one hub url1
     # fans out to many url2s), so url1-clustering makes the
@@ -98,29 +112,16 @@ def exact_jaccard_pairs(
             if len(pdf) == 0:
                 continue
             scores = np.zeros(len(pdf))
+            ratios = np.full(len(pdf), np.nan)  # NaN reaches Spark as null
             for i, (u1, u2, t1, t2) in enumerate(
                 zip(pdf["url1"], pdf["url2"], pdf["_t1"], pdf["_t2"])
             ):
-                s1, s2 = shingles(u1, t1), shingles(u2, t2)
-                if s1.shape[0] == 0 and s2.shape[0] == 0:
-                    scores[i] = 1.0
-                    continue
-                # _shingle_hashes returns np.unique output — sorted,
-                # deduped — so the intersection is a searchsorted
-                # probe of the smaller array into the larger, not the
-                # concat-and-sort np.intersect1d pays per pair
-                big, small = (s1, s2) if s1.shape[0] >= s2.shape[0] else (s2, s1)
-                if small.shape[0] == 0:
-                    inter = 0
-                else:
-                    idx = np.searchsorted(big, small)
-                    # idx == len(big) means small[i] > big[-1]; clamp
-                    # and let the equality test reject it
-                    np.minimum(idx, big.shape[0] - 1, out=idx)
-                    inter = int(np.count_nonzero(big[idx] == small))
-                union = s1.shape[0] + s2.shape[0] - inter
-                scores[i] = inter / union if union else 0.0
-            out = pdf[["url1", "url2"]].assign(score=scores)
-            yield out[out["score"] >= min_keep]
+                scores[i] = j = _jaccard(shingles(u1, t1), shingles(u2, t2))
+                if gray_low <= j < threshold:
+                    ratios[i] = py_lcs_ratio(t1, t2, max_chars)
+            out = pdf[["url1", "url2"]].assign(score=scores, lcs_ratio=ratios)
+            yield out[out["score"] >= gray_low]
 
-    return joined.mapInPandas(compute, schema="url1 string, url2 string, score double")
+    return joined.mapInPandas(
+        compute, schema="url1 string, url2 string, score double, lcs_ratio double"
+    )

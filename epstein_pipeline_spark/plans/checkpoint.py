@@ -320,6 +320,18 @@ class StageStore:
                 m = dict(m, delta_rows=m["rows"])
                 self._publish(stage, m, expected_parent=m["snapshot"])
             return m
+        # the chain records ONE schema, which ``read`` applies to every
+        # file in it: a delta of another shape (a store built by an
+        # older engine version) would misread the parent files
+        from pyspark.sql.types import StructType
+
+        want = StructType.fromJson(json.loads(parent["schema"])).simpleString()
+        if delta.schema.simpleString() != want:
+            raise ValueError(
+                f"stage '{stage}': cannot append {delta.schema.simpleString()} "
+                f"to a chain of {want}; the store was built with another "
+                "schema — rebuild it (run dedup into a fresh store)"
+            )
         m = self._write_snapshot(stage, delta, counters)
         m = dict(
             m,

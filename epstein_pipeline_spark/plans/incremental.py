@@ -13,17 +13,21 @@ Dataflow (delta = pages not yet in the committed extract):
 1. extract/signatures: compute for delta only, APPEND-commit
    (``StageStore.append`` — parent data files are never rewritten,
    the Iceberg append-snapshot contract).
-2. exact: delta hashes join the committed corpus' per-hash anchor
-   (min url per content_hash — O(1) row per old group, built by a
-   groupBy on the hash column only) + star pairs within delta.
-3. MinHash/SimHash candidates: band rows for delta; the committed
-   corpus' band rows are semi-joined down to ONLY the buckets delta
-   touches (broadcast of the delta's band keys — one narrow scan of
-   the committed signature table, no corpus shuffle), then the usual
+2. MinHash candidates: band rows for delta; the committed corpus'
+   band rows are semi-joined down to ONLY the buckets delta touches
+   (broadcast of the delta's band keys — one narrow scan of the
+   committed signature table, no corpus shuffle), then the usual
    guarded bucket expansion, keeping only pairs with a new side.
-4. verify: estimate-accept >= 0.9, exact-Jaccard arbitration near
-   threshold, LCS rescue for the gray zone — the same kernels, over
-   delta candidates only.
+3. minhash_scored: the batch plan's own ``minhash_scored_stage`` —
+   estimate-accept >= 0.9, and one verify pass computing the exact
+   Jaccard near the threshold and the LCS ratio for the gray zone —
+   over delta candidates only.
+4. pairs: ONE append whose build also plans the two passes that
+   commit nothing of their own: exact (delta hashes join the committed
+   corpus' per-hash anchor — min url per content_hash, O(1) row per
+   old group, built by a groupBy on the hash column only — plus star
+   pairs within delta) and SimHash (the same touched-bucket expansion
+   as MinHash). The union is the batch plan's ``pairs_stage``.
 5. labels: incremental connected components. Old labels enter only
    for urls TOUCHED by new edges, as (url, cluster_id) seed edges
    (cluster_id is itself the min-url of the component, so label
@@ -56,16 +60,18 @@ from pyspark.sql import functions as F
 from epstein_pipeline_spark.config import DEFAULT_CONFIG, DedupConfig
 from epstein_pipeline_spark.operators.cc import connected_components
 from epstein_pipeline_spark.operators.clusters import build_clusters
-from epstein_pipeline_spark.operators.lcs import lcs_rescue
 from epstein_pipeline_spark.operators.lsh import (
     band_rows,
     bucket_pairs_expr,
     score_candidates,
 )
-from epstein_pipeline_spark.operators.pairs import canonicalize_pairs, union_first_wins
-from epstein_pipeline_spark.operators.verify import exact_jaccard_pairs
 from epstein_pipeline_spark.plans.checkpoint import StageStore, resume_filter
-from epstein_pipeline_spark.plans.pipeline import PipelineResult, extract_stage
+from epstein_pipeline_spark.plans.pipeline import (
+    PipelineResult,
+    extract_stage,
+    minhash_scored_stage,
+    pairs_stage,
+)
 
 
 def _delta_signatures(docs_delta: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -334,7 +340,30 @@ def _run_incremental_impl(
             with ThreadPoolExecutor(len(to_prep)) as ex:
                 prepped = dict(ex.map(_materialize, to_prep.items()))
 
-    # 3. exact pass: delta-internal star pairs + delta -> old-anchor
+    # 3. MinHash candidates: delta bands vs touched old buckets
+    mh_old = old_sigs.filter(F.col("_len") > cfg.minhash_min_len).select("url", "sig")
+    mh_all = sigs_all.filter(F.col("_len") > cfg.minhash_min_len).select("url", "sig")
+
+    def build_candidates() -> DataFrame:
+        pairs = _touched_bucket_pairs(
+            band_rows(mh_old, cfg), band_rows(mh_delta, cfg),
+            ["band_i", "band_hash"], ["url"], cfg.band_bucket_cap, bc=bc,
+            delta_keys=prepped.get("mh_keys"),
+        ).select(
+            F.col("p.a.url").alias("url1"), F.col("p.b.url").alias("url2")
+        ).dropDuplicates(["url1", "url2"])
+        return score_candidates(pairs, mh_all, cfg).filter(
+            F.col("score") >= cfg.lcs_gray_low - 0.10
+        )
+
+    est = appended("minhash_candidates", build_candidates)
+
+    # 4. one verify pass over the delta candidates (the batch body)
+    mh_scored = appended("minhash_scored", lambda: minhash_scored_stage(est, docs_all, cfg))
+
+    # 5. pairs: the exact pass (delta-internal star pairs + delta ->
+    # old-anchor) and the SimHash pass are planned inside the pairs
+    # append, so a resumed run declares neither
     def build_exact() -> DataFrame:
         from epstein_pipeline_spark.operators.exact import exact_pairs
 
@@ -366,46 +395,8 @@ def _run_incremental_impl(
         )
         return internal.unionByName(cross)
 
-    # the "(plan)" suffix is an honest-reporting contract: these three
-    # builders only DECLARE their DataFrame plans here (near-zero
-    # seconds); execution happens inside the `pairs` append — the
-    # union's write is the first action over them — so their real cost
-    # lands in the `pairs` stage timer, not these rows
-    p_exact = timed("pairs_exact(plan)", build_exact)
-
-    # 4. MinHash candidates: delta bands vs touched old buckets
-    mh_old = old_sigs.filter(F.col("_len") > cfg.minhash_min_len).select("url", "sig")
-    mh_all = sigs_all.filter(F.col("_len") > cfg.minhash_min_len).select("url", "sig")
-
-    def build_candidates() -> DataFrame:
-        pairs = _touched_bucket_pairs(
-            band_rows(mh_old, cfg), band_rows(mh_delta, cfg),
-            ["band_i", "band_hash"], ["url"], cfg.band_bucket_cap, bc=bc,
-            delta_keys=prepped.get("mh_keys"),
-        ).select(
-            F.col("p.a.url").alias("url1"), F.col("p.b.url").alias("url2")
-        ).dropDuplicates(["url1", "url2"])
-        return score_candidates(pairs, mh_all, cfg).filter(
-            F.col("score") >= cfg.lcs_gray_low - 0.10
-        )
-
-    est = appended("minhash_candidates", build_candidates)
-
-    def build_minhash_scored() -> DataFrame:
-        high = est.filter(F.col("score") >= 0.90)
-        near = est.filter(F.col("score") < 0.90)
-        return high.unionByName(
-            exact_jaccard_pairs(near, docs_all, cfg, pre_normalized=True)
-        )
-
-    mh_scored = appended("minhash_scored", build_minhash_scored)
-    p_minhash = mh_scored.filter(F.col("score") >= cfg.jaccard_threshold).withColumn(
-        "method", F.lit("minhash")
-    )
-
-    # 5. SimHash pass: same touched-bucket pattern, signatures ride in
-    # the member structs (no join back); sh_bands + the simhash
-    # imports moved up beside the key-set prep block
+    # SimHash: the touched-bucket pattern again; signatures ride in the
+    # member structs (no join back)
     def build_simhash() -> DataFrame:
         pairs = _touched_bucket_pairs(
             sh_bands(old_sigs), sh_bands(sigs_delta),
@@ -425,29 +416,13 @@ def _run_incremental_impl(
             .dropDuplicates(["url1", "url2"])
         )
 
-    p_simhash = timed("pairs_simhash(plan)", build_simhash)
-
-    # 6. LCS rescue over the new gray zone
-    p_lcs = None
-    if lcs_check:
-        p_lcs = timed(
-            "pairs_lcs(plan)",
-            lambda: lcs_rescue(
-                mh_scored.filter(F.col("score") < cfg.jaccard_threshold), docs_all, cfg
-            ),
-        )
-
-    # 7. union new pair evidence, append to the committed pair table
     def build_pairs() -> DataFrame:
-        parts = [canonicalize_pairs(p) for p in (p_exact, p_minhash, p_simhash) if p is not None]
-        if p_lcs is not None:
-            parts.append(canonicalize_pairs(p_lcs))
-        return union_first_wins(*parts)
+        return pairs_stage(build_exact(), mh_scored, build_simhash(), cfg, lcs_check)
 
     pairs_delta = appended("pairs", build_pairs)
     pairs_all = store.read(spark, "pairs")
 
-    # 8. incremental connected components. Every DataFrame here is
+    # 6. incremental connected components. Every DataFrame here is
     # O(new edges + affected members); the only O(corpus) step is the
     # final label republication (linear sequential I/O, broadcast
     # anti-join, no shuffle — Iceberg's MERGE INTO shape).
@@ -503,7 +478,7 @@ def _run_incremental_impl(
     timings["labels"] += time.time() - t0
     labels = store.read(spark, "labels")
 
-    # 9. clusters: drop every affected/new component's rows, rebuild
+    # 7. clusters: drop every affected/new component's rows, rebuild
     # them from the updated labels, keep the rest untouched
     def build_clusters_inc() -> DataFrame:
         old_clusters = store.read(spark, "clusters")

@@ -2,16 +2,20 @@
 ``epstein-pipeline dedup --mode all --clusters`` flagship,
 cli.py:556-636, restated per SURVEY.md §3.1).
 
-Stages (each a committed checkpoint, resumable):
+Seven committed checkpoints, each resumable:
 
-    extract    pages(html) -> text (one mapInArrow pass: compiled chain for
-               ASCII pages, the re twins otherwise), normalize, hash
-    exact      hash-group star pairs
-    minhash    signatures -> LSH band join -> Jaccard verify
-    simhash    64-bit signatures -> Hamming band join -> verify
-    pairs      union, first-pass-wins, optional LCS verification
-    labels     connected components (large-star/small-star)
-    clusters   representative + avg similarity + method
+    extract             pages(html) -> text (one mapInArrow pass: compiled
+                        chain for ASCII pages, the re twins otherwise),
+                        normalize, hash
+    signatures          MinHash + SimHash signatures in one pass
+    minhash_candidates  LSH band join, scored by the signature estimate
+    minhash_scored      one verify pass: exact Jaccard near the threshold,
+                        the LCS ratio for the gray zone
+    pairs               hash-group star pairs (exact), the minhash and lcs
+                        edges of minhash_scored, SimHash Hamming-ball
+                        pairs: union, first-pass-wins
+    labels              connected components (large-star/small-star)
+    clusters            representative + avg similarity + method
 
 `run_dedup(resume=True)` skips any stage with a committed snapshot —
 the kill/rerun contract (reference state.py:86-111 semantics).
@@ -31,7 +35,6 @@ from epstein_pipeline_spark.functions.text import content_hash_expr, normalize_t
 from epstein_pipeline_spark.operators.cc import connected_components
 from epstein_pipeline_spark.operators.clusters import build_clusters
 from epstein_pipeline_spark.operators.exact import exact_pairs
-from epstein_pipeline_spark.operators.lcs import lcs_rescue
 from epstein_pipeline_spark.operators.lsh import (
     band_rows,
     candidate_pairs_from_bands,
@@ -39,7 +42,7 @@ from epstein_pipeline_spark.operators.lsh import (
 )
 from epstein_pipeline_spark.operators.pairs import canonicalize_pairs, union_first_wins
 from epstein_pipeline_spark.operators.simhash_pass import simhash_pass
-from epstein_pipeline_spark.operators.verify import exact_jaccard_pairs
+from epstein_pipeline_spark.operators.verify import verify_pairs
 from epstein_pipeline_spark.plans.checkpoint import StageStore
 from epstein_pipeline_spark.session import spread_to_cores
 
@@ -136,6 +139,48 @@ def signatures_stage(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
         .withColumn("simhash", sh_udf("_norm"))
         .select("url", "_len", "sig", "simhash")
     )
+
+
+def minhash_scored_stage(est: DataFrame, docs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """minhash_scored from the estimate-scored candidates ``est``, for
+    the batch and the incremental plan alike: (url1, url2, score,
+    lcs_ratio).
+
+    Exact shingle-Jaccard arbitration is only needed NEAR the
+    threshold: at est >= 0.9 the 128-perm estimator's miss probability
+    for true J < 0.8 is ~Phi(-3.5), so those rows keep the estimate as
+    their score. This keeps dense exact-dup cliques (already caught by
+    the exact pass anyway) out of the O(pairs * text) verify. The
+    accept band never starts below the threshold, so every gray row
+    passes through ``verify_pairs`` and gets its ``lcs_ratio``."""
+    accept = max(0.90, cfg.jaccard_threshold)
+    high = est.filter(F.col("score") >= accept).withColumn(
+        "lcs_ratio", F.lit(None).cast("double")
+    )
+    return high.unionByName(verify_pairs(est.filter(F.col("score") < accept), docs, cfg))
+
+
+def pairs_stage(
+    exact: DataFrame, scored: DataFrame, simhash: DataFrame, cfg: DedupConfig, lcs_check: bool
+) -> DataFrame:
+    """The pair table from the exact pairs, minhash_scored and the
+    SimHash pairs: minhash edges are scored rows at or above the
+    threshold, lcs edges (``lcs_check``) the gray rows whose LCS ratio
+    clears cfg.lcs_min_ratio, scored by that ratio. Union,
+    first-pass-wins (exact > minhash > simhash > lcs)."""
+    accepted = F.col("score") >= cfg.jaccard_threshold
+    parts = [
+        exact,
+        scored.filter(accepted).select("url1", "url2", "score", F.lit("minhash").alias("method")),
+        simhash,
+    ]
+    if lcs_check:
+        parts.append(
+            scored.filter(~accepted & (F.col("lcs_ratio") >= cfg.lcs_min_ratio)).select(
+                "url1", "url2", F.round("lcs_ratio", 6).alias("score"), F.lit("lcs").alias("method")
+            )
+        )
+    return union_first_wins(*[canonicalize_pairs(p) for p in parts])
 
 
 def _adaptive_split_bytes(spark: SparkSession, pages: DataFrame) -> int | None:
@@ -244,14 +289,7 @@ def _run_dedup_staged(
     if m is not None:
         stamp["for_extract_snapshot"] = m["snapshot"]
 
-    # 2. exact pass (hash-group star pairs)
-    p_exact = staged(
-        "pairs_exact",
-        lambda: exact_pairs(docs, hash_col="content_hash"),
-        {"docs_in": n_docs},
-    )
-
-    # 3a. signatures — one committed table (url, sig, simhash): both
+    # 2. signatures — one committed table (url, sig, simhash): both
     # signature UDFs run in a single pass over the corpus (normalize
     # once, scan once, commit once — the north_rule signatures
     # checkpoint); downstream band-explosion and verify joins reuse the
@@ -262,7 +300,7 @@ def _run_dedup_staged(
     mh_sigs = all_sigs.filter(F.col("_len") > cfg.minhash_min_len).select("url", "sig")
     sh_sigs = all_sigs.filter(F.col("_len") > cfg.simhash_min_len).select("url", "simhash")
 
-    # 3b. MinHash/LSH candidate edges: band-join candidates scored by
+    # 3. MinHash/LSH candidate edges: band-join candidates scored by
     # the cheap signature estimate (wide margin below the gray zone).
     # Committed as their OWN checkpoint — the north rule requires
     # candidate-pair edges on durable storage, and reading the snapshot
@@ -279,40 +317,23 @@ def _run_dedup_staged(
     est = staged("minhash_candidates", build_candidates)
     n_cand = (store.latest("minhash_candidates") or {}).get("rows", 0)
 
-    # 3c. exact shingle-Jaccard arbitration is only needed NEAR the
-    # threshold: at est >= 0.9 the 128-perm estimator's miss
-    # probability for true J < 0.8 is ~Phi(-3.5) — accept directly.
-    # This keeps dense exact-dup cliques (already caught by the
-    # exact pass anyway) out of the O(pairs * text) verify.
-    def build_minhash_scored() -> DataFrame:
-        high = est.filter(F.col("score") >= 0.90)
-        near = est.filter(F.col("score") < 0.90)
-        return high.unionByName(exact_jaccard_pairs(near, docs, cfg, pre_normalized=True))
-
+    # 4. one verify pass: exact Jaccard near the threshold, the LCS
+    # ratio (north_rule stage 3) for the gray zone
     mh_scored = staged(
-        "minhash_scored", build_minhash_scored, {"pairs_in": n_cand}
-    )
-    p_minhash = mh_scored.filter(F.col("score") >= cfg.jaccard_threshold).withColumn(
-        "method", F.lit("minhash")
+        "minhash_scored", lambda: minhash_scored_stage(est, docs, cfg), {"pairs_in": n_cand}
     )
 
-    # 4. SimHash Hamming-ball pass over the committed signatures
-    p_simhash = staged("pairs_simhash", lambda: simhash_pass(docs, cfg, sigs=sh_sigs))
-
-    # 5. LCS verification (north_rule stage 3): substring-level check of
-    # the gray-zone candidates that hashing alone couldn't resolve
-    def build_lcs() -> DataFrame:
-        gray = mh_scored.filter(F.col("score") < cfg.jaccard_threshold)
-        return lcs_rescue(gray, docs, cfg)
-
-    p_lcs = staged("pairs_lcs", build_lcs) if lcs_check else None
-
-    # 6. union, first-pass-wins (exact > minhash > simhash > lcs)
+    # 5. the exact pass (hash-group star pairs) and the SimHash
+    # Hamming-ball pass over the committed signatures run inside the
+    # pairs commit, unioned with the minhash and lcs edges
     def build_pairs() -> DataFrame:
-        parts = [canonicalize_pairs(p) for p in (p_exact, p_minhash, p_simhash) if p is not None]
-        if p_lcs is not None:
-            parts.append(canonicalize_pairs(p_lcs))
-        return union_first_wins(*parts)
+        return pairs_stage(
+            exact_pairs(docs, hash_col="content_hash"),
+            mh_scored,
+            simhash_pass(docs, cfg, sigs=sh_sigs),
+            cfg,
+            lcs_check,
+        )
 
     pairs = staged("pairs", build_pairs)
 

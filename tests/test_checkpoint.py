@@ -129,6 +129,21 @@ def test_two_writer_append_conflict(spark, tmp_path):
     assert store.read(spark, "s").count() == 12
 
 
+def test_append_refuses_a_delta_of_another_schema(spark, tmp_path):
+    """A chain records one schema and ``read`` applies it to every
+    file: appending a delta with an extra column is refused, naming the
+    stage, and publishes nothing."""
+    import pytest
+
+    store = StageStore(tmp_path)
+    store.commit("s", spark.createDataFrame([(1,)], "a int"))
+    head = (tmp_path / "s" / "MANIFEST.json").read_text()
+    with pytest.raises(ValueError, match="stage 's'.*rebuild"):
+        store.append("s", spark.createDataFrame([(2, 0.5)], "a int, b double"))
+    assert (tmp_path / "s" / "MANIFEST.json").read_text() == head
+    assert [r["a"] for r in store.read(spark, "s").collect()] == [1]
+
+
 def test_concurrent_snapshot_ids_never_collide(spark, tmp_path):
     """The reservation marker: a second writer starting while the
     first writer's snapshot dir is mid-write (or momentarily deleted

@@ -6,10 +6,11 @@ from pyspark.sql import functions as F
 
 from epstein_pipeline_spark.config import DedupConfig
 from epstein_pipeline_spark.operators.exact import exact_all_pairs, exact_pairs
-from epstein_pipeline_spark.operators.lcs import lcs_rescue, py_lcs_dp, py_lcs_length
+from epstein_pipeline_spark.operators.lcs import py_lcs_dp, py_lcs_length, py_lcs_ratio
 from epstein_pipeline_spark.operators.lsh import minhash_pass
 from epstein_pipeline_spark.operators.pairs import canonicalize_pairs, union_first_wins
 from epstein_pipeline_spark.operators.simhash_pass import simhash_pass
+from epstein_pipeline_spark.operators.verify import verify_pairs
 
 CFG = DedupConfig(band_bucket_cap=50)
 
@@ -107,47 +108,53 @@ def test_lcs_matches_dp_oracle():
         assert py_lcs_length(s1, s2) == py_lcs_dp(s1, s2)
 
 
+def _words(prefix: str, n: int, seed: int) -> str:
+    import random
+
+    r = random.Random(seed)
+    return " ".join(f"{prefix}{r.randrange(10**6):06d}" for _ in range(n))
+
+
+def _wrapped(body: str, header: str, footer: str) -> str:
+    """``body`` inside site chrome: shingle Jaccard drops into the gray
+    zone while the body stays one common substring."""
+    return header + " " + body + " " + footer
+
+
 def test_lcs_rescues_boilerplate_wrapped(spark):
-    body = LONG_A
-    wrapped = "MENU home about contact\n\n" + body + "\n\nCopyright 2031 footer links"
-    docs = _docs(spark, [("a", body), ("b", wrapped), ("c", UNRELATED)])
-    gray = spark.createDataFrame(
-        [("a", "b", 0.7), ("a", "c", 0.7)], "url1 string, url2 string, score double"
+    """One verify pass: the wrapped duplicate gets its exact Jaccard
+    (gray zone) and an LCS ratio clearing lcs_min_ratio; a pair above
+    the threshold gets no LCS ratio; an unrelated pair is dropped."""
+    body = _words("body", 200, 1)
+    wrapped = _wrapped(body, _words("menu", 25, 5), _words("foot", 25, 6))
+    docs = _docs(spark, [("a", body), ("b", wrapped), ("c", UNRELATED), ("d", LONG_A), ("e", LONG_B)])
+    cand = spark.createDataFrame(
+        [("a", "b"), ("a", "c"), ("d", "e")], "url1 string, url2 string"
     )
-    got = lcs_rescue(gray, docs, CFG).collect()
-    assert [(r["url1"], r["url2"], r["method"]) for r in got] == [("a", "b", "lcs")]
-
-
-def test_lcs_verify_suffix_array_kernel_parity(spark):
-    """lcs_verify(kernel='suffix_array') — the literal north-rule
-    stage-3 form — keeps exactly the same pairs with exactly the same
-    ratios as the default rolling-hash kernel."""
-    from epstein_pipeline_spark.operators.lcs import lcs_verify
-
-    body = LONG_A
-    wrapped = "MENU home about contact\n\n" + body + "\n\nCopyright 2031 footer links"
-    docs = _docs(spark, [("a", body), ("b", wrapped), ("c", UNRELATED)])
-    pairs = spark.createDataFrame(
-        [("a", "b", 0.7, "gray"), ("a", "c", 0.7, "gray"), ("b", "c", 1.0, "exact")],
-        "url1 string, url2 string, score double, method string",
-    )
-    rh = {(r["url1"], r["url2"]): r["lcs_ratio"] for r in lcs_verify(pairs, docs, CFG).collect()}
-    sa = {
-        (r["url1"], r["url2"]): r["lcs_ratio"]
-        for r in lcs_verify(pairs, docs, CFG, kernel="suffix_array").collect()
-    }
-    assert rh == sa and ("a", "b") in rh and ("a", "c") not in rh
+    got = {(r["url1"], r["url2"]): r for r in verify_pairs(cand, docs, CFG).collect()}
+    assert set(got) == {("a", "b"), ("d", "e")}
+    ab, de = got[("a", "b")], got[("d", "e")]
+    assert CFG.lcs_gray_low <= ab["score"] < CFG.jaccard_threshold
+    assert ab["lcs_ratio"] >= CFG.lcs_min_ratio
+    assert de["score"] >= CFG.jaccard_threshold and de["lcs_ratio"] is None
 
 
 def test_lcs_ratio_bounded_for_multibyte_text(spark):
-    """Kernels measure LCS in UTF-8 bytes; the ratio denominator must
-    too — a shared accented prefix must never yield lcs_ratio > 1."""
-    from epstein_pipeline_spark.operators.lcs import lcs_verify
+    """The kernel measures LCS in UTF-8 bytes; the ratio denominator
+    must too — a gray-zone pair of accented text sharing its whole
+    body must never yield lcs_ratio > 1."""
+    body = _words("é", 120, 1)
+    docs = _docs(spark, [("a", body), ("b", _wrapped(body, _words("ü", 20, 2), _words("ø", 20, 3)))])
+    cand = spark.createDataFrame([("a", "b")], "url1 string, url2 string")
+    got = verify_pairs(cand, docs, CFG).collect()
+    assert got and CFG.lcs_gray_low <= got[0]["score"] < CFG.jaccard_threshold
+    assert 0.0 < got[0]["lcs_ratio"] <= 1.0
 
-    shared = "é" * 80
-    docs = _docs(spark, [("a", shared + " fin une"), ("b", shared + " autre queue")])
-    pairs = spark.createDataFrame(
-        [("a", "b", 0.7, "gray")], "url1 string, url2 string, score double, method string"
-    )
-    got = lcs_verify(pairs, docs, CFG).collect()
-    assert got and 0.0 < got[0]["lcs_ratio"] <= 1.0
+
+def test_lcs_ratio_truncates_by_code_point():
+    """``py_lcs_ratio`` compares the first ``max_chars`` code points
+    (Spark ``substring`` semantics); an empty truncated text reads 1.0."""
+    assert py_lcs_ratio("abcdef", "xxabcd", 4) == 0.5  # "abcd" vs "xxab"
+    assert py_lcs_ratio("éa", "éb", 1) == 1.0  # both truncate to "é"
+    assert py_lcs_ratio("", "abc", 10) == 1.0
+    assert py_lcs_ratio(None, "abc", 10) == 1.0

@@ -88,9 +88,17 @@ def test_failed_build_warns_once_and_falls_back(monkeypatch, tmp_path):
 def test_minhash_native_matches_numpy_edges():
     if _native.get_lib() is None:
         return
-    enc = [t.encode("utf-8") for t in EDGE_TEXTS]
+    # docs of 2^19 shingles (the largest dedup table) and 2^19 + 1 (no
+    # table: every shingle permuted), over a small vocabulary so most
+    # shingles repeat
+    rng = np.random.RandomState(7)
+    words = np.array(["alpha", "beta", "gamma", "delta", "eps"])
+    filler = " ".join(words[rng.randint(0, len(words), 200_000)])
+    n_sh = _native.MINHASH_SET_MAX_SLOTS // 2
+    texts = EDGE_TEXTS + [filler[: n_sh + 4], filler[: n_sh + 5]]
+    enc = [t.encode("utf-8") for t in texts]
     got = _native.minhash_batch(enc, 5, A, B, _EMPTY_SIG_SEED)
-    assert np.array_equal(got, _np_sigs(EDGE_TEXTS))
+    assert np.array_equal(got, _np_sigs(texts))
 
 
 @settings(max_examples=150, deadline=None)

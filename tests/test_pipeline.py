@@ -94,17 +94,7 @@ def test_lineage_covers_all_stages(spark, result):
     _, store = result
     lin = store.lineage(spark)
     stages = {r["stage"] for r in lin.select("stage").distinct().collect()}
-    assert {
-        "extract",
-        "pairs_exact",
-        "signatures",
-        "minhash_candidates",
-        "minhash_scored",
-        "pairs_simhash",
-        "pairs",
-        "labels",
-        "clusters",
-    } <= stages
+    assert stages == set(STAGES)
 
 
 def test_signatures_stage_runs_one_python_wave(spark, result):
@@ -118,10 +108,29 @@ def test_signatures_stage_runs_one_python_wave(spark, result):
     assert 1 <= tasks <= 2 * par
 
 
+# the seven commits of a batch run: the exact and SimHash passes are
+# planned inside the `pairs` commit, the LCS ratio inside `minhash_scored`
 STAGES = [
-    "extract", "pairs_exact", "signatures", "minhash_candidates",
-    "minhash_scored", "pairs_simhash", "pairs_lcs", "pairs", "labels", "clusters",
+    "extract", "signatures", "minhash_candidates", "minhash_scored",
+    "pairs", "labels", "clusters",
 ]
+
+
+def test_stage_timers_are_the_committed_stages_known_to_the_benchmark(result):
+    """A batch run times exactly the stages it commits (the store's
+    directories are pinned by test_one_record_per_commit), and each is
+    a name perfbench/layers.py ``STAGES`` knows: its ``stage_totals``
+    raises on any other timer key."""
+    import importlib.util
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parent.parent / "perfbench" / "layers.py"
+    spec = importlib.util.spec_from_file_location("perfbench_layers", path)
+    layers = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(layers)
+    res, _ = result
+    assert set(res.stage_seconds) == set(STAGES)
+    assert set(STAGES) <= set(layers.STAGES)
 
 
 def test_store_reads_start_no_spark_job(spark, result):
