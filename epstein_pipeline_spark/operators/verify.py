@@ -30,10 +30,26 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from epstein_pipeline_spark.config import DedupConfig
 from epstein_pipeline_spark.functions.minhash import _shingle_hashes
 from epstein_pipeline_spark.operators.lcs import py_lcs_ratio
+
+# a MinHash estimate at or above this is kept as the score: at est >= 0.9
+# the 128-perm estimator's miss probability for true J < 0.8 is
+# ~Phi(-3.5), so exact arbitration is only needed below it
+ESTIMATE_ACCEPT = 0.90
+
+# the minhash_scored stage's rows, as committed
+SCORED_SCHEMA = StructType(
+    [
+        StructField("url1", StringType()),
+        StructField("url2", StringType()),
+        StructField("score", DoubleType()),
+        StructField("lcs_ratio", DoubleType()),
+    ]
+)
 
 
 def _jaccard(s1: np.ndarray, s2: np.ndarray) -> float:
@@ -55,13 +71,15 @@ def _jaccard(s1: np.ndarray, s2: np.ndarray) -> float:
 
 
 def verify_pairs(cand: DataFrame, docs: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """(url1, url2, score, lcs_ratio) for candidate pairs (url1, url2).
+    """(url1, url2, score, lcs_ratio) for candidate pairs (url1, url2,
+    score) scored by the MinHash estimate.
 
-    ``score`` is the exact char-k shingle Jaccard; rows below
-    cfg.lcs_gray_low are dropped. ``lcs_ratio`` is set on the gray rows
-    (score < cfg.jaccard_threshold) and null on the rest. ``docs``
-    holds (url, text) with text already normalized (the extract
-    stage's column).
+    A row whose estimate is at least ESTIMATE_ACCEPT keeps it as its
+    score; the others get the exact char-k shingle Jaccard, and those
+    below cfg.lcs_gray_low are dropped. ``lcs_ratio`` is set on every
+    kept row below cfg.jaccard_threshold (the gray rows) and null on
+    the rest. ``docs`` holds (url, text) with text already normalized
+    (the extract stage's column).
     """
     k, gray_low, threshold = cfg.shingle_k, cfg.lcs_gray_low, cfg.jaccard_threshold
     max_chars = cfg.lcs_max_chars
@@ -90,7 +108,7 @@ def verify_pairs(cand: DataFrame, docs: DataFrame, cfg: DedupConfig) -> DataFram
     # wave costs more than the balance it buys (session.spread_to_cores).
     nparts = docs.sparkSession.sparkContext.defaultParallelism
     joined = (
-        cand.select("url1", "url2")
+        cand.select("url1", "url2", F.col("score").alias("_est"))
         .join(t.withColumnRenamed("url", "url2").withColumnRenamed("_t", "_t2"), "url2")
         .join(t.withColumnRenamed("url", "url1").withColumnRenamed("_t", "_t1"), "url1")
         .repartition(nparts, "url1")
@@ -111,17 +129,18 @@ def verify_pairs(cand: DataFrame, docs: DataFrame, cfg: DedupConfig) -> DataFram
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            scores = np.zeros(len(pdf))
+            scores = pdf["_est"].to_numpy(dtype=float, copy=True)
+            keep = scores >= ESTIMATE_ACCEPT  # the estimate stands
             ratios = np.full(len(pdf), np.nan)  # NaN reaches Spark as null
             for i, (u1, u2, t1, t2) in enumerate(
                 zip(pdf["url1"], pdf["url2"], pdf["_t1"], pdf["_t2"])
             ):
-                scores[i] = j = _jaccard(shingles(u1, t1), shingles(u2, t2))
-                if gray_low <= j < threshold:
+                if not keep[i]:
+                    scores[i] = _jaccard(shingles(u1, t1), shingles(u2, t2))
+                    keep[i] = scores[i] >= gray_low
+                if keep[i] and scores[i] < threshold:
                     ratios[i] = py_lcs_ratio(t1, t2, max_chars)
             out = pdf[["url1", "url2"]].assign(score=scores, lcs_ratio=ratios)
-            yield out[out["score"] >= gray_low]
+            yield out[keep]
 
-    return joined.mapInPandas(
-        compute, schema="url1 string, url2 string, score double, lcs_ratio double"
-    )
+    return joined.mapInPandas(compute, schema=SCORED_SCHEMA)

@@ -42,6 +42,7 @@ from typing import TYPE_CHECKING
 
 if TYPE_CHECKING:  # pyspark stays unimported: `main.py lineage` runs without it
     from pyspark.sql import DataFrame, SparkSession
+    from pyspark.sql.types import StructType
 
 _EXECUTOR_TOTALS = (
     ("shuffle_read_bytes", "totalShuffleRead"),
@@ -119,6 +120,25 @@ class StageStore:
 
     def has(self, stage: str) -> bool:
         return self.latest(stage) is not None
+
+    def check_schema(self, stage: str, schema: StructType, manifest: dict | None = None) -> None:
+        """Raise ``ValueError`` when ``stage`` (or ``manifest``, one of
+        its snapshots) was committed with a schema other than
+        ``schema``: a store built by an older engine
+        version, whose chain must not be read or appended to as the
+        current shape. No-op for a stage with no snapshot."""
+        m = manifest or self.latest(stage)
+        if m is None:
+            return
+        from pyspark.sql.types import StructType
+
+        have = StructType.fromJson(json.loads(m["schema"])).simpleString()
+        if schema.simpleString() != have:
+            raise ValueError(
+                f"stage '{stage}': expected {schema.simpleString()}, the store "
+                f"holds {have}; the store was built with another schema — "
+                "rebuild it (run dedup into a fresh store)"
+            )
 
     # -- commit / read ---------------------------------------------------
     def commit(
@@ -321,17 +341,8 @@ class StageStore:
                 self._publish(stage, m, expected_parent=m["snapshot"])
             return m
         # the chain records ONE schema, which ``read`` applies to every
-        # file in it: a delta of another shape (a store built by an
-        # older engine version) would misread the parent files
-        from pyspark.sql.types import StructType
-
-        want = StructType.fromJson(json.loads(parent["schema"])).simpleString()
-        if delta.schema.simpleString() != want:
-            raise ValueError(
-                f"stage '{stage}': cannot append {delta.schema.simpleString()} "
-                f"to a chain of {want}; the store was built with another "
-                "schema — rebuild it (run dedup into a fresh store)"
-            )
+        # file in it: a delta of another shape would misread the parent files
+        self.check_schema(stage, delta.schema, parent)
         m = self._write_snapshot(stage, delta, counters)
         m = dict(
             m,

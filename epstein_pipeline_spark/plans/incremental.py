@@ -65,6 +65,7 @@ from epstein_pipeline_spark.operators.lsh import (
     bucket_pairs_expr,
     score_candidates,
 )
+from epstein_pipeline_spark.operators.verify import SCORED_SCHEMA
 from epstein_pipeline_spark.plans.checkpoint import StageStore, resume_filter
 from epstein_pipeline_spark.plans.pipeline import (
     PipelineResult,
@@ -178,6 +179,8 @@ def _run_incremental_impl(
         timings[name] = time.time() - t0
         return out
 
+    # refuse a store from an older engine version before appending to it
+    store.check_schema("minhash_scored", SCORED_SCHEMA)
     old_docs = store.read(spark, "extract")
     old_labels = store.read(spark, "labels")
 

@@ -42,7 +42,11 @@ from epstein_pipeline_spark.operators.lsh import (
 )
 from epstein_pipeline_spark.operators.pairs import canonicalize_pairs, union_first_wins
 from epstein_pipeline_spark.operators.simhash_pass import simhash_pass
-from epstein_pipeline_spark.operators.verify import verify_pairs
+from epstein_pipeline_spark.operators.verify import (
+    ESTIMATE_ACCEPT,
+    SCORED_SCHEMA,
+    verify_pairs,
+)
 from epstein_pipeline_spark.plans.checkpoint import StageStore
 from epstein_pipeline_spark.session import spread_to_cores
 
@@ -146,14 +150,14 @@ def minhash_scored_stage(est: DataFrame, docs: DataFrame, cfg: DedupConfig) -> D
     the batch and the incremental plan alike: (url1, url2, score,
     lcs_ratio).
 
-    Exact shingle-Jaccard arbitration is only needed NEAR the
-    threshold: at est >= 0.9 the 128-perm estimator's miss probability
-    for true J < 0.8 is ~Phi(-3.5), so those rows keep the estimate as
-    their score. This keeps dense exact-dup cliques (already caught by
-    the exact pass anyway) out of the O(pairs * text) verify. The
-    accept band never starts below the threshold, so every gray row
-    passes through ``verify_pairs`` and gets its ``lcs_ratio``."""
-    accept = max(0.90, cfg.jaccard_threshold)
+    Rows at or above both ESTIMATE_ACCEPT and the threshold keep their
+    estimate and need no LCS ratio. This keeps dense exact-dup cliques
+    (already caught by the exact pass anyway) out of the O(pairs *
+    text) verify. Every other row goes through ``verify_pairs``, which
+    keeps an estimate >= ESTIMATE_ACCEPT as the score (reachable only
+    with a threshold above it) and gives each gray row its
+    ``lcs_ratio``."""
+    accept = max(ESTIMATE_ACCEPT, cfg.jaccard_threshold)
     high = est.filter(F.col("score") >= accept).withColumn(
         "lcs_ratio", F.lit(None).cast("double")
     )
@@ -257,6 +261,8 @@ def _run_dedup_staged(
     # timestamps (a backwards clock step between commits must not make
     # a stale stage pass as fresh)
     stamp: dict = {}
+    if resume:  # a store from an older engine version is refused, not misread
+        store.check_schema("minhash_scored", SCORED_SCHEMA)
 
     def staged(name: str, build, counters: dict | None = None) -> DataFrame:
         if resume and store.has(name):

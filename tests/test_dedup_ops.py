@@ -11,6 +11,7 @@ from epstein_pipeline_spark.operators.lsh import minhash_pass
 from epstein_pipeline_spark.operators.pairs import canonicalize_pairs, union_first_wins
 from epstein_pipeline_spark.operators.simhash_pass import simhash_pass
 from epstein_pipeline_spark.operators.verify import verify_pairs
+from epstein_pipeline_spark.plans.pipeline import minhash_scored_stage, pairs_stage
 
 CFG = DedupConfig(band_bucket_cap=50)
 
@@ -121,6 +122,15 @@ def _wrapped(body: str, header: str, footer: str) -> str:
     return header + " " + body + " " + footer
 
 
+def _cand(spark, rows):
+    """Candidate pairs (url1, url2, score) scored by a MinHash estimate."""
+    return spark.createDataFrame(rows, "url1 string, url2 string, score double")
+
+
+def _no_pairs(spark):
+    return spark.createDataFrame([], "url1 string, url2 string, score double, method string")
+
+
 def test_lcs_rescues_boilerplate_wrapped(spark):
     """One verify pass: the wrapped duplicate gets its exact Jaccard
     (gray zone) and an LCS ratio clearing lcs_min_ratio; a pair above
@@ -128,9 +138,7 @@ def test_lcs_rescues_boilerplate_wrapped(spark):
     body = _words("body", 200, 1)
     wrapped = _wrapped(body, _words("menu", 25, 5), _words("foot", 25, 6))
     docs = _docs(spark, [("a", body), ("b", wrapped), ("c", UNRELATED), ("d", LONG_A), ("e", LONG_B)])
-    cand = spark.createDataFrame(
-        [("a", "b"), ("a", "c"), ("d", "e")], "url1 string, url2 string"
-    )
+    cand = _cand(spark, [("a", "b", 0.7), ("a", "c", 0.5), ("d", "e", 0.85)])
     got = {(r["url1"], r["url2"]): r for r in verify_pairs(cand, docs, CFG).collect()}
     assert set(got) == {("a", "b"), ("d", "e")}
     ab, de = got[("a", "b")], got[("d", "e")]
@@ -139,14 +147,56 @@ def test_lcs_rescues_boilerplate_wrapped(spark):
     assert de["score"] >= CFG.jaccard_threshold and de["lcs_ratio"] is None
 
 
+def test_lcs_rejects_gray_pair_without_common_body(spark):
+    """A gray-zone pair sharing words but no long substring (the body
+    with each word pair swapped and every fifth word edited) gets an
+    LCS ratio below lcs_min_ratio, and ``pairs_stage`` makes no edge of
+    it, while the wrapped duplicate next to it becomes an lcs edge."""
+    words = _words("body", 200, 1).split()
+    edits = _words("edit", 200, 2).split()
+    swapped = [words[i ^ 1] for i in range(len(words))]
+    scrambled = " ".join(edits[i] if i % 5 == 0 else w for i, w in enumerate(swapped))
+    body = " ".join(words)
+    wrapped = _wrapped(body, _words("menu", 25, 5), _words("foot", 25, 6))
+    docs = _docs(spark, [("a", body), ("b", wrapped), ("s", scrambled)])
+    scored = verify_pairs(_cand(spark, [("a", "b", 0.7), ("a", "s", 0.7)]), docs, CFG)
+    got = {(r["url1"], r["url2"]): r for r in scored.collect()}
+    assert CFG.lcs_gray_low <= got[("a", "s")]["score"] < CFG.jaccard_threshold
+    assert got[("a", "s")]["lcs_ratio"] < CFG.lcs_min_ratio
+    pairs = pairs_stage(_no_pairs(spark), scored, _no_pairs(spark), CFG, lcs_check=True)
+    assert [(r["url1"], r["url2"], r["method"]) for r in pairs.collect()] == [("a", "b", "lcs")]
+    assert pairs_stage(_no_pairs(spark), scored, _no_pairs(spark), CFG, lcs_check=False).count() == 0
+
+
+def test_estimate_band_above_a_high_threshold_still_gets_lcs(spark):
+    """With a threshold above ESTIMATE_ACCEPT, a row whose estimate
+    falls between the two keeps the estimate as its score (no exact
+    Jaccard) and, being below the threshold, gets its LCS ratio: the
+    wrapped duplicate becomes an lcs edge scored by that ratio, and a
+    row at or above the threshold stays a minhash edge."""
+    cfg = DedupConfig(band_bucket_cap=50, jaccard_threshold=0.95)
+    body = _words("body", 200, 1)
+    wrapped = _wrapped(body, _words("menu", 25, 5), _words("foot", 25, 6))
+    docs = _docs(spark, [("a", body), ("b", wrapped), ("d", LONG_A), ("e", LONG_B)])
+    est = _cand(spark, [("a", "b", 0.92), ("d", "e", 0.97)])
+    scored = minhash_scored_stage(est, docs, cfg)
+    got = {(r["url1"], r["url2"]): r for r in scored.collect()}
+    assert got[("a", "b")]["score"] == 0.92 and got[("a", "b")]["lcs_ratio"] >= cfg.lcs_min_ratio
+    assert got[("d", "e")]["score"] == 0.97 and got[("d", "e")]["lcs_ratio"] is None
+    pairs = pairs_stage(_no_pairs(spark), scored, _no_pairs(spark), cfg, lcs_check=True)
+    assert {(r["url1"], r["url2"], r["method"], r["score"]) for r in pairs.collect()} == {
+        ("a", "b", "lcs", round(got[("a", "b")]["lcs_ratio"], 6)),
+        ("d", "e", "minhash", 0.97),
+    }
+
+
 def test_lcs_ratio_bounded_for_multibyte_text(spark):
     """The kernel measures LCS in UTF-8 bytes; the ratio denominator
     must too — a gray-zone pair of accented text sharing its whole
     body must never yield lcs_ratio > 1."""
     body = _words("é", 120, 1)
     docs = _docs(spark, [("a", body), ("b", _wrapped(body, _words("ü", 20, 2), _words("ø", 20, 3)))])
-    cand = spark.createDataFrame([("a", "b")], "url1 string, url2 string")
-    got = verify_pairs(cand, docs, CFG).collect()
+    got = verify_pairs(_cand(spark, [("a", "b", 0.7)]), docs, CFG).collect()
     assert got and CFG.lcs_gray_low <= got[0]["score"] < CFG.jaccard_threshold
     assert 0.0 < got[0]["lcs_ratio"] <= 1.0
 

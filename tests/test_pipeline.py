@@ -90,6 +90,27 @@ def test_partial_resume_recomputes_only_invalidated(spark, pages, result):
     assert a == b
 
 
+def test_store_of_an_older_schema_is_refused_before_any_write(spark, tmp_path):
+    """A store whose minhash_scored predates the lcs_ratio column is
+    refused by a resumed run_dedup and by run_incremental, naming the
+    stage, before either reads a stage or appends to one."""
+    from epstein_pipeline_spark.plans.incremental import run_incremental
+
+    store = StageStore(tmp_path)
+    store.commit("extract", spark.createDataFrame([("u", "t")], "url string, text string"))
+    store.commit("minhash_scored", spark.createDataFrame([], "url1 string, url2 string, score double"))
+    heads = {s: (tmp_path / s / "MANIFEST.json").read_text() for s in ("extract", "minhash_scored")}
+    pages = spark.createDataFrame(
+        [("v", "2024-01-01", "en", "some text")], "url string, warc_ts string, lang string, text string"
+    )
+    with pytest.raises(ValueError, match="minhash_scored.*rebuild"):
+        run_dedup(spark, pages, store, CFG, use_extracted=False)
+    with pytest.raises(ValueError, match="minhash_scored.*rebuild"):
+        run_incremental(spark, pages, store, CFG, use_extracted=False)
+    assert {s: (tmp_path / s / "MANIFEST.json").read_text() for s in heads} == heads
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["extract", "minhash_scored"]
+
+
 def test_lineage_covers_all_stages(spark, result):
     _, store = result
     lin = store.lineage(spark)
