@@ -32,8 +32,7 @@ class DedupConfig:
     minhash_seed: int = 1
 
     # -- SimHash Hamming-ball (north_rule stage 2) --
-    simhash_bits: int = 64
-    simhash_bands: int = 4  # 4 x 16-bit bands
+    simhash_bands: int = 4  # 4 x 16-bit bands of the 64-bit signature
     hamming_max: int = 3  # pairs with d<=3 share >=1 band (pigeonhole)
     simhash_min_len: int = 50  # reference dedup.py:422-423 gate
 
@@ -85,8 +84,10 @@ class DedupConfig:
     def __post_init__(self) -> None:
         if self.bands * self.rows_per_band != self.num_perm:
             raise ValueError("bands * rows_per_band must equal num_perm")
-        if self.simhash_bits % self.simhash_bands != 0:
-            raise ValueError("simhash_bits must divide into simhash_bands")
+        from epstein_pipeline_spark.functions.simhash import SIMHASH_BITS
+
+        if SIMHASH_BITS % self.simhash_bands != 0:
+            raise ValueError(f"simhash_bands must divide the {SIMHASH_BITS} signature bits")
 
 
 DEFAULT_CONFIG = DedupConfig()

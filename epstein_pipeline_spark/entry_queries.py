@@ -996,7 +996,10 @@ SELECT doc_id AS id, count(*) AS n FROM d GROUP BY doc_id HAVING count(*) > 1
 
 # ---------------------------------------------------------------------------
 # rows-only queries (non-SQL-expressible: pandas-UDF signatures,
-# LSH banding, iterative pipeline) — driver records row counts
+# LSH banding, iterative pipeline): no DuckDB oracle; their row counts
+# are recorded and tests/test_golden_checksums.py pins their result sets. They run the
+# pipeline's own operator chain: plans.pipeline.signatures_stage and
+# its length gates, then the lsh / simhash_pass candidate bodies.
 # ---------------------------------------------------------------------------
 
 def _planted_corpus(spark, sf) -> DataFrame:
@@ -1019,12 +1022,46 @@ def _planted_corpus(spark, sf) -> DataFrame:
     return d.unionByName(ws).unionByName(splice)
 
 
+def _planted_signatures(corpus: DataFrame, cfg) -> DataFrame:
+    """The pipeline's signatures_stage over the planted corpus, whose
+    raw text is normalized first, as extract does for pages."""
+    from epstein_pipeline_spark.functions.text import normalize_text_expr
+    from epstein_pipeline_spark.plans.pipeline import signatures_stage
+
+    return signatures_stage(
+        corpus.select("url", normalize_text_expr("text").alias("text")), cfg
+    )
+
+
+def _planted_minhash_pairs(corpus: DataFrame, cfg) -> DataFrame:
+    """(url1, url2, score, method='minhash'): band candidates over the
+    planted corpus, kept where the signature estimate reaches the
+    threshold."""
+    from epstein_pipeline_spark.operators.lsh import (
+        band_rows,
+        candidate_pairs_from_bands,
+        score_candidates,
+    )
+    from epstein_pipeline_spark.plans.pipeline import minhash_sigs
+
+    # the signature frame feeds the band explosion AND both sides of
+    # the score join; un-materialized it would run the UDFs once per
+    # consumer. The pipeline commits signatures as a stage instead;
+    # these queries commit nothing and are not resumable, so the lazy
+    # (not fault-tolerant) local checkpoint stays off the resumable
+    # path. The first action materializes it once.
+    sigs = minhash_sigs(_planted_signatures(corpus, cfg), cfg).localCheckpoint(eager=False)
+    scored = score_candidates(candidate_pairs_from_bands(band_rows(sigs, cfg), cfg), sigs, cfg)
+    return scored.filter(F.col("score") >= cfg.jaccard_threshold).withColumn(
+        "method", F.lit("minhash")
+    )
+
+
 def q_minhash_dedup_planted(spark, sf):
     """F1/J4: full MinHash/LSH pass over documents + planted variants."""
     from epstein_pipeline_spark.config import DedupConfig
-    from epstein_pipeline_spark.operators.lsh import minhash_pass
 
-    return minhash_pass(_planted_corpus(spark, sf), DedupConfig()).select(
+    return _planted_minhash_pairs(_planted_corpus(spark, sf), DedupConfig()).select(
         "url1", "url2", F.round("score", 4).alias("score"), "method"
     )
 
@@ -1033,8 +1070,11 @@ def q_simhash_dedup_planted(spark, sf):
     """SimHash Hamming-ball pass over documents + planted variants."""
     from epstein_pipeline_spark.config import DedupConfig
     from epstein_pipeline_spark.operators.simhash_pass import simhash_pass
+    from epstein_pipeline_spark.plans.pipeline import simhash_sigs
 
-    return simhash_pass(_planted_corpus(spark, sf), DedupConfig()).select(
+    cfg = DedupConfig()
+    sigs = simhash_sigs(_planted_signatures(_planted_corpus(spark, sf), cfg), cfg)
+    return simhash_pass(sigs, cfg).select(
         "url1", "url2", F.round("score", 4).alias("score"), "method"
     )
 
@@ -1047,14 +1087,13 @@ def q_dedup_clusters_planted(spark, sf):
     from epstein_pipeline_spark.operators.cc import connected_components
     from epstein_pipeline_spark.operators.clusters import build_clusters
     from epstein_pipeline_spark.operators.exact import exact_pairs
-    from epstein_pipeline_spark.operators.lsh import minhash_pass
     from epstein_pipeline_spark.operators.pairs import canonicalize_pairs, union_first_wins
 
     cfg = DedupConfig()
     corpus = _planted_corpus(spark, sf)
     pairs = union_first_wins(
         canonicalize_pairs(exact_pairs(corpus)),
-        canonicalize_pairs(minhash_pass(corpus, cfg)),
+        canonicalize_pairs(_planted_minhash_pairs(corpus, cfg)),
     )
     labels = connected_components(pairs, nodes=corpus.select("url"))
     return build_clusters(labels, pairs, corpus)

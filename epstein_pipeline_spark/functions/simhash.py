@@ -52,6 +52,9 @@ _W_SCALE = 1 << 20
 
 _WTAB = np.zeros(1, dtype=np.int64)  # _WTAB[c] = weight of count c
 
+SIMHASH_BITS = 64  # the signature width make_simhash_udf emits; bands
+# and the similarity score 1 - d/SIMHASH_BITS are defined over it
+
 
 def _weight_int(count: int) -> int:
     """round(log1p(count) * 2^20) — the single weight definition both
@@ -224,7 +227,9 @@ def make_simhash_udf(ngram: int = 2):
     return simhash_sig
 
 
-def simhash_bands_expr(sim_col: Column | str, bands: int = 4, bits: int = 64) -> Column:
+def simhash_bands_expr(
+    sim_col: Column | str, bands: int = 4, bits: int = SIMHASH_BITS
+) -> Column:
     """array<long> of band values: band i = bits [i*w, (i+1)*w) of the
     signature, extracted JVM-side with shiftrightunsigned + mask."""
     c = F.col(sim_col) if isinstance(sim_col, str) else sim_col

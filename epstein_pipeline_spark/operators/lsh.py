@@ -1,10 +1,14 @@
-"""MinHash/LSH candidate generation + Jaccard verification.
+"""MinHash/LSH candidate generation and estimate scoring.
 
 Reference: processors/dedup.py:332-398 — MinHashLSH(threshold=0.8,
-num_perm=128) insert/query, then exact signature-Jaccard verify
->= 0.80. Spark restatement (SURVEY.md J4): signatures -> explode to
-(band_i, band_hash) rows -> equi self-join -> distinct pairs ->
-zip_with signature compare.
+num_perm=128) insert/query, then signature-Jaccard verify >= 0.80.
+Spark restatement (SURVEY.md J4), one operator chain for every caller:
+signatures (``plans.pipeline.signatures_stage``, gated by
+``minhash_sigs``) -> ``band_rows`` -> ``candidate_pairs_from_bands``
+-> ``score_candidates``. The batch plan, incremental ingest and the
+planted entry queries all run it; the accept decision (exact Jaccard
+near the threshold, LCS for the gray zone) is
+``plans.pipeline.minhash_scored_stage``'s.
 
 Skew guard (SURVEY.md §4.1): hot band buckets (boilerplate headers /
 footers hash whole bands identically) blow up quadratically. Buckets
@@ -22,33 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from epstein_pipeline_spark.config import DedupConfig
-from epstein_pipeline_spark.functions.minhash import (
-    band_hashes_expr,
-    make_minhash_udf,
-    signature_jaccard_expr,
-)
-from epstein_pipeline_spark.functions.text import normalize_text_expr
-from epstein_pipeline_spark.session import spread_to_cores
-
-
-def minhash_signatures(
-    df: DataFrame, cfg: DedupConfig, id_col: str = "url", text_col: str = "text"
-) -> DataFrame:
-    """(url, sig: array<long>) for docs passing the length gate
-    (reference dedup.py:346-350: len(text) > 100)."""
-    udf = make_minhash_udf(cfg.shingle_k, cfg.num_perm, cfg.minhash_seed)
-    # at most one wave of Python tasks: small corpora scan as 1-3
-    # splits and are re-dealt to one task per core; an input with
-    # enough splits is read as is (spread_to_cores has the numbers)
-    return (
-        spread_to_cores(
-            df.filter(F.length(text_col) > cfg.minhash_min_len).select(
-                F.col(id_col).alias("url"), normalize_text_expr(text_col).alias("_norm")
-            )
-        )
-        .withColumn("sig", udf("_norm"))
-        .drop("_norm")
-    )
+from epstein_pipeline_spark.functions.minhash import band_hashes_expr, signature_jaccard_expr
 
 
 def band_rows(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -137,8 +115,10 @@ def candidate_pairs_from_bands(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 def score_candidates(pairs: DataFrame, sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Join signatures back and score every candidate with estimated
-    Jaccard (reference mh1.jaccard, dedup.py:386). No threshold —
-    callers split accepted vs gray-zone.
+    Jaccard (reference mh1.jaccard, dedup.py:386), keeping the rows
+    within the estimator margin: 0.10 below the LCS gray zone, so a
+    pair whose exact Jaccard reaches the gray zone is not lost to
+    estimate noise. Callers split accepted vs gray-zone.
 
     (A semi-join prefilter of the signature table on candidate urls —
     the shape that pays off for the TEXT attach join in
@@ -152,33 +132,6 @@ def score_candidates(pairs: DataFrame, sigs: DataFrame, cfg: DedupConfig) -> Dat
         pairs.join(s1, "url1")
         .join(s2, "url2")
         .withColumn("score", signature_jaccard_expr(F.col("_s1"), F.col("_s2"), cfg.num_perm))
+        .filter(F.col("score") >= cfg.lcs_gray_low - 0.10)
         .select("url1", "url2", "score")
     )
-
-
-def verify_jaccard(
-    pairs: DataFrame, sigs: DataFrame, cfg: DedupConfig, method: str = "minhash"
-) -> DataFrame:
-    """Keep candidates with estimated Jaccard >= threshold
-    (reference dedup.py:384-390)."""
-    return (
-        score_candidates(pairs, sigs, cfg)
-        .filter(F.col("score") >= cfg.jaccard_threshold)
-        .select("url1", "url2", "score", F.lit(method).alias("method"))
-    )
-
-
-def minhash_pass(
-    df: DataFrame, cfg: DedupConfig, id_col: str = "url", text_col: str = "text"
-) -> DataFrame:
-    """Full MinHash/LSH pass: signatures -> bands -> candidates ->
-    verified (url1, url2, score, method='minhash')."""
-    sigs = minhash_signatures(df, cfg, id_col, text_col)
-    # the signature subtree feeds the band explosion AND both sides of
-    # the score join; un-materialized it executes per consumer (the
-    # pipeline commits signatures as a stage for the same reason).
-    # Lazy local checkpoint: the first action materializes it once
-    # (measured 3.4 -> 3.0 s on the planted pass).
-    sigs = sigs.localCheckpoint(eager=False)
-    pairs = candidate_pairs_from_bands(band_rows(sigs, cfg), cfg)
-    return verify_jaccard(pairs, sigs, cfg)

@@ -12,12 +12,16 @@ Dataflow (delta = pages not yet in the committed extract):
 
 1. extract/signatures: compute for delta only, APPEND-commit
    (``StageStore.append`` — parent data files are never rewritten,
-   the Iceberg append-snapshot contract).
+   the Iceberg append-snapshot contract). Signatures come from the
+   batch plan's own ``signatures_stage`` and are split by its
+   ``minhash_sigs`` / ``simhash_sigs`` gates, so base and delta
+   signatures are byte-identical by construction.
 2. MinHash candidates: band rows for delta; the committed corpus'
    band rows are semi-joined down to ONLY the buckets delta touches
    (broadcast of the delta's band keys — one narrow scan of the
    committed signature table, no corpus shuffle), then the usual
-   guarded bucket expansion, keeping only pairs with a new side.
+   guarded bucket expansion, keeping only pairs with a new side,
+   scored by ``lsh.score_candidates`` as in batch.
 3. minhash_scored: the batch plan's own ``minhash_scored_stage`` —
    estimate-accept >= 0.9, and one verify pass computing the exact
    Jaccard near the threshold and the LCS ratio for the gray zone —
@@ -27,7 +31,9 @@ Dataflow (delta = pages not yet in the committed extract):
    corpus' per-hash anchor — min url per content_hash, O(1) row per
    old group, built by a groupBy on the hash column only — plus star
    pairs within delta) and SimHash (the same touched-bucket expansion
-   as MinHash). The union is the batch plan's ``pairs_stage``.
+   as MinHash over ``simhash_pass.simhash_band_rows``, verified and
+   scored by the batch pass's ``hamming_edges``). The union is the
+   batch plan's ``pairs_stage``.
 5. labels: incremental connected components. Old labels enter only
    for urls TOUCHED by new edges, as (url, cluster_id) seed edges
    (cluster_id is itself the min-url of the component, so label
@@ -65,23 +71,18 @@ from epstein_pipeline_spark.operators.lsh import (
     bucket_pairs_expr,
     score_candidates,
 )
+from epstein_pipeline_spark.operators.simhash_pass import hamming_edges, simhash_band_rows
 from epstein_pipeline_spark.operators.verify import SCORED_SCHEMA
 from epstein_pipeline_spark.plans.checkpoint import StageStore, resume_filter
 from epstein_pipeline_spark.plans.pipeline import (
     PipelineResult,
     extract_stage,
     minhash_scored_stage,
+    minhash_sigs,
     pairs_stage,
+    signatures_stage,
+    simhash_sigs,
 )
-
-
-def _delta_signatures(docs_delta: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Delta signatures via the pipeline's OWN signatures_stage — one
-    body, so base-run and delta signatures can never drift apart
-    (the cluster-equivalence contract depends on byte-identity)."""
-    from epstein_pipeline_spark.plans.pipeline import signatures_stage
-
-    return signatures_stage(docs_delta, cfg)
 
 
 def _touched_bucket_pairs(
@@ -197,26 +198,15 @@ def _run_incremental_impl(
     # the redo resumes from it, reusing every stage a crashed run
     # already appended (the labels/clusters recompute is idempotent).
     delta_pages = resume_filter(new_pages, old_docs, "url")
-    if use_extracted:
-        docs_delta = extract_stage(delta_pages)
-    else:
-        from epstein_pipeline_spark.functions.text import (
-            content_hash_expr,
-            normalize_text_expr,
-        )
-
-        docs_delta = delta_pages.select(
-            "url", "warc_ts", "lang",
-            F.col("text").alias("extracted_text"),
-            normalize_text_expr("text").alias("text"),
-        ).withColumn("content_hash", content_hash_expr("text"))
 
     def _fresh(stage: str, ref_snap: int) -> bool:
         m = store.latest(stage)
         return m is not None and m.get("for_extract_snapshot") == ref_snap
 
     prior_ex = store.latest("extract")
-    if docs_delta.isEmpty():
+    # extract is row-for-row, so the anti-join alone says whether there
+    # is a delta; the extract pass runs once, inside its append
+    if delta_pages.isEmpty():
         # "clusters" commits LAST — it being fresh means the whole
         # ingest completed (labels alone fresh still needs a redo)
         if _fresh("clusters", prior_ex["snapshot"]):
@@ -246,6 +236,19 @@ def _run_incremental_impl(
                 use_extracted=use_extracted, lcs_check=lcs_check,
             )
             old_labels = store.read(spark, "labels")
+        if use_extracted:
+            docs_delta = extract_stage(delta_pages)
+        else:
+            from epstein_pipeline_spark.functions.text import (
+                content_hash_expr,
+                normalize_text_expr,
+            )
+
+            docs_delta = delta_pages.select(
+                "url", "warc_ts", "lang",
+                F.col("text").alias("extracted_text"),
+                normalize_text_expr("text").alias("text"),
+            ).withColumn("content_hash", content_hash_expr("text"))
         m_ex = timed("extract", lambda: store.append("extract", docs_delta))
     ref_snap = m_ex["snapshot"]
     stamp = {"for_extract_snapshot": ref_snap}
@@ -282,26 +285,12 @@ def _run_incremental_impl(
 
     # 2. delta signatures (old view excludes this delta's snapshot if
     # a crashed run already appended it)
-    sigs_delta = appended("signatures", lambda: _delta_signatures(docs_delta, cfg))
+    sigs_delta = appended("signatures", lambda: signatures_stage(docs_delta, cfg))
     old_sigs = store.read_part(spark, "signatures", "parents")
     sigs_all = store.read(spark, "signatures")
 
-    # shared band projections (used by the prep block below and the
-    # candidate builders)
-    from epstein_pipeline_spark.functions.simhash import (
-        hamming_distance_expr,
-        simhash_bands_expr,
-    )
-
-    mh_delta = sigs_delta.filter(F.col("_len") > cfg.minhash_min_len).select("url", "sig")
-
-    def sh_bands(sigs: DataFrame) -> DataFrame:
-        return sigs.filter(F.col("_len") > cfg.simhash_min_len).select(
-            "url", "simhash",
-            F.posexplode(
-                simhash_bands_expr("simhash", cfg.simhash_bands, cfg.simhash_bits)
-            ).alias("band_i", "band_val"),
-        )
+    mh_delta = minhash_sigs(sigs_delta, cfg)
+    sh_delta_bands = simhash_band_rows(simhash_sigs(sigs_delta, cfg), cfg)
 
     # DELTA KEY-SET PREP (r4 verdict "Amdahl ceiling" fix): the three
     # delta-derived key sets — MinHash band keys, SimHash band keys,
@@ -327,7 +316,7 @@ def _run_incremental_impl(
             )
         if not _fresh("pairs", ref_snap):
             to_prep["sh_keys"] = (
-                sh_bands(sigs_delta).select("band_i", "band_val").distinct()
+                sh_delta_bands.select("band_i", "band_val").distinct()
             )
             to_prep["hashes"] = docs_delta.select("content_hash").distinct()
         if to_prep:
@@ -344,20 +333,15 @@ def _run_incremental_impl(
                 prepped = dict(ex.map(_materialize, to_prep.items()))
 
     # 3. MinHash candidates: delta bands vs touched old buckets
-    mh_old = old_sigs.filter(F.col("_len") > cfg.minhash_min_len).select("url", "sig")
-    mh_all = sigs_all.filter(F.col("_len") > cfg.minhash_min_len).select("url", "sig")
-
     def build_candidates() -> DataFrame:
         pairs = _touched_bucket_pairs(
-            band_rows(mh_old, cfg), band_rows(mh_delta, cfg),
+            band_rows(minhash_sigs(old_sigs, cfg), cfg), band_rows(mh_delta, cfg),
             ["band_i", "band_hash"], ["url"], cfg.band_bucket_cap, bc=bc,
             delta_keys=prepped.get("mh_keys"),
         ).select(
             F.col("p.a.url").alias("url1"), F.col("p.b.url").alias("url2")
         ).dropDuplicates(["url1", "url2"])
-        return score_candidates(pairs, mh_all, cfg).filter(
-            F.col("score") >= cfg.lcs_gray_low - 0.10
-        )
+        return score_candidates(pairs, minhash_sigs(sigs_all, cfg), cfg)
 
     est = appended("minhash_candidates", build_candidates)
 
@@ -398,25 +382,18 @@ def _run_incremental_impl(
         )
         return internal.unionByName(cross)
 
-    # SimHash: the touched-bucket pattern again; signatures ride in the
+    # SimHash: the touched-bucket pattern again, verified and scored
+    # by the batch pass's own projection; signatures ride in the
     # member structs (no join back)
     def build_simhash() -> DataFrame:
-        pairs = _touched_bucket_pairs(
-            sh_bands(old_sigs), sh_bands(sigs_delta),
-            ["band_i", "band_val"], ["url", "simhash"], cfg.band_bucket_cap,
-            bc=bc,
-            delta_keys=prepped.get("sh_keys"),
-        )
-        d = hamming_distance_expr(F.col("p.a.simhash"), F.col("p.b.simhash"))
-        return (
-            pairs.filter(d <= cfg.hamming_max)
-            .select(
-                F.col("p.a.url").alias("url1"),
-                F.col("p.b.url").alias("url2"),
-                (F.lit(1.0) - d / F.lit(64.0)).alias("score"),
-                F.lit("simhash").alias("method"),
-            )
-            .dropDuplicates(["url1", "url2"])
+        return hamming_edges(
+            _touched_bucket_pairs(
+                simhash_band_rows(simhash_sigs(old_sigs, cfg), cfg), sh_delta_bands,
+                ["band_i", "band_val"], ["url", "simhash"], cfg.band_bucket_cap,
+                bc=bc,
+                delta_keys=prepped.get("sh_keys"),
+            ),
+            cfg,
         )
 
     def build_pairs() -> DataFrame:
@@ -449,12 +426,17 @@ def _run_incremental_impl(
     seeds = touched.select(
         F.col("url").alias("url1"), F.col("cluster_id").alias("url2")
     )
+    # small (affected-only) and reused four times below. Persisted
+    # (released by run_incremental's finally), not local-checkpointed:
+    # blocks lost with an executor are recomputed from lineage instead
+    # of failing the ingest
     partial = connected_components(
         pairs_delta.select("url1", "url2").unionByName(seeds),
         nodes=docs_delta.select("url"),
         max_iters=cfg.cc_max_iters,
         checkpoint_every=cfg.cc_checkpoint_every,
-    ).localCheckpoint()  # small (affected-only); reused four times below
+    ).persist()
+    pinned.append(partial)
     affected_old_ids = touched.select("cluster_id").distinct().persist()
     pinned.append(affected_old_ids)
     # every member of an affected old cluster takes its cluster_id's

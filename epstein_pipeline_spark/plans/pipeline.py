@@ -109,13 +109,16 @@ def extract_stage(pages: DataFrame) -> DataFrame:
 
 def signatures_stage(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(url, _len, sig, simhash) for docs passing the shorter length
-    gate — ONE pass for both signature UDFs. Shared by the batch
-    pipeline and incremental ingest: the base/delta cluster-
-    equivalence contract requires both to compute byte-identical
-    signatures for the same document, so there is exactly one body.
+    gate — ONE pass for both signature UDFs, and the only place the
+    engine computes either signature: the batch pipeline, incremental
+    ingest and the planted entry queries all call it, and
+    ``minhash_sigs`` / ``simhash_sigs`` below apply each pass's length
+    gate to its output. The base/delta cluster-equivalence contract
+    requires byte-identical signatures for the same document, so there
+    is exactly one body.
 
-    docs.text is already normalized by extract (normalize is
-    idempotent) — re-normalizing here was a redundant full-corpus
+    docs.text must be normalized already (extract does it; normalize
+    is idempotent) — re-normalizing here was a redundant full-corpus
     regex pass in the single most expensive stage.
 
     One wave of Python tasks (``spread_to_cores``): the scan is
@@ -143,6 +146,18 @@ def signatures_stage(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
         .withColumn("simhash", sh_udf("_norm"))
         .select("url", "_len", "sig", "simhash")
     )
+
+
+def minhash_sigs(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """(url, sig) of the signatures_stage rows passing the MinHash
+    length gate (reference dedup.py:346-350: len(text) > 100)."""
+    return sigs.filter(F.col("_len") > cfg.minhash_min_len).select("url", "sig")
+
+
+def simhash_sigs(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """(url, simhash) of the signatures_stage rows passing the SimHash
+    length gate (reference dedup.py:422-423: len > 50)."""
+    return sigs.filter(F.col("_len") > cfg.simhash_min_len).select("url", "simhash")
 
 
 def minhash_scored_stage(est: DataFrame, docs: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -303,11 +318,10 @@ def _run_dedup_staged(
     all_sigs = staged(
         "signatures", lambda: signatures_stage(docs, cfg), {"docs_in": n_docs}
     )
-    mh_sigs = all_sigs.filter(F.col("_len") > cfg.minhash_min_len).select("url", "sig")
-    sh_sigs = all_sigs.filter(F.col("_len") > cfg.simhash_min_len).select("url", "simhash")
 
     # 3. MinHash/LSH candidate edges: band-join candidates scored by
-    # the cheap signature estimate (wide margin below the gray zone).
+    # the cheap signature estimate (score_candidates keeps a wide
+    # margin below the gray zone).
     # Committed as their OWN checkpoint — the north rule requires
     # candidate-pair edges on durable storage, and reading the snapshot
     # back replaces the round-1 eager localCheckpoint barrier (whose
@@ -315,10 +329,9 @@ def _run_dedup_staged(
     # consumers now read cheap parquet instead of a driver-fenced
     # in-memory copy).
     def build_candidates() -> DataFrame:
+        mh_sigs = minhash_sigs(all_sigs, cfg)
         cands = candidate_pairs_from_bands(band_rows(mh_sigs, cfg), cfg)
-        return score_candidates(cands, mh_sigs, cfg).filter(
-            F.col("score") >= cfg.lcs_gray_low - 0.10  # estimator margin
-        )
+        return score_candidates(cands, mh_sigs, cfg)
 
     est = staged("minhash_candidates", build_candidates)
     n_cand = (store.latest("minhash_candidates") or {}).get("rows", 0)
@@ -336,7 +349,7 @@ def _run_dedup_staged(
         return pairs_stage(
             exact_pairs(docs, hash_col="content_hash"),
             mh_scored,
-            simhash_pass(docs, cfg, sigs=sh_sigs),
+            simhash_pass(simhash_sigs(all_sigs, cfg), cfg),
             cfg,
             lcs_check,
         )

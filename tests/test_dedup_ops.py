@@ -5,13 +5,24 @@ positive on unrelated docs, first-pass-wins merge."""
 from pyspark.sql import functions as F
 
 from epstein_pipeline_spark.config import DedupConfig
+from epstein_pipeline_spark.functions.text import normalize_text_expr
 from epstein_pipeline_spark.operators.exact import exact_all_pairs, exact_pairs
 from epstein_pipeline_spark.operators.lcs import py_lcs_dp, py_lcs_length, py_lcs_ratio
-from epstein_pipeline_spark.operators.lsh import minhash_pass
+from epstein_pipeline_spark.operators.lsh import (
+    band_rows,
+    candidate_pairs_from_bands,
+    score_candidates,
+)
 from epstein_pipeline_spark.operators.pairs import canonicalize_pairs, union_first_wins
 from epstein_pipeline_spark.operators.simhash_pass import simhash_pass
 from epstein_pipeline_spark.operators.verify import verify_pairs
-from epstein_pipeline_spark.plans.pipeline import minhash_scored_stage, pairs_stage
+from epstein_pipeline_spark.plans.pipeline import (
+    minhash_scored_stage,
+    minhash_sigs,
+    pairs_stage,
+    signatures_stage,
+    simhash_sigs,
+)
 
 CFG = DedupConfig(band_bucket_cap=50)
 
@@ -22,6 +33,24 @@ UNRELATED = " ".join(f"totally different material {i*13} regarding maritime law 
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "url string, text string")
+
+
+def _normalized(docs):
+    return docs.select("url", normalize_text_expr("text").alias("text"))
+
+
+def _minhash_edges(docs):
+    """The batch plan's MinHash chain: signatures_stage -> gate ->
+    band candidates -> estimate -> minhash_scored, kept at the
+    threshold."""
+    norm = _normalized(docs)
+    sigs = minhash_sigs(signatures_stage(norm, CFG), CFG)
+    est = score_candidates(candidate_pairs_from_bands(band_rows(sigs, CFG), CFG), sigs, CFG)
+    return minhash_scored_stage(est, norm, CFG).filter(F.col("score") >= CFG.jaccard_threshold)
+
+
+def _simhash_edges(docs):
+    return simhash_pass(simhash_sigs(signatures_stage(_normalized(docs), CFG), CFG), CFG)
 
 
 def test_exact_pair_found_case_whitespace(spark):
@@ -40,7 +69,7 @@ def test_exact_star_pairs_equivalent_closure(spark):
 
 def test_minhash_finds_near_duplicate(spark):
     docs = _docs(spark, [("a", LONG_A), ("b", LONG_B), ("c", UNRELATED)])
-    got = minhash_pass(docs, CFG).collect()
+    got = _minhash_edges(docs).collect()
     assert [(r["url1"], r["url2"]) for r in got] == [("a", "b")]
     assert got[0]["score"] >= CFG.jaccard_threshold
 
@@ -56,8 +85,8 @@ def test_no_false_positive_unrelated(spark):
         )
 
     docs = _docs(spark, [(f"u{i}", rand_doc(i)) for i in range(10)])
-    assert minhash_pass(docs, CFG).count() == 0
-    assert simhash_pass(docs, CFG).count() == 0
+    assert _minhash_edges(docs).count() == 0
+    assert _simhash_edges(docs).count() == 0
     assert exact_all_pairs(docs).count() == 0
 
 
@@ -68,7 +97,7 @@ def test_simhash_finds_reordered(spark):
     reordered[5], reordered[6] = reordered[6], reordered[5]
     b = " ".join(reordered)
     docs = _docs(spark, [("a", a), ("b", b)])
-    got = simhash_pass(docs, CFG).collect()
+    got = _simhash_edges(docs).collect()
     assert [(r["url1"], r["url2"]) for r in got] == [("a", "b")]
 
 

@@ -197,6 +197,133 @@ def test_incremental_already_ingested_is_noop(spark, pages, tmp_path):
     assert res.docs_in == before
 
 
+def test_reingest_decides_noop_without_running_extract(spark, pages, tmp_path, monkeypatch):
+    """Whether there is a delta is decided by the url anti-join alone:
+    re-ingesting pages that are all committed never runs the extract
+    pass (it used to run once for the emptiness check, outside every
+    stage timer, and again inside the extract append)."""
+    import epstein_pipeline_spark.plans.incremental as inc
+
+    sub = pages.filter(F.pmod(F.xxhash64("url"), F.lit(5)) == 0)
+    store = StageStore(tmp_path / "s")
+    run_dedup(spark, sub, store, DedupConfig())
+    clusters_before = store.latest("clusters")
+
+    def no_extract(_pages):
+        raise AssertionError("extract_stage ran for an empty delta")
+
+    monkeypatch.setattr(inc, "extract_stage", no_extract)
+    res = run_incremental(spark, sub, store, DedupConfig())
+    assert res.stage_seconds == {}
+    assert res.docs_in == store.latest("extract")["rows"] == sub.count()
+    assert store.latest("clusters") == clusters_before
+
+
+def test_incremental_releases_every_persisted_frame(spark, pages, tmp_path, monkeypatch):
+    """Every frame run_incremental persists is unpersisted when the run
+    raises (here: the clusters commit) and when it returns (the rerun
+    that completes the interrupted ingest)."""
+    from pyspark import StorageLevel
+
+    is_delta = F.pmod(F.xxhash64("url"), F.lit(4)) == 0
+    cfg = DedupConfig()
+    store = StageStore(tmp_path / "s")
+    run_dedup(spark, pages.filter(~is_delta), store, cfg)
+    delta = pages.filter(is_delta)
+
+    persisted = []
+    frame_cls = type(pages)
+    real_persist = frame_cls.persist
+
+    def recording_persist(self, *args, **kwargs):
+        persisted.append(self)
+        return real_persist(self, *args, **kwargs)
+
+    def released():
+        return all(df.storageLevel == StorageLevel.NONE for df in persisted)
+
+    monkeypatch.setattr(frame_cls, "persist", recording_persist)
+    real_commit = StageStore.commit
+
+    def failing_commit(self, stage, *args, **kwargs):
+        if stage == "clusters":
+            raise RuntimeError("clusters commit failed")
+        return real_commit(self, stage, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(StageStore, "commit", failing_commit)
+        with pytest.raises(RuntimeError, match="clusters commit failed"):
+            run_incremental(spark, delta, store, cfg)
+    # three delta key sets, touched labels, affected ids, the partial
+    # CC labels and the affected sub-labels
+    assert len(persisted) == 7
+    assert released()
+
+    res = run_incremental(spark, delta, store, cfg)
+    assert res.docs_in == pages.count()
+    assert len(persisted) == 7 + 4  # the key sets are fresh: not rebuilt
+    assert released()
+
+
+def test_batch_and_incremental_emit_the_same_minhash_and_simhash_edges(spark, pages, tmp_path):
+    """On a corpus with no exact duplicates and no band bucket above the
+    cap, every minhash and simhash row a fold appends to `pairs` is the
+    batch run's row for that pair: same method, same score. Short
+    near-duplicates (between the two length gates, within Hamming 3)
+    give the fold SimHash-only edges."""
+    import random
+
+    from epstein_pipeline_spark.functions.simhash import py_simhash
+    from epstein_pipeline_spark.functions.text import content_hash_expr, normalize_text_expr
+    from epstein_pipeline_spark.operators.lsh import band_rows
+    from epstein_pipeline_spark.operators.simhash_pass import simhash_band_rows
+    from epstein_pipeline_spark.plans.pipeline import minhash_sigs, simhash_sigs
+
+    r, short = random.Random(7), []
+    while len(short) < 16:
+        a = " ".join(f"t{r.randrange(10**4):04d}" for _ in range(12))
+        b = f"{a} t{r.randrange(10**4):04d}"
+        if bin((py_simhash(a) ^ py_simhash(b)) & (2**64 - 1)).count("1") <= 3:
+            short += [(f"short{len(short):02d}", a), (f"short{len(short) + 1:02d}", b)]
+    docs = pages.select("url", "warc_ts", "lang", "text").unionByName(
+        spark.createDataFrame(short, "url string, text string").select(
+            "url", F.lit("2024-01-01 00:00:00").cast("timestamp").alias("warc_ts"),
+            F.lit("en").alias("lang"), "text",
+        )
+    )
+    first_of_each_hash = docs.groupBy(content_hash_expr(normalize_text_expr("text"))).agg(
+        F.min("url").alias("url")
+    )
+    corpus = docs.join(first_of_each_hash.select("url"), "url", "left_semi")
+    cfg = DedupConfig()
+    is_delta = F.pmod(F.xxhash64("url"), F.lit(4)) == 0
+
+    batch_store = StageStore(tmp_path / "full")
+    batch = run_dedup(spark, corpus, batch_store, cfg, use_extracted=False)
+    assert batch.pairs.filter(F.col("method") == "exact").count() == 0
+    # no band bucket of either pass reaches the chain+star guard
+    sigs = batch_store.read(spark, "signatures")
+    for bands, key in [
+        (band_rows(minhash_sigs(sigs, cfg), cfg), "band_hash"),
+        (simhash_band_rows(simhash_sigs(sigs, cfg), cfg), "band_val"),
+    ]:
+        sizes = bands.groupBy("band_i", key).count()
+        assert sizes.agg(F.max("count")).first()[0] <= cfg.band_bucket_cap
+
+    store = StageStore(tmp_path / "inc")
+    run_dedup(spark, corpus.filter(~is_delta), store, cfg, use_extracted=False)
+    run_incremental(spark, corpus.filter(is_delta), store, cfg, use_extracted=False)
+
+    cols = ["url1", "url2", "method", "score"]
+    folded = {
+        tuple(r) for r in store.read_part(spark, "pairs", "delta")
+        .filter(F.col("method").isin("minhash", "simhash")).select(*cols).collect()
+    }
+    batch_rows = {tuple(r) for r in batch.pairs.select(*cols).collect()}
+    assert {m for _, _, m, _ in folded} == {"minhash", "simhash"}
+    assert folded <= batch_rows
+
+
 def test_two_sequential_ingests_match_full_run(spark, pages, tmp_path):
     """Append-on-append: base + ingest(d1) + ingest(d2) must still
     equal one full run (manifest chains survive a second append)."""
@@ -252,8 +379,7 @@ def test_ingest_crash_recovery_resumes_and_matches_full(spark, pages, tmp_path):
     ingest must detect the stale clusters (anti-join sees nothing
     new), resume from the in-flight delta snapshot, reuse the
     already-appended stages, and converge to the full-run partition."""
-    from epstein_pipeline_spark.plans.incremental import _delta_signatures
-    from epstein_pipeline_spark.plans.pipeline import extract_stage
+    from epstein_pipeline_spark.plans.pipeline import extract_stage, signatures_stage
 
     is_delta = F.pmod(F.xxhash64("url"), F.lit(4)) == 0
     base, delta = pages.filter(~is_delta), pages.filter(is_delta)
@@ -269,7 +395,7 @@ def test_ingest_crash_recovery_resumes_and_matches_full(spark, pages, tmp_path):
     # snapshot id — the freshness rule compares ids, not timestamps
     store.append(
         "signatures",
-        _delta_signatures(committed_delta, cfg),
+        signatures_stage(committed_delta, cfg),
         extra={"for_extract_snapshot": m_ex["snapshot"]},
     )
     clusters_before = store.latest("clusters")["committed_at"]
@@ -578,11 +704,11 @@ def test_compact_extract_refuses_pending_ingest(spark, tmp_path):
     m_ex = store.append("extract", docs_delta)
     # ...and the crash also landed after the signatures append (the
     # chain now encodes recovery structure for BOTH stages)
-    from epstein_pipeline_spark.plans.incremental import _delta_signatures
+    from epstein_pipeline_spark.plans.pipeline import signatures_stage
 
     store.append(
         "signatures",
-        _delta_signatures(spark.read.parquet(m_ex["path"]), DedupConfig()),
+        signatures_stage(spark.read.parquet(m_ex["path"]), DedupConfig()),
         extra={"for_extract_snapshot": m_ex["snapshot"]},
     )
 

@@ -9,9 +9,7 @@ from pyspark.sql import functions as F
 
 from epstein_pipeline_spark.config import DedupConfig
 from epstein_pipeline_spark.functions.text import content_hash_expr, normalize_text_expr
-from epstein_pipeline_spark.operators.lsh import minhash_signatures
-from epstein_pipeline_spark.operators.simhash_pass import simhash_signatures
-from epstein_pipeline_spark.plans.pipeline import signatures_stage
+from epstein_pipeline_spark.plans.pipeline import minhash_sigs, signatures_stage
 
 SF = "/root/testdata/sf0.01"
 
@@ -109,7 +107,8 @@ def test_band_candidates_single_shuffle(spark, pages):
     from epstein_pipeline_spark.operators.lsh import band_rows, candidate_pairs_from_bands
 
     cfg = DedupConfig(band_bucket_cap=100)
-    sigs = minhash_signatures(pages.select("url", "text"), cfg).localCheckpoint(eager=True)
+    docs = pages.select("url", normalize_text_expr("text").alias("text"))
+    sigs = minhash_sigs(signatures_stage(docs, cfg), cfg).localCheckpoint(eager=True)
     cands = candidate_pairs_from_bands(band_rows(sigs, cfg), cfg)
     import re
 
@@ -266,12 +265,9 @@ def test_repetition_scores_is_shuffle_free(spark):
     assert "text" in read_schema and "lang" not in read_schema
 
 
-@pytest.mark.parametrize(
-    "sig", [signatures_stage, minhash_signatures, simhash_signatures],
-    ids=["signatures_stage", "minhash_signatures", "simhash_signatures"],
-)
+@pytest.mark.parametrize("sig", [signatures_stage], ids=["signatures_stage"])
 def test_signature_stages_run_one_wave(spark, sig):
-    """Every Python signature stage runs one wave of tasks: an input
+    """The one Python signature stage runs one wave of tasks: an input
     with >= one partition per core is read as is (no Exchange), and an
     under-partitioned one is re-dealt to exactly one partition per
     core."""
