@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from epstein_pipeline_spark.functions.vectors import cosine_expr, make_cosine_to_query_udf
+from epstein_pipeline_spark.operators.lsh import bucket_pairs
 
 
 def cosine_pairs_brute(
@@ -104,27 +105,20 @@ def cosine_pairs_rhp(
     Shuffle shape (the round-1 finding): bucket member structs carry
     IDS ONLY — the float vector never rides through the n_tables band
     explosion (that shuffled 8-16 copies of every embedding). One
-    groupBy produces candidate pairs via the same JVM-side
-    ``bucket_pairs_expr`` as the text LSH pass (no sizes-join +
-    self-join cascade), and vectors join back onto the (sublinear)
+    groupBy produces candidate pairs via the text LSH pass's own
+    ``lsh.bucket_pairs`` with ``struct(_id)`` members (no sizes-join
+    + self-join cascade), and vectors join back onto the (sublinear)
     candidate set for the exact verify. Oversized buckets degrade to
     chain+star edges instead of being dropped — strictly better recall
     than the old ``_bsz <= cap`` filter at the same O(n) edge cost.
     """
-    from epstein_pipeline_spark.operators.lsh import bucket_pairs_expr
-
     udf = make_rhp_udf(None, n_bits, n_tables)
     e = embs.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")).withColumn(
         "_buckets", udf("_v")
     )
     bands = e.select("_id", F.posexplode("_buckets").alias("table_i", "bucket"))
-    buckets = (
-        bands.groupBy("table_i", "bucket")
-        .agg(F.array_sort(F.collect_list(F.struct("_id"))).alias("_ms"))
-        .filter(F.size("_ms") >= 2)
-    )
     cands = (
-        buckets.select(F.explode(bucket_pairs_expr(F.col("_ms"), bucket_cap)).alias("p"))
+        bucket_pairs(bands, ["table_i", "bucket"], F.struct("_id"), bucket_cap)
         .select(F.col("p.a._id").alias("id1"), F.col("p.b._id").alias("id2"))
         .dropDuplicates(["id1", "id2"])
     )

@@ -10,9 +10,16 @@ planted entry queries all run it; the accept decision (exact Jaccard
 near the threshold, LCS for the gray zone) is
 ``plans.pipeline.minhash_scored_stage``'s.
 
+``bucket_pairs`` is the one bucket -> candidate-pair body of the
+engine: MinHash bands here, SimHash bands (``simhash_pass``), the
+incremental touched buckets (``plans.incremental``), blocked pairs
+(``pairs.guarded_block_pairs``) and the RHP cosine pass
+(``embed_pass``) all group, sort and expand through it; each caller
+keeps only its own pre-filter and projection.
+
 Skew guard (SURVEY.md §4.1): hot band buckets (boilerplate headers /
 footers hash whole bands identically) blow up quadratically. Buckets
-larger than ``bucket_cap`` emit a sorted adjacent CHAIN + star to the
+larger than the cap emit a sorted adjacent CHAIN + star to the
 bucket min instead of all pairs — O(n) edges that keep every true
 cluster connected (members of one bucket share a full band, i.e. are
 already high-Jaccard candidates), at the price of a few extra verify
@@ -81,18 +88,36 @@ def bucket_pairs_expr(members: Column, cap: int) -> Column:
     return guarded
 
 
+def bucket_pairs(rows: DataFrame, keys: list[str], member: Column, cap: int) -> DataFrame:
+    """Guarded pair expansion of every bucket: one row per emitted
+    pair, a struct column ``p`` with fields ``a`` < ``b`` (members in
+    sort order).
+
+    groupBy ``keys`` -> ``array_sort(collect_list(member))`` -> buckets
+    of >= 2 members -> ``bucket_pairs_expr`` -> explode. A struct
+    ``member`` sorts by its first field, so capped buckets emit their
+    chain+star edges in that field's order whatever rides along.
+    ONE shuffle (the groupBy); callers filter and project ``p``."""
+    return (
+        rows.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(member)).alias("_ms"))
+        .filter(F.size("_ms") >= 2)
+        .select(F.explode(bucket_pairs_expr(F.col("_ms"), cap)).alias("p"))
+    )
+
+
 def candidate_pairs_from_bands(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Distinct (url1 < url2) candidate pairs from band buckets, with
     the oversized-bucket chain+star guard.
 
-    One shuffle: groupBy band key -> sorted member array -> JVM pair
-    expansion -> explode. (A two-pass hot-bucket precount — aggregate
-    counts first, semi-join members back — was tried in round 6 and
-    REJECTED by measurement: band keys are ~95% unique, so the count
-    aggregate shuffles and hash-aggregates the same 2M rows the
-    collect_list would, and the total went 4.7 s -> 10.3 s at 4
-    cores/128k. The exchange of (band, url) rows is the irreducible
-    cost of banding; see OPTIMIZATION_r06.md.)
+    One shuffle: ``bucket_pairs`` over the band key. (A two-pass
+    hot-bucket precount — aggregate counts first, semi-join members
+    back — was tried in round 6 and REJECTED by measurement: band keys
+    are ~95% unique, so the count aggregate shuffles and
+    hash-aggregates the same 2M rows the collect_list would, and the
+    total went 4.7 s -> 10.3 s at 4 cores/128k. The exchange of (band,
+    url) rows is the irreducible cost of banding; see
+    OPTIMIZATION_r06.md.)
 
     Members aggregate as PLAIN url strings, not struct(url): a
     single-field struct adds nothing, and ``array_sort`` over structs
@@ -100,14 +125,7 @@ def candidate_pairs_from_bands(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
     raw binary — measured 7.9 -> 6.5 s at 4 cores/128k for the scored
     candidate chain, identical pair set (struct(url) ordering IS url
     ordering, so chain/star edges in capped buckets do not move)."""
-    buckets = (
-        bands.groupBy("band_i", "band_hash")
-        .agg(F.array_sort(F.collect_list("url")).alias("_ms"))
-        .filter(F.size("_ms") >= 2)
-    )
-    pairs = buckets.select(
-        F.explode(bucket_pairs_expr(F.col("_ms"), cfg.band_bucket_cap)).alias("p")
-    )
+    pairs = bucket_pairs(bands, ["band_i", "band_hash"], F.col("url"), cfg.band_bucket_cap)
     return pairs.select(
         F.col("p.a").alias("url1"), F.col("p.b").alias("url2")
     ).dropDuplicates(["url1", "url2"])

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from epstein_pipeline_spark.operators.lsh import bucket_pairs
+
 PASS_PRIORITY = {
     "exact": 0,
     "bates": 1,
@@ -31,13 +33,13 @@ def guarded_block_pairs(
 
     The reference caps blocked-comparison blowup with a max-pairs
     memory guard (``config.py:130`` splink_max_pairs,
-    ``entity_resolution.py:210``); the Spark restatement reuses the LSH
-    bucket guard: groupBy block key -> sorted member array ->
-    ``bucket_pairs_expr`` (all C(n,2) pairs for blocks <= cap, sorted
-    adjacent chain + star-to-min for oversized blocks — O(n) edges
-    that keep every true cluster connected). ONE shuffle; a hot block
-    (a common first name / first title token at web scale) emits O(n)
-    pairs instead of becoming a quadratic task.
+    ``entity_resolution.py:210``); the Spark restatement is the LSH
+    bucket expansion itself, ``lsh.bucket_pairs`` over the block key
+    with ``struct(*payload_cols)`` members (all C(n,2) pairs for
+    blocks <= cap, sorted adjacent chain + star-to-min for oversized
+    blocks — O(n) edges that keep every true cluster connected). ONE
+    shuffle; a hot block (a common first name / first title token at
+    web scale) emits O(n) pairs instead of becoming a quadratic task.
 
     Rows with a NULL block key never pair (same as the equi-join they
     replace). Returns struct columns ``a`` and ``b``; the FIRST entry
@@ -46,18 +48,12 @@ def guarded_block_pairs(
     and would otherwise emit an id-equal self 'pair' the strict `<`
     join this replaces structurally excluded).
     """
-    from epstein_pipeline_spark.operators.lsh import bucket_pairs_expr
-
     id_col = payload_cols[0]
-    buckets = (
-        df.filter(F.col(block_col).isNotNull())
-        .groupBy(block_col)
-        .agg(F.array_sort(F.collect_list(F.struct(*payload_cols))).alias("_ms"))
-        .filter(F.size("_ms") >= 2)
-    )
     return (
-        buckets.select(F.explode(bucket_pairs_expr(F.col("_ms"), cap)).alias("_p"))
-        .select(F.col("_p.a").alias("a"), F.col("_p.b").alias("b"))
+        bucket_pairs(
+            df.filter(F.col(block_col).isNotNull()), [block_col], F.struct(*payload_cols), cap
+        )
+        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
         .filter(F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
     )
 

@@ -26,7 +26,7 @@ from epstein_pipeline_spark.functions.simhash import (
     hamming_distance_expr,
     simhash_bands_expr,
 )
-from epstein_pipeline_spark.operators.lsh import bucket_pairs_expr
+from epstein_pipeline_spark.operators.lsh import bucket_pairs
 
 
 def simhash_band_rows(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -68,16 +68,13 @@ def simhash_pass(sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(url1, url2, score, method='simhash') pairs with Hamming <= d
     over committed (url, simhash) signatures.
 
-    One shuffle: groupBy band bucket -> sorted (url, simhash) member
-    array -> JVM pair expansion with the oversized-bucket chain+star
+    One shuffle: ``lsh.bucket_pairs`` over the band bucket with
+    (url, simhash) members, under the oversized-bucket chain+star
     guard (boilerplate-identical pages make 16-bit bands hot keys)."""
-    buckets = (
-        simhash_band_rows(sigs, cfg)
-        .groupBy("band_i", "band_val")
-        .agg(F.array_sort(F.collect_list(F.struct("url", "simhash"))).alias("_ms"))
-        .filter(F.size("_ms") >= 2)
-    )
     return hamming_edges(
-        buckets.select(F.explode(bucket_pairs_expr(F.col("_ms"), cfg.band_bucket_cap)).alias("p")),
+        bucket_pairs(
+            simhash_band_rows(sigs, cfg), ["band_i", "band_val"],
+            F.struct("url", "simhash"), cfg.band_bucket_cap,
+        ),
         cfg,
     )

@@ -19,9 +19,11 @@ Dataflow (delta = pages not yet in the committed extract):
 2. MinHash candidates: band rows for delta; the committed corpus'
    band rows are semi-joined down to ONLY the buckets delta touches
    (broadcast of the delta's band keys — one narrow scan of the
-   committed signature table, no corpus shuffle), then the usual
-   guarded bucket expansion, keeping only pairs with a new side,
-   scored by ``lsh.score_candidates`` as in batch.
+   committed signature table, no corpus shuffle), then the batch
+   plan's own guarded expansion (``lsh.bucket_pairs``), keeping only
+   pairs with a new side, scored by ``lsh.score_candidates`` as in
+   batch. Each semi-join builds its distinct key set inside the stage
+   that consumes it; nothing is materialized ahead of its stage.
 3. minhash_scored: the batch plan's own ``minhash_scored_stage`` —
    estimate-accept >= 0.9, and one verify pass computing the exact
    Jaccard near the threshold and the LCS ratio for the gray zone —
@@ -66,11 +68,7 @@ from pyspark.sql import functions as F
 from epstein_pipeline_spark.config import DEFAULT_CONFIG, DedupConfig
 from epstein_pipeline_spark.operators.cc import connected_components
 from epstein_pipeline_spark.operators.clusters import build_clusters
-from epstein_pipeline_spark.operators.lsh import (
-    band_rows,
-    bucket_pairs_expr,
-    score_candidates,
-)
+from epstein_pipeline_spark.operators.lsh import band_rows, bucket_pairs, score_candidates
 from epstein_pipeline_spark.operators.simhash_pass import hamming_edges, simhash_band_rows
 from epstein_pipeline_spark.operators.verify import SCORED_SCHEMA
 from epstein_pipeline_spark.plans.checkpoint import StageStore, resume_filter
@@ -80,6 +78,7 @@ from epstein_pipeline_spark.plans.pipeline import (
     minhash_scored_stage,
     minhash_sigs,
     pairs_stage,
+    pre_extracted_stage,
     signatures_stage,
     simhash_sigs,
 )
@@ -89,47 +88,34 @@ def _touched_bucket_pairs(
     bands_old: DataFrame, bands_delta: DataFrame, key_cols: list[str],
     member_cols: list[str], cap: int,
     bc=F.broadcast,
-    delta_keys: DataFrame | None = None,
 ) -> DataFrame:
-    """Guarded bucket pair expansion restricted to buckets a delta row
-    touches, emitting only pairs with >= 1 new side.
+    """``lsh.bucket_pairs`` restricted to buckets a delta row touches,
+    emitting only pairs with >= 1 new side.
 
     The committed corpus' band rows are cut down FIRST by a semi-join
-    on the delta's bucket keys — the only full pass over old data is
-    the narrow band projection feeding that semi-join. ``bc`` wraps
-    the delta-derived key set: ``F.broadcast`` for daily-increment
-    deltas (no corpus shuffle at all), identity for backfill-sized
-    deltas past ``ingest_broadcast_max_rows`` (a shuffled semi-join —
-    one corpus exchange beats an over-limit broadcast). Within a
-    bucket the usual chain+star guard applies; filtering to
-    new-touching pairs preserves every new member's connectivity (its
-    chain/star edges all touch it), and old-old connectivity is
-    already represented by the committed labels.
-
-    ``delta_keys`` lets the caller hand in a PRE-MATERIALIZED
-    (persisted) key set — run_incremental builds all its delta key
-    sets concurrently up front instead of serially inside each
-    consumer's first action (the r4 Amdahl-ceiling fix).
+    on the delta's distinct bucket keys — the only full pass over old
+    data is the narrow band projection feeding that semi-join. ``bc``
+    wraps the delta-derived key set: ``F.broadcast`` for
+    daily-increment deltas (no corpus shuffle at all), identity for
+    backfill-sized deltas past ``ingest_broadcast_max_rows`` (a
+    shuffled semi-join — one corpus exchange beats an over-limit
+    broadcast). The touched old rows and the delta rows expand as one
+    bucket set, ``is_new`` riding last in the member struct so the
+    sort order (and a capped bucket's chain+star edges) is the batch
+    plan's; filtering to new-touching pairs preserves every new
+    member's connectivity (its chain/star edges all touch it), and
+    old-old connectivity is already represented by the committed
+    labels.
     """
-    if delta_keys is None:
-        delta_keys = bands_delta.select(*key_cols).distinct()
-    old_touched = bands_old.join(bc(delta_keys), key_cols, "left_semi")
+    old_touched = bands_old.join(
+        bc(bands_delta.select(*key_cols).distinct()), key_cols, "left_semi"
+    )
     members = old_touched.withColumn("is_new", F.lit(False)).unionByName(
         bands_delta.withColumn("is_new", F.lit(True))
     )
-    buckets = (
-        members.groupBy(*key_cols)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(*member_cols, "is_new"))
-            ).alias("_ms")
-        )
-        .filter(F.size("_ms") >= 2)
+    return bucket_pairs(members, key_cols, F.struct(*member_cols, "is_new"), cap).filter(
+        F.col("p.a.is_new") | F.col("p.b.is_new")
     )
-    pairs = buckets.select(
-        F.explode(bucket_pairs_expr(F.col("_ms"), cap)).alias("p")
-    ).filter(F.col("p.a.is_new") | F.col("p.b.is_new"))
-    return pairs
 
 
 def run_incremental(
@@ -144,8 +130,8 @@ def run_incremental(
     ``run_dedup`` (or a prior ``run_incremental``). Returns the same
     PipelineResult shape with updated full tables.
 
-    Every frame the ingest persists (key-set prep, affected-only
-    label/cluster views) is released in a ``finally`` — a failed run
+    Every frame the ingest persists (the affected-only label/cluster
+    views) is released in a ``finally`` — a failed run
     (commit conflict from a concurrent writer, a failed stage action)
     must not leak pinned executor storage into the caller's session
     for every retry."""
@@ -205,8 +191,12 @@ def _run_incremental_impl(
 
     prior_ex = store.latest("extract")
     # extract is row-for-row, so the anti-join alone says whether there
-    # is a delta; the extract pass runs once, inside its append
-    if delta_pages.isEmpty():
+    # is a delta; the extract pass runs once, inside its append, and
+    # the probe's time counts toward extract when an extract runs
+    t0 = time.time()
+    no_delta = delta_pages.isEmpty()
+    probe_s = time.time() - t0
+    if no_delta:
         # "clusters" commits LAST — it being fresh means the whole
         # ingest completed (labels alone fresh still needs a redo)
         if _fresh("clusters", prior_ex["snapshot"]):
@@ -236,20 +226,9 @@ def _run_incremental_impl(
                 use_extracted=use_extracted, lcs_check=lcs_check,
             )
             old_labels = store.read(spark, "labels")
-        if use_extracted:
-            docs_delta = extract_stage(delta_pages)
-        else:
-            from epstein_pipeline_spark.functions.text import (
-                content_hash_expr,
-                normalize_text_expr,
-            )
-
-            docs_delta = delta_pages.select(
-                "url", "warc_ts", "lang",
-                F.col("text").alias("extracted_text"),
-                normalize_text_expr("text").alias("text"),
-            ).withColumn("content_hash", content_hash_expr("text"))
-        m_ex = timed("extract", lambda: store.append("extract", docs_delta))
+        extract = extract_stage if use_extracted else pre_extracted_stage
+        m_ex = timed("extract", lambda: store.append("extract", extract(delta_pages)))
+        timings["extract"] += probe_s
     ref_snap = m_ex["snapshot"]
     stamp = {"for_extract_snapshot": ref_snap}
     docs_all = store.read(spark, "extract")
@@ -277,9 +256,8 @@ def _run_incremental_impl(
         if m is not None and m.get("for_extract_snapshot") == ref_snap:
             timings[stage] = 0.0
         else:
-            df = build()
             t0 = time.time()
-            m = store.append(stage, df, extra=stamp)
+            m = store.append(stage, build(), extra=stamp)
             timings[stage] = time.time() - t0
         return store.read_part(spark, stage, "delta", m)
 
@@ -289,55 +267,12 @@ def _run_incremental_impl(
     old_sigs = store.read_part(spark, "signatures", "parents")
     sigs_all = store.read(spark, "signatures")
 
-    mh_delta = minhash_sigs(sigs_delta, cfg)
-    sh_delta_bands = simhash_band_rows(simhash_sigs(sigs_delta, cfg), cfg)
-
-    # DELTA KEY-SET PREP (r4 verdict "Amdahl ceiling" fix): the three
-    # delta-derived key sets — MinHash band keys, SimHash band keys,
-    # content hashes — each feed a broadcast semi-join downstream.
-    # Left alone, each broadcast builds SERIALLY on the driver inside
-    # its consumer's first action (scan + distinct + collect per set,
-    # back to back), a cost that is flat in delta size and becomes the
-    # ingest job's Amdahl ceiling on a many-executor cluster. Here the
-    # sets are persisted and materialized CONCURRENTLY in one up-front
-    # step (Spark schedules jobs from multiple driver threads onto the
-    # same executor pool), so the serial tail collapses to ~max
-    # instead of sum, and each consumer's broadcast build is a scan of
-    # a cached table. Only sets whose consumer stage is stale for this
-    # delta are built (a crash-recovered stage skips its prep), and
-    # only on the broadcast path (a backfill-sized delta shuffles —
-    # persisting corpus-scale key sets would just spill).
-    prepped: dict[str, DataFrame] = {}
-    if small_delta:
-        to_prep: dict[str, DataFrame] = {}
-        if not _fresh("minhash_candidates", ref_snap):
-            to_prep["mh_keys"] = (
-                band_rows(mh_delta, cfg).select("band_i", "band_hash").distinct()
-            )
-        if not _fresh("pairs", ref_snap):
-            to_prep["sh_keys"] = (
-                sh_delta_bands.select("band_i", "band_val").distinct()
-            )
-            to_prep["hashes"] = docs_delta.select("content_hash").distinct()
-        if to_prep:
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _materialize(item):
-                name, df = item
-                df = df.persist()
-                pinned.append(df)
-                df.count()
-                return name, df
-
-            with ThreadPoolExecutor(len(to_prep)) as ex:
-                prepped = dict(ex.map(_materialize, to_prep.items()))
-
     # 3. MinHash candidates: delta bands vs touched old buckets
     def build_candidates() -> DataFrame:
         pairs = _touched_bucket_pairs(
-            band_rows(minhash_sigs(old_sigs, cfg), cfg), band_rows(mh_delta, cfg),
+            band_rows(minhash_sigs(old_sigs, cfg), cfg),
+            band_rows(minhash_sigs(sigs_delta, cfg), cfg),
             ["band_i", "band_hash"], ["url"], cfg.band_bucket_cap, bc=bc,
-            delta_keys=prepped.get("mh_keys"),
         ).select(
             F.col("p.a.url").alias("url1"), F.col("p.b.url").alias("url2")
         ).dropDuplicates(["url1", "url2"])
@@ -360,11 +295,7 @@ def _run_incremental_impl(
         # instead of shuffling the whole committed corpus by
         # content_hash on every ingest — the same pattern as the
         # band-key semi-join in _touched_bucket_pairs
-        delta_hashes = (
-            prepped.get("hashes")
-            if prepped.get("hashes") is not None
-            else docs_delta.select("content_hash").distinct()
-        )
+        delta_hashes = docs_delta.select("content_hash").distinct()
         old_anchor = (
             old_docs.join(bc(delta_hashes), "content_hash", "left_semi")
             .groupBy("content_hash")
@@ -388,10 +319,10 @@ def _run_incremental_impl(
     def build_simhash() -> DataFrame:
         return hamming_edges(
             _touched_bucket_pairs(
-                simhash_band_rows(simhash_sigs(old_sigs, cfg), cfg), sh_delta_bands,
+                simhash_band_rows(simhash_sigs(old_sigs, cfg), cfg),
+                simhash_band_rows(simhash_sigs(sigs_delta, cfg), cfg),
                 ["band_i", "band_val"], ["url", "simhash"], cfg.band_bucket_cap,
                 bc=bc,
-                delta_keys=prepped.get("sh_keys"),
             ),
             cfg,
         )
@@ -415,8 +346,7 @@ def _run_incremental_impl(
     # persist the affected-only frames: each is consumed by MULTIPLE
     # downstream broadcast sites (relabel semi, untouched anti,
     # clusters keep anti), and without the persist every site's
-    # broadcast build re-runs the O(labels) semi-join scan serially —
-    # the same flat driver-side cost the key-set prep removes upstream
+    # broadcast build re-runs the O(labels) semi-join scan serially
     touched = old_labels.join(bc(edge_urls), "url", "left_semi").persist()
     pinned.append(touched)
     # seed edge (member -> its old cluster_id): label space == node
@@ -457,10 +387,8 @@ def _run_incremental_impl(
     # anti-join against the labels table
     fresh = partial.join(bc(docs_delta.select("url")), "url", "left_semi")
     labels = untouched.unionByName(relabeled).unionByName(fresh).dropDuplicates(["url"])
-    timings["labels"] = time.time() - t0
-    t0 = time.time()
     store.commit("labels", labels, extra=stamp)  # full republication (Iceberg: MERGE INTO)
-    timings["labels"] += time.time() - t0
+    timings["labels"] = time.time() - t0
     labels = store.read(spark, "labels")
 
     # 7. clusters: drop every affected/new component's rows, rebuild
@@ -488,8 +416,7 @@ def _run_incremental_impl(
         rebuilt = build_clusters(sub_labels, sub_pairs, docs_all)
         return keep.unionByName(rebuilt)
 
-    clusters = build_clusters_inc()
-    timed("clusters", lambda: store.commit("clusters", clusters, extra=stamp))
+    timed("clusters", lambda: store.commit("clusters", build_clusters_inc(), extra=stamp))
     clusters = store.read(spark, "clusters")
 
     return PipelineResult(

@@ -107,6 +107,20 @@ def extract_stage(pages: DataFrame) -> DataFrame:
     )
 
 
+def pre_extracted_stage(pages: DataFrame) -> DataFrame:
+    """``extract_stage``'s output columns for pages whose ``text`` is
+    already extracted (``use_extracted=False`` in batch and
+    incremental runs alike): the text is kept as ``extracted_text``,
+    normalized by ``normalize_text_expr`` (the JVM twin of
+    ``py_normalize_text``) and hashed — one projection, no extract
+    chain."""
+    return pages.select(
+        "url", "warc_ts", "lang",
+        F.col("text").alias("extracted_text"),
+        normalize_text_expr("text").alias("text"),
+    ).withColumn("content_hash", content_hash_expr("text"))
+
+
 def signatures_stage(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(url, _len, sig, simhash) for docs passing the shorter length
     gate — ONE pass for both signature UDFs, and the only place the
@@ -292,17 +306,8 @@ def _run_dedup_staged(
     # 1. extract (skips rows already extracted when resuming a partial
     # run). The pre-extracted path commits under the same stage name so
     # resume and incremental ingest see one contract either way.
-    if use_extracted:
-        docs = staged("extract", lambda: extract_stage(pages))
-    else:
-        docs = staged(
-            "extract",
-            lambda: pages.select(
-                "url", "warc_ts", "lang",
-                F.col("text").alias("extracted_text"),
-                normalize_text_expr("text").alias("text"),
-            ).withColumn("content_hash", content_hash_expr("text")),
-        )
+    extract = extract_stage if use_extracted else pre_extracted_stage
+    docs = staged("extract", lambda: extract(pages))
 
     # doc count from the committed manifest (free — no extra Spark job)
     m = store.latest("extract")

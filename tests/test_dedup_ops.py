@@ -10,6 +10,7 @@ from epstein_pipeline_spark.operators.exact import exact_all_pairs, exact_pairs
 from epstein_pipeline_spark.operators.lcs import py_lcs_dp, py_lcs_length, py_lcs_ratio
 from epstein_pipeline_spark.operators.lsh import (
     band_rows,
+    bucket_pairs,
     candidate_pairs_from_bands,
     score_candidates,
 )
@@ -51,6 +52,39 @@ def _minhash_edges(docs):
 
 def _simhash_edges(docs):
     return simhash_pass(simhash_sigs(signatures_stage(_normalized(docs), CFG), CFG), CFG)
+
+
+def test_capped_bucket_emits_the_same_edges_for_every_member_shape(spark):
+    """A band bucket above ``band_bucket_cap`` emits the sorted chain +
+    star-to-min edges whether its members are url strings (batch
+    MinHash), (url, payload) structs (SimHash) or ride through the
+    incremental touched-bucket expansion with an empty old side; a
+    bucket at the cap still emits all pairs."""
+    from epstein_pipeline_spark.plans.incremental import _touched_bucket_pairs
+
+    cfg = DedupConfig(band_bucket_cap=4)
+    hot = [f"u{i}" for i in (5, 0, 8, 3, 6, 1, 7)]  # 7 members > cap, unsorted
+    small = ["v2", "v0", "v1", "v3"]  # exactly cap: all pairs
+    bands = spark.createDataFrame(
+        [(u, 0, 11, i) for i, u in enumerate(hot)] + [(u, 1, 22, i) for i, u in enumerate(small)],
+        "url string, band_i int, band_hash long, payload long",
+    )
+    keys = ["band_i", "band_hash"]
+    m = sorted(hot)
+    want = {(m[i], m[i + 1]) for i in range(len(m) - 1)} | {(m[0], x) for x in m[2:]}
+    want |= {(a, b) for a in small for b in small if a < b}
+
+    def edges(df, a, b):
+        return {(r[0], r[1]) for r in df.select(a, b).collect()}
+
+    assert len(want) == 6 + 5 + 6
+    assert edges(candidate_pairs_from_bands(bands, cfg), "url1", "url2") == want
+    structs = bucket_pairs(bands, keys, F.struct("url", "payload"), cfg.band_bucket_cap)
+    assert edges(structs, "p.a.url", "p.b.url") == want
+    touched = _touched_bucket_pairs(
+        bands.limit(0), bands, keys, ["url", "payload"], cfg.band_bucket_cap
+    )
+    assert edges(touched, "p.a.url", "p.b.url") == want
 
 
 def test_exact_pair_found_case_whitespace(spark):

@@ -254,14 +254,14 @@ def test_incremental_releases_every_persisted_frame(spark, pages, tmp_path, monk
         m.setattr(StageStore, "commit", failing_commit)
         with pytest.raises(RuntimeError, match="clusters commit failed"):
             run_incremental(spark, delta, store, cfg)
-    # three delta key sets, touched labels, affected ids, the partial
-    # CC labels and the affected sub-labels
-    assert len(persisted) == 7
+    # touched labels, affected ids, the partial CC labels and the
+    # affected sub-labels
+    assert len(persisted) == 4
     assert released()
 
     res = run_incremental(spark, delta, store, cfg)
     assert res.docs_in == pages.count()
-    assert len(persisted) == 7 + 4  # the key sets are fresh: not rebuilt
+    assert len(persisted) == 4 + 4  # the rerun persists the same four
     assert released()
 
 

@@ -127,7 +127,7 @@ def test_rhp_candidates_single_shuffle(spark):
     import re
 
     from epstein_pipeline_spark.operators.embed_pass import make_rhp_udf
-    from epstein_pipeline_spark.operators.lsh import bucket_pairs_expr
+    from epstein_pipeline_spark.operators.lsh import bucket_pairs
 
     embs = spark.read.parquet(f"{SF}/embeddings.parquet")
     udf = make_rhp_udf(None, 16, 8)
@@ -135,12 +135,7 @@ def test_rhp_candidates_single_shuffle(spark):
         "_buckets", udf("_v")
     )
     bands = e.select("_id", F.posexplode("_buckets").alias("table_i", "bucket"))
-    buckets = (
-        bands.groupBy("table_i", "bucket")
-        .agg(F.array_sort(F.collect_list(F.struct("_id"))).alias("_ms"))
-        .filter(F.size("_ms") >= 2)
-    )
-    cands = buckets.select(F.explode(bucket_pairs_expr(F.col("_ms"), 2000)).alias("p")).select(
+    cands = bucket_pairs(bands, ["table_i", "bucket"], F.struct("_id"), 2000).select(
         F.col("p.a._id").alias("id1"), F.col("p.b._id").alias("id2")
     )
     p = plan(cands)
