@@ -17,7 +17,10 @@ datasketch pick; we pin it explicitly for recall parity).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+
+SIMHASH_BITS = 64  # the signature width make_simhash_udf emits; bands
+# and the similarity score 1 - d/SIMHASH_BITS are defined over it
 
 
 @dataclass(frozen=True)
@@ -84,8 +87,6 @@ class DedupConfig:
     def __post_init__(self) -> None:
         if self.bands * self.rows_per_band != self.num_perm:
             raise ValueError("bands * rows_per_band must equal num_perm")
-        from epstein_pipeline_spark.functions.simhash import SIMHASH_BITS
-
         if SIMHASH_BITS % self.simhash_bands != 0:
             raise ValueError(f"simhash_bands must divide the {SIMHASH_BITS} signature bits")
 

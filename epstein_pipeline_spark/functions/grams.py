@@ -13,7 +13,6 @@ corpus (4 cores, n=50) before settling on the Arrow path:
    InferFiltersFromGenerate plants under a later explode) inlines the
    regex there, re-evaluating it PER GRAM ELEMENT — O(tokens²) per
    doc, observed as minutes on a 1 MB corpus.
-   ``assert_no_regex_in_lambdas`` pins the regression.
 2. Pure-JVM alias-substitution-safe forms — zip-of-n-shifted-slices
    with ``concat_ws`` (9 ms/page: per-gram string churn), per-gram
    ``aggregate`` fold over token-hash longs behind an
@@ -151,28 +150,3 @@ def with_gram_hashes(
         .withColumn(N_TOKENS_COL, F.col("__g.n_tokens"))
         .drop("__g")
     )
-
-
-def assert_no_regex_in_lambdas(df: DataFrame) -> None:
-    """Test helper: fail if any higher-order-function LAMBDA BODY in
-    the optimized plan embeds the normalize/split expression (hazard
-    #1 regression). A ``split``/``regexp_replace`` in a transform's
-    ARGUMENT position is fine (evaluated once per row); only the
-    balanced contents of ``lambdafunction(...)`` spans are checked."""
-    plan = df._jdf.queryExecution().optimizedPlan().toString().lower()
-    start = 0
-    while True:
-        i = plan.find("lambdafunction(", start)
-        if i < 0:
-            return
-        j = i + len("lambdafunction(")
-        depth = 1
-        while j < len(plan) and depth > 0:
-            depth += {"(": 1, ")": -1}.get(plan[j], 0)
-            j += 1
-        body = plan[i:j]
-        if "regexp_replace" in body or "split(" in body:
-            raise AssertionError(
-                f"normalize/split inlined into a lambda body:\n{body[:400]}"
-            )
-        start = j

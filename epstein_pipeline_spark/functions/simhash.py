@@ -44,6 +44,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from epstein_pipeline_spark.config import SIMHASH_BITS
+
 # fixed-point grid for log1p weights: 2^-20 quantization (~1e-6
 # relative) is far below any meaningful feature-weight difference and
 # kills cross-libm ULP drift; products stay well inside int64
@@ -51,9 +53,6 @@ from pyspark.sql import types as T
 _W_SCALE = 1 << 20
 
 _WTAB = np.zeros(1, dtype=np.int64)  # _WTAB[c] = weight of count c
-
-SIMHASH_BITS = 64  # the signature width make_simhash_udf emits; bands
-# and the similarity score 1 - d/SIMHASH_BITS are defined over it
 
 
 def _weight_int(count: int) -> int:

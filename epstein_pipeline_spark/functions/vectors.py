@@ -33,11 +33,6 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
-def l2_normalize_expr(a: Column) -> Column:
-    n = norm_expr(a)
-    return F.transform(a, lambda x: x / n)
-
-
 def make_cosine_to_query_udf(query_vec: list[float]):
     """pandas UDF scoring every row against one broadcast query vector
     with a single BLAS matvec per Arrow batch."""

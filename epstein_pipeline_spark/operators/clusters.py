@@ -61,18 +61,3 @@ def build_clusters(
             F.coalesce("_method", F.lit("singleton")).alias("dedup_method"),
         )
     )
-
-
-def cluster_summary(clusters: DataFrame) -> DataFrame:
-    """Per-cluster rollup (size, representative, method, avg sim) —
-    the report the reference prints top-20 of (cli.py:616-636)."""
-    return (
-        clusters.groupBy("cluster_id")
-        .agg(
-            F.count("*").alias("size"),
-            F.max_by("url", F.col("is_representative").cast("int")).alias("representative"),
-            F.first("dedup_method").alias("dedup_method"),
-            F.first("similarity").alias("avg_similarity"),
-        )
-        .orderBy(F.desc("size"), "cluster_id")
-    )

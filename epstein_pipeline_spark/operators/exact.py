@@ -21,10 +21,6 @@ from pyspark.sql import functions as F
 from epstein_pipeline_spark.functions.text import content_hash_expr
 
 
-def with_content_hash(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("content_hash", content_hash_expr(text_col))
-
-
 def exact_pairs(
     df: DataFrame,
     id_col: str = "url",

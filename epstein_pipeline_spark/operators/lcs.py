@@ -69,13 +69,6 @@ def _window_hashes(state: tuple[np.ndarray, np.ndarray], k: int) -> np.ndarray:
         return (s[k:] - s[: n - k + 1]) * inv_powers[: n - k + 1][::-1]
 
 
-def _rolling_hashes(data: np.ndarray, k: int) -> np.ndarray:
-    """One-shot convenience wrapper (tests use this directly)."""
-    if data.shape[0] < k:
-        return np.empty(0, dtype=np.uint64)
-    return _window_hashes(_prefix_state(data), k)
-
-
 def py_lcs_length(s1: str, s2: str) -> int:
     """Longest common substring length (hash binary search; verified
     against the O(n*m) DP in tests)."""

@@ -147,9 +147,6 @@ def make_jw_udf(floor: float = 0.0):
     return jw
 
 
-jw_udf = make_jw_udf(0.0)  # exact on every row
-
-
 def _tier_weight(jw: Column, tiers: list[float], weights: list[float]) -> Column:
     expr = F.lit(weights[-1])
     for thr, w in zip(reversed(tiers), reversed(weights[:-1])):

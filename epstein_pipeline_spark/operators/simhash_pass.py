@@ -20,9 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from epstein_pipeline_spark.config import DedupConfig
+from epstein_pipeline_spark.config import SIMHASH_BITS, DedupConfig
 from epstein_pipeline_spark.functions.simhash import (
-    SIMHASH_BITS,
     hamming_distance_expr,
     simhash_bands_expr,
 )

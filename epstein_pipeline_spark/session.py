@@ -74,7 +74,7 @@ def get_spark(
         .config("spark.sql.files.openCostInBytes", str(1024 * 1024))
         # FileOutputCommitter v2: task outputs commit directly to the
         # destination instead of a rename-per-file job commit (~60 ms
-        # per 16-file parquet write, x10 stage commits per dedup run).
+        # per 16-file parquet write, x7 stage commits per dedup run).
         # Safe under the StageStore contract: readers only ever see a
         # snapshot AFTER its manifest publishes, so a crash mid-write
         # leaves an unpublished (invisible) partial dir either way —

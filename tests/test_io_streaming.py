@@ -1,29 +1,13 @@
 """Sources/sinks and the incremental streaming ingest."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from epstein_pipeline_spark.sources.io import (
-    read_json_docs,
     read_pages,
     write_clusters,
     write_csv_docs,
     write_json,
 )
-from epstein_pipeline_spark.streaming.incremental import incremental_dedup_ingest
-
-
-def test_json_docs_permissive(spark, tmp_path):
-    p = tmp_path / "docs"
-    p.mkdir()
-    (p / "a.json").write_text('{"id": "d1", "title": "T", "personIds": ["p1"]}')
-    (p / "b.json").write_text("{broken json!!")
-    df = read_json_docs(spark, str(p))
-    rows = df.collect()
-    good = [r for r in rows if r["id"] == "d1"]
-    corrupt = [r for r in rows if r["_corrupt_record"] is not None]
-    assert len(good) == 1 and good[0]["personIds"] == ["p1"]
-    assert len(corrupt) == 1  # tolerated, not fatal (cli.py:604-610)
 
 
 def test_csv_export_projection(spark, tmp_path):
@@ -106,133 +90,19 @@ def test_pages_roundtrip_and_cluster_sink(spark, pages, tmp_path):
     assert spark.read.json(str(j)).count() == 2
 
 
-def test_host_throughput_windowed_agg(spark, pages, tmp_path):
-    """Watermarked windowed aggregation over the page stream."""
-    from epstein_pipeline_spark.streaming.incremental import host_throughput
-
-    indir = tmp_path / "stream_in"
-    pages.limit(200).write.parquet(str(indir))
-    agg = host_throughput(spark, str(indir))
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("host_tp")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # append mode holds rows until the watermark passes; total input
-    # count is still observable via the state-free complete rerun
-    q2 = (
-        host_throughput(spark, str(indir))
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("host_tp_complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    rows = spark.sql("SELECT sum(pages) AS n, count(DISTINCT host) AS hosts FROM host_tp_complete").first()
-    assert rows["n"] == 200 and rows["hosts"] >= 2
-
-
-def test_incremental_streaming_dedup(spark, tmp_path):
-    """Two micro-batches; the second contains a content-duplicate that
-    must NOT be appended twice (foreachBatch anti-join)."""
-    from epstein_pipeline_spark.synth import generate_corpus, pages_to_spark
-
-    indir, outdir, ckpt = (tmp_path / d for d in ("in", "out", "ckpt"))
-    corpus = generate_corpus(n_pages=30, seed=5)
-    df = pages_to_spark(spark, corpus, partitions=2)
-    df.limit(10).write.mode("append").parquet(str(indir))
-
-    q = incremental_dedup_ingest(spark, str(indir), str(outdir), str(ckpt))
-    q.awaitTermination(120)
-    n1 = spark.read.parquet(str(outdir)).count()
-    assert n1 > 0
-
-    # batch 2: 10 more rows, of which the first 5 repeat batch-1 CONTENT
-    # under new urls
-    repeat = (
-        df.limit(5)
-        .withColumn("url", F.concat(F.lit("https://copy/"), F.col("url")))
-    )
-    fresh = df.orderBy("url").limit(20).subtract(df.limit(10))
-    repeat.unionByName(fresh).write.mode("append").parquet(str(indir))
-
-    q2 = incremental_dedup_ingest(spark, str(indir), str(outdir), str(ckpt))
-    q2.awaitTermination(120)
-    out = spark.read.parquet(str(outdir))
-    # every content hash appears exactly once
-    dup_hashes = out.groupBy("content_hash").count().filter("count > 1").count()
-    assert dup_hashes == 0
-
-
-def test_stateful_dedup_stream(spark, tmp_path):
-    """applyInPandasWithState dedup: per-hash GroupState suppresses
-    re-arrivals across micro-batch runs (state survives via the
-    checkpoint), O(batch) per batch instead of re-reading history."""
-    from epstein_pipeline_spark.streaming.incremental import stateful_dedup_stream
-    from epstein_pipeline_spark.synth import generate_corpus, pages_to_spark
-
-    indir, outdir, ckpt = (tmp_path / d for d in ("sin", "sout", "sckpt"))
-    corpus = generate_corpus(n_pages=30, seed=6)
-    df = pages_to_spark(spark, corpus, partitions=2)
-    df.limit(10).write.mode("append").parquet(str(indir))
-
-    q = stateful_dedup_stream(spark, str(indir), str(outdir), str(ckpt))
-    q.awaitTermination(120)
-    out1 = spark.read.parquet(str(outdir))
-    n1 = out1.count()
-    assert n1 > 0
-    assert out1.groupBy("content_hash").count().filter("count > 1").count() == 0
-
-    # batch 2: 5 content-repeats under new urls + 10 genuinely new pages
-    repeat = df.limit(5).withColumn("url", F.concat(F.lit("https://copy/"), F.col("url")))
-    fresh = df.orderBy("url").limit(20).subtract(df.limit(10))
-    repeat.unionByName(fresh).write.mode("append").parquet(str(indir))
-
-    q2 = stateful_dedup_stream(spark, str(indir), str(outdir), str(ckpt))
-    q2.awaitTermination(120)
-    out = spark.read.parquet(str(outdir))
-    assert out.groupBy("content_hash").count().filter("count > 1").count() == 0
-    assert out.count() > n1  # the fresh rows did land
-
-
-def test_jdbc_sink_roundtrip(spark, tmp_path):
-    """S9: write_jdbc end-to-end through a REAL JDBC driver. No
-    Postgres driver ships in this container, but Spark bundles Derby
-    (the Hive-metastore store) — an embedded JDBC database that
-    exercises the exact same executor-side JdbcUtils.savePartition
-    batch-insert path the Neon sink uses (reference batches 500-row
-    upserts, config.py:106)."""
-    from epstein_pipeline_spark.sources.io import write_jdbc
-
-    url = f"jdbc:derby:{tmp_path}/derby/db;create=true"
-    opts = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
-    df = spark.createDataFrame(
-        [(i, f"doc-{i:03d}") for i in range(257)], "id int, title string"
-    )
-    write_jdbc(df, url, "docs", batch_size=100, **opts)
-    back = spark.read.format("jdbc").options(url=url, dbtable="docs", **opts).load()
-    assert back.count() == 257
-    assert {tuple(r) for r in back.collect()} == {
-        (i, f"doc-{i:03d}") for i in range(257)
-    }
-    # mode=append: a second write adds rows (the JDBC sink contract)
-    write_jdbc(df.limit(3), url, "docs", batch_size=100, **opts)
-    assert back.count() == 260
-
-
 def test_streaming_hash_matches_batch_extract(spark, tmp_path):
-    """The streaming dedup key is the batch extract_stage key, also on
+    """The streaming ingest's dedup key is the batch extract_stage key,
+    read back from the store's extract snapshot, also on
     pages where Java and Python regexes disagree: a rule line of
     U+00A0 spaces and dashes (Java's \\s is ASCII-only) and a
     ``<ſcript>`` block (Python's (?i) folds ſ to s)."""
     import datetime
 
-    from epstein_pipeline_spark.plans.pipeline import extract_stage
+    from epstein_pipeline_spark.config import DedupConfig
+    from epstein_pipeline_spark.plans.checkpoint import StageStore
+    from epstein_pipeline_spark.plans.pipeline import extract_stage, run_dedup
     from epstein_pipeline_spark.sources.io import PAGES_SCHEMA
+    from epstein_pipeline_spark.streaming.incremental import stream_cluster_ingest
 
     htmls = [
         "<p>intro line</p>\n\u00a0\u00a0----\u00a0\u00a0\n<p>body text</p>",
@@ -243,9 +113,20 @@ def test_streaming_hash_matches_batch_extract(spark, tmp_path):
         [(f"https://x/{i}", ts, h.encode(), None, "en") for i, h in enumerate(htmls)],
         PAGES_SCHEMA,
     )
-    indir, outdir, ckpt = (tmp_path / d for d in ("in", "out", "ckpt"))
+    # the store holds one unrelated page, so both pages arrive as new
+    store = StageStore(tmp_path / "store")
+    other = spark.createDataFrame(
+        [("https://y/0", ts, b"<p>an unrelated page</p>", None, "en")], PAGES_SCHEMA
+    )
+    run_dedup(spark, other, store, DedupConfig())
+    indir = tmp_path / "in"
     pages.write.parquet(str(indir))
-    incremental_dedup_ingest(spark, str(indir), str(outdir), str(ckpt)).awaitTermination(120)
-    streamed = {r["url"]: r["content_hash"] for r in spark.read.parquet(str(outdir)).collect()}
+    stream_cluster_ingest(
+        spark, str(indir), store, str(tmp_path / "ckpt")
+    ).awaitTermination(300)
+    streamed = {
+        r["url"]: r["content_hash"]
+        for r in store.read(spark, "extract").filter(F.col("url").startswith("https://x/")).collect()
+    }
     batch = {r["url"]: r["content_hash"] for r in extract_stage(pages).collect()}
     assert streamed == batch and len(batch) == 2
