@@ -1,4 +1,5 @@
-"""Text normalization, hashing, extraction and the Gopher quality gates.
+"""Text normalization, hashing, extraction, analysis columns and the
+Gopher quality gates.
 
 Parity contract: ``normalize_text_expr`` / ``py_normalize_text`` must
 reproduce the reference's ``normalize_text``
@@ -8,9 +9,9 @@ collapse whitespace runs to single spaces. ``content_hash_expr``
 mirrors ``content_hash`` (hashing.py:17-20): sha256 hex of the
 normalized text.
 
-Normalization, hashing and the gates are SQL expressions (JVM,
-codegen); the ``py_*`` twins are the byte-identity oracles of the
-first two.
+Normalization, hashing, the analysis columns and the gates are SQL
+expressions (JVM, codegen); the ``py_*`` twins are the byte-identity
+oracles of the first two.
 Extraction and OCR-noise cleaning exist only as the ``py_*`` twins —
 the spec — which ``plans.pipeline.extract_stage`` runs in one
 mapInArrow pass (a compiled chain for ASCII pages, the twins otherwise).
@@ -166,6 +167,102 @@ def py_extract_normalize_batch(
                 norm[i] = nb.decode("ascii")
                 hsh[i] = hashlib.sha256(nb).hexdigest()
     return ext, norm, hsh
+
+
+# ---------------------------------------------------------------------------
+# Text analysis columns (training-data pipeline ops)
+# ---------------------------------------------------------------------------
+
+# tiny per-language stopword lists for the n-gram/stopword language
+# heuristic — enough to separate en/de/fr deterministically.
+_STOPWORDS = {
+    "en": ["the", "and", "of", "to", "in", "is", "that", "for", "with", "a"],
+    "de": ["der", "die", "und", "das", "ist", "nicht", "ein", "mit", "von", "zu"],
+    "fr": ["le", "la", "et", "les", "des", "un", "une", "est", "que", "pour"],
+}
+
+
+def token_count_expr(col: Column | str) -> Column:
+    """Whitespace token count over normalized text."""
+    return F.size(F.split(normalize_text_expr(col), " "))
+
+
+def word_tokens_expr(col: Column | str) -> Column:
+    """Normalized whitespace tokens as array<string>."""
+    return F.split(normalize_text_expr(col), " ")
+
+
+def bpe_ish_token_count_expr(col: Column | str) -> Column:
+    """A BPE-ish token estimate: count of word/number/punct units via
+    regex, the common pre-tokenization shape."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.size(
+        F.filter(
+            F.split(c, r"(?=[^A-Za-z0-9])|(?<=[^A-Za-z0-9])"),
+            lambda x: (x != "") & (x != " "),
+        )
+    )
+
+
+def _stopword_ratio(tokens: Column, words: list[str]) -> Column:
+    return F.size(F.array_intersect(F.array_distinct(tokens), F.array(*[F.lit(w) for w in words]))) / F.lit(
+        len(words)
+    )
+
+
+def lang_id_expr(col: Column | str) -> Column:
+    """Heuristic language ID: distinct-stopword hit ratio per language,
+    argmax, 'und' (undetermined) when nothing matched.
+
+    Score ties resolve in _STOPWORDS declaration order (en >= de >= fr)
+    — the same first-wins CASE semantics as the ★lang_id oracle query;
+    max-struct ordering would instead pick the lexicographically-last
+    language name on ties."""
+    tokens = word_tokens_expr(col)
+    ratios = [(lang, _stopword_ratio(tokens, ws)) for lang, ws in _STOPWORDS.items()]
+    guess = F.lit(ratios[-1][0])
+    for i in range(len(ratios) - 2, -1, -1):
+        lang, score = ratios[i]
+        later = [s for _, s in ratios[i + 1 :]]
+        later_max = later[0] if len(later) == 1 else F.greatest(*later)
+        guess = F.when(score >= later_max, F.lit(lang)).otherwise(guess)
+    best = F.greatest(*[s for _, s in ratios]) if len(ratios) > 1 else ratios[0][1]
+    return F.when(best > 0, guess).otherwise(F.lit("und"))
+
+
+def quality_score_expr(col: Column | str) -> Column:
+    """Heuristic extraction-quality score in [0,1], mirroring the
+    reference's OCR confidence blend (processors/ocr.py:80-118):
+    0.40*printable_ratio + 0.30*word_length_score + 0.30*stopword_score.
+    """
+    c = F.col(col) if isinstance(col, str) else col
+    n = F.greatest(F.length(c), F.lit(1))
+    printable = (n - F.length(F.regexp_replace(c, r"[\x20-\x7e\s]", ""))) / n
+    tokens = word_tokens_expr(c)
+    avg_word = F.aggregate(tokens, F.lit(0), lambda acc, x: acc + F.length(x)) / F.greatest(
+        F.size(tokens), F.lit(1)
+    )
+    # plausible mean word length 3..8 scores 1.0, decaying outside
+    word_score = F.greatest(F.lit(0.0), F.lit(1.0) - F.abs(avg_word - F.lit(5.5)) / F.lit(5.5))
+    stop_score = F.least(F.lit(1.0), _stopword_ratio(tokens, _STOPWORDS["en"]) * 2)
+    return F.round(printable * 0.40 + word_score * 0.30 + stop_score * 0.30, 6)
+
+
+def char_shingles(col: Column | str, k: int = 5) -> Column:
+    """Distinct char k-shingles of the normalized text as array<string>
+    (reference _text_shingles, processors/dedup.py:98-103).
+
+    SQL-expressible form used for small-scale oracle checks; the scale
+    path hashes shingles inside the MinHash pandas UDF instead of
+    materializing them.
+    """
+    norm = normalize_text_expr(col)
+    return F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(1), F.greatest(F.length(norm) - F.lit(k - 1), F.lit(1))),
+            lambda i: norm.substr(i, F.lit(k)),
+        )
+    )
 
 
 GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]

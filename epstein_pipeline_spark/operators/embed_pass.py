@@ -250,6 +250,41 @@ def assign_ivf_cells(
     return embs.withColumn("cell", nearest_cell(F.col(vec_col)))
 
 
+def write_ivf_index(indexed: DataFrame, path: str) -> None:
+    """Persist the IVF index ``partitionBy('cell')`` — each cell is its
+    own directory, so a probe's ``cell IN (...)`` filter becomes a
+    PartitionFilter and the scan touches only ~n_probe/n_cells of the
+    files (the plan-test-pinned property; the reference's HNSW read
+    path analog is neon_schema.py:131-142)."""
+    indexed.write.partitionBy("cell").mode("overwrite").parquet(path)
+
+
+def read_ivf_index(spark, path: str) -> DataFrame:
+    """Read the partitioned index back; ``cell`` returns as a partition
+    column, so downstream ``ivf_topk`` probes are partition-pruned."""
+    return spark.read.parquet(path)
+
+
+def append_to_ivf_index(
+    new_vectors: DataFrame,
+    centroids: np.ndarray,
+    path: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> None:
+    """Incremental index maintenance (the FAISS `add` pattern): assign
+    NEW vectors to the EXISTING trained cells and append into the
+    partitioned store — only the touched cell directories gain files,
+    committed rows are never rewritten, and probes stay
+    partition-pruned. Centroids are not retrained (per-batch retrain
+    would relabel the whole corpus); re-train + full rewrite is the
+    periodic maintenance action, exactly as IVF indexes are operated.
+    """
+    assign_ivf_cells(new_vectors, centroids, id_col, vec_col).write.partitionBy(
+        "cell"
+    ).mode("append").parquet(path)
+
+
 def ivf_topk(
     indexed: DataFrame,
     centroids: np.ndarray,

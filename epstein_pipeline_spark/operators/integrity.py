@@ -1,13 +1,20 @@
-"""Integrity validator (SURVEY.md A7).
+"""Integrity validators (SURVEY.md A7/A8/P11, J10).
 
-Reference: validators/integrity.py — duplicate ids (:87-96), as one
-aggregation.
+Reference: validators/integrity.py — duplicate ids (:87-96), duplicate
+content (:240-262), date validity (:28-33,117-181: regex
+``^(\\d{4})(-(\\d{2})(-(\\d{2}))?)?$``, year 1950-2026, days-per-month),
+unknown person-id FKs (:183-206). All as one-pass aggregations /
+anti-joins.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from epstein_pipeline_spark.functions.text import content_hash_expr
+
+_DATE_RE = r"^(\d{4})(-(\d{2})(-(\d{2}))?)?$"
 
 
 def duplicate_ids(docs: DataFrame, id_col: str = "id") -> DataFrame:
@@ -16,4 +23,48 @@ def duplicate_ids(docs: DataFrame, id_col: str = "id") -> DataFrame:
         docs.groupBy(F.col(id_col).alias("id"))
         .agg(F.count("*").alias("n"))
         .filter(F.col("n") > 1)
+    )
+
+
+def duplicate_content_groups(docs: DataFrame, id_col: str = "id", text_col: str = "text") -> DataFrame:
+    """content-hash groups with >1 member (integrity.py:240-262)."""
+    return (
+        docs.select(F.col(id_col).alias("id"), content_hash_expr(text_col).alias("content_hash"))
+        .groupBy("content_hash")
+        .agg(F.count("*").alias("n"), F.sort_array(F.collect_list("id")).alias("ids"))
+        .filter(F.col("n") > 1)
+    )
+
+
+def invalid_dates(docs: DataFrame, id_col: str = "id", date_col: str = "date") -> DataFrame:
+    """Rows whose date string fails the reference's checks: regex
+    shape, year 1950-2026, month 1-12, day valid for month
+    (integrity.py:117-181). Returns (id, date, reason)."""
+    d = docs.select(F.col(id_col).alias("id"), F.col(date_col).alias("date"))
+    year = F.regexp_extract("date", _DATE_RE, 1).cast("int")
+    month = F.nullif(F.regexp_extract("date", _DATE_RE, 3), F.lit("")).cast("int")
+    day = F.nullif(F.regexp_extract("date", _DATE_RE, 5), F.lit("")).cast("int")
+    # try_to_date validates day-of-month incl. leap years and returns
+    # NULL (instead of raising under ANSI mode) for regex-valid dates
+    # with an impossible day like 2020-02-31 — this validator must FLAG
+    # bad rows, never abort the job on them
+    full = F.when(
+        day.isNotNull(),
+        F.try_to_date(F.col("date"), "yyyy-MM-dd"),
+    )
+    reason = (
+        F.when(~F.regexp_like("date", F.lit(_DATE_RE)), "malformed")
+        .when((year < 1950) | (year > 2026), "year_out_of_range")
+        .when(month.isNotNull() & ((month < 1) | (month > 12)), "bad_month")
+        .when(day.isNotNull() & full.isNull(), "bad_day")
+    )
+    return d.withColumn("reason", reason).filter(F.col("reason").isNotNull())
+
+
+def unknown_person_ids(docs: DataFrame, persons: DataFrame, list_col: str = "personIds") -> DataFrame:
+    """FK check: person ids referenced by documents but absent from the
+    registry — left anti-join (integrity.py:183-206)."""
+    refs = docs.select(F.explode(list_col).alias("person_id")).distinct()
+    return refs.join(
+        persons.select(F.col("id").alias("person_id")), "person_id", "left_anti"
     )

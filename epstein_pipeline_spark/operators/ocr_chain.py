@@ -8,7 +8,8 @@ The reference walks a backend chain per document and:
 3. otherwise keeps the best-confidence non-empty candidate seen so far
    (strict ``>`` — the EARLIEST wins ties, ocr.py:805-807);
 4. a selection that never crossed the threshold is flagged low
-   confidence (ocr.py:817-827).
+   confidence; per-page confidences below threshold yield a 1-indexed
+   low-confidence page list (ocr.py:817-827).
 
 Spark restatement: the multi-backend extract results live in ONE
 ``array<struct<backend, text, confidence>>`` column in chain order, and
@@ -19,7 +20,7 @@ pass over the scan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -77,4 +78,17 @@ def select_ocr_result(
             & (F.coalesce(F.col("_chosen")["confidence"], neg_inf) < F.lit(threshold)),
         )
         .drop("_chosen")
+    )
+
+
+def low_conf_pages_expr(page_confs: Column, threshold: float) -> Column:
+    """1-indexed page numbers whose confidence is below threshold
+    (reference ocr.py:817-822: ``i + 1 for i, conf in enumerate(...)
+    if conf < confidence_threshold``)."""
+    return F.filter(
+        F.transform(
+            page_confs,
+            lambda c, i: F.when(c < F.lit(threshold), i + F.lit(1)),
+        ),
+        lambda x: x.isNotNull(),
     )

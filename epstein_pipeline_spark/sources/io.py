@@ -1,6 +1,8 @@
 """Schema-pinned sources and export sinks (SURVEY.md §2.1).
 
 Reference mappings:
+- S1 JSON dir scan (cli.py:595-611)      -> read_json_docs (PERMISSIVE
+  + _corrupt_record, fixed schema — never inferSchema)
 - S6 JSON export (exporters/json_export) -> write_json
 - S7 CSV export (cli.py:744-772)         -> write_csv_docs (fixed
   projection, arrays joined with ';', ocrText excluded)
@@ -26,10 +28,39 @@ PAGES_SCHEMA = T.StructType(
     ]
 )
 
+DOC_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.StringType(), False),
+        T.StructField("title", T.StringType(), True),
+        T.StructField("date", T.StringType(), True),
+        T.StructField("source", T.StringType(), True),
+        T.StructField("category", T.StringType(), True),
+        T.StructField("summary", T.StringType(), True),
+        T.StructField("personIds", T.ArrayType(T.StringType()), True),
+        T.StructField("tags", T.ArrayType(T.StringType()), True),
+        T.StructField("pageCount", T.IntegerType(), True),
+        T.StructField("batesRange", T.StringType(), True),
+        T.StructField("ocrText", T.StringType(), True),
+        T.StructField("_corrupt_record", T.StringType(), True),
+    ]
+)
+
 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
     """The engine's primary input (BASELINE.json input_hint shape)."""
     return spark.read.schema(PAGES_SCHEMA).parquet(path)
+
+
+def read_json_docs(spark: SparkSession, path: str) -> DataFrame:
+    """Tolerant JSON document scan: schema pinned, corrupt rows
+    captured instead of failing the job (the reference skips bad files
+    with a warning, cli.py:604-610)."""
+    return (
+        spark.read.schema(DOC_SCHEMA)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
+        .json(path)
+    )
 
 
 def write_json(df: DataFrame, path: str) -> None:
@@ -61,6 +92,24 @@ def write_clusters(clusters: DataFrame, path: str, fmt: str = "parquet") -> None
         w.json(path)
     else:
         raise ValueError(f"unsupported format: {fmt}")
+
+
+def write_jdbc(df: DataFrame, url: str, table: str, batch_size: int = 500, **options) -> None:
+    """S9: JDBC batch sink (the reference batches 500-row upserts to
+    Neon Postgres, config.py:106-108). Driver-jar agnostic: the
+    container ships no Postgres driver, so the executed-coverage test
+    drives this exact code path through Spark's bundled embedded Derby
+    (same executor-side JdbcUtils batch-insert path;
+    tests/test_io_streaming.py::test_jdbc_sink_roundtrip)."""
+    (
+        df.write.format("jdbc")
+        .option("url", url)
+        .option("dbtable", table)
+        .option("batchsize", str(batch_size))
+        .options(**options)
+        .mode("append")
+        .save()
+    )
 
 
 # ---------------------------------------------------------------------------

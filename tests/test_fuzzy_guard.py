@@ -270,6 +270,63 @@ def test_resolution_hot_block_guarded(spark):
     assert 0 < len(out) <= 2 * n - 3
 
 
+# ---------------------------------------------------------------------------
+# token_sort_ratio: exact fuzz.token_sort_ratio semantics (confidence.py:98)
+# ---------------------------------------------------------------------------
+
+def test_token_sort_ratio_pinned_examples():
+    from epstein_pipeline_spark.functions.fuzzy import py_token_sort_ratio
+
+    # fuzz.token_sort_ratio("new york mets", "mets new york") == 100
+    assert py_token_sort_ratio("new york mets", "mets new york") == 1.0
+    # sorted: "mets new york" vs "meats new york" -> InDel over joins
+    assert py_token_sort_ratio("new york mets", "new york meats") == pytest.approx(
+        py_indel_ratio("mets new york", "meats new york")
+    )
+    assert py_token_sort_ratio("", "") == 1.0
+    assert py_token_sort_ratio("  a  b ", "b a") == 1.0  # whitespace runs collapse
+
+
+def test_token_sort_expr_matches_py_twin(spark):
+    from epstein_pipeline_spark.functions.fuzzy import (
+        py_token_sort_ratio,
+        token_sort_ratio_expr,
+    )
+    from epstein_pipeline_spark.functions.text import py_normalize_text
+
+    rows = [
+        ("john alpha", "alpha john"),
+        ("Mary  Beta", "beta mary x"),
+        ("a b c", "c b a"),
+        ("one two", "three four"),
+        ("", "x"),
+    ]
+    df = spark.createDataFrame(rows, "a string, b string")
+    got = {
+        (r["a"], r["b"]): r["s"]
+        for r in df.withColumn(
+            "s", F.round(token_sort_ratio_expr(F.col("a"), F.col("b")), 6)
+        ).collect()
+    }
+    for a, b in rows:
+        want = round(py_token_sort_ratio(py_normalize_text(a), py_normalize_text(b)), 6)
+        assert got[(a, b)] == pytest.approx(want), (a, b)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.text(alphabet="ab cd", max_size=16),
+    st.text(alphabet="ab cd", max_size=16),
+)
+def test_token_sort_ratio_matches_naive_composition(a, b):
+    from epstein_pipeline_spark.functions.fuzzy import py_token_sort_ratio
+
+    want = _naive_indel_ratio(
+        " ".join(sorted(a.split())), " ".join(sorted(b.split()))
+    )
+    assert abs(py_token_sort_ratio(a, b) - want) < 1e-12
+
+
 def test_guarded_block_pairs_excludes_duplicate_id_self_pairs(spark):
     """A repeated id in one block (same person row ingested twice)
     must not emit an id-equal 'pair' — the strict < join the guard

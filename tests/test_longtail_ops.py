@@ -1,12 +1,17 @@
 """Long-tail operator parity: Bates range join, fuzzy title join,
-duplicate-id check, chunker (mirrors reference
-tests/test_dedup.py:73-92 and friends)."""
+integrity checks, chunker
+(mirrors reference tests/test_dedup.py:73-92 and friends)."""
 
 import pytest
 
 from epstein_pipeline_spark.functions.chunker import chunk_documents, py_chunk
 from epstein_pipeline_spark.operators.fuzzy_title import title_fuzzy_pairs
-from epstein_pipeline_spark.operators.integrity import duplicate_ids
+from epstein_pipeline_spark.operators.integrity import (
+    duplicate_content_groups,
+    duplicate_ids,
+    invalid_dates,
+    unknown_person_ids,
+)
 from epstein_pipeline_spark.operators.range_join import (
     bates_overlap_pairs,
     bates_pairs_bucketized,
@@ -36,6 +41,16 @@ def ref_docs(spark):
     )
 
 
+@pytest.fixture(scope="module")
+def persons(spark):
+    rows = [
+        ("p-0001", "John Alpha", ["J. Alpha", "Johnny Alpha"]),
+        ("p-0002", "Mary Beta", []),
+        ("p-0003", "Carl Gamma", ["C. Gamma"]),
+    ]
+    return spark.createDataFrame(rows, "id string, name string, aliases array<string>")
+
+
 def test_parse_bates(spark, ref_docs):
     got = {r["id"]: (r["bates_prefix"], r["bates_lo"], r["bates_hi"])
            for r in parse_bates(ref_docs).collect()}
@@ -60,6 +75,17 @@ def test_parse_bates_edge_cases(spark):
     assert got["r4"] == ("EFTA", 100, 200)
 
 
+def test_invalid_dates_bad_day(spark):
+    """Regex-valid but impossible day must be FLAGGED, not raise
+    SparkDateTimeException under ANSI mode."""
+    docs = spark.createDataFrame(
+        [("g1", "2020-02-29"), ("b1", "2020-02-31"), ("b2", "2021-02-29")],
+        "id string, date string",
+    )
+    bad = {r["id"]: r["reason"] for r in invalid_dates(docs).collect()}
+    assert bad == {"b1": "bad_day", "b2": "bad_day"}
+
+
 def test_bates_overlap(spark, ref_docs):
     """Reference tests/test_dedup.py:73-92: overlapping ranges pair."""
     pairs = {(r["url1"], r["url2"]) for r in bates_overlap_pairs(ref_docs).collect()}
@@ -82,8 +108,14 @@ def test_title_fuzzy(spark, ref_docs):
     assert len(pairs) == 1
 
 
-def test_integrity_checks(spark, ref_docs):
+def test_integrity_checks(spark, ref_docs, persons):
     assert [r["id"] for r in duplicate_ids(ref_docs).collect()] == ["doc-4"]
+    dup_content = duplicate_content_groups(ref_docs).collect()
+    assert len(dup_content) == 1 and set(dup_content[0]["ids"]) == {"doc-4"}
+    bad = {r["id"]: r["reason"] for r in invalid_dates(ref_docs).collect()}
+    assert bad["doc-4"] in ("year_out_of_range", "bad_month")
+    unknown = {r["person_id"] for r in unknown_person_ids(ref_docs, persons).collect()}
+    assert unknown == {"p-9999"}
 
 
 def test_chunker_offsets_and_coverage(spark):

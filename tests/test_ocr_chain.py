@@ -1,11 +1,16 @@
 """OCR fallback-chain selection semantics (reference ocr.py:789-827):
 first candidate >= threshold wins in chain order; otherwise the best
 non-empty candidate with EARLIEST-wins ties; empty text is skipped;
-low-confidence flag."""
+low-confidence flag and 1-indexed low-confidence page list."""
 
 from __future__ import annotations
 
-from epstein_pipeline_spark.operators.ocr_chain import select_ocr_result
+from pyspark.sql import functions as F
+
+from epstein_pipeline_spark.operators.ocr_chain import (
+    low_conf_pages_expr,
+    select_ocr_result,
+)
 
 SCHEMA = (
     "id string, candidates array<struct<backend:string, text:string,"
@@ -75,6 +80,14 @@ def test_empty_text_skipped_even_with_high_confidence(spark):
 def test_all_empty_yields_empty_text_null_confidence(spark):
     got = _run(spark, [("d5", [("a", "", 0.9), ("b", " ", 0.9)])])
     assert got["d5"] == (None, "", None, False)
+
+
+def test_low_conf_pages_are_one_indexed(spark):
+    df = spark.createDataFrame(
+        [("d", [0.9, 0.4, 0.61, 0.1])], "id string, page_confs array<double>"
+    )
+    out = df.select(low_conf_pages_expr(F.col("page_confs"), 0.6).alias("p"))
+    assert out.collect()[0]["p"] == [2, 4]
 
 
 def test_null_confidence_candidate_never_beats_real_one(spark):

@@ -3,13 +3,19 @@ twins (the invariant from BASELINE.json input_hint)."""
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from epstein_pipeline_spark.functions.text import (
+    bpe_ish_token_count_expr,
+    char_shingles,
     content_hash_expr,
+    lang_id_expr,
     normalize_text_expr,
     py_content_hash,
     py_normalize_text,
+    quality_score_expr,
+    token_count_expr,
 )
 
 CASES = [
@@ -57,3 +63,53 @@ def test_extraction_reproduces_source_text_normalized(spark, pages):
         .count()
     )
     assert bad == 0
+
+
+def test_char_shingles(spark):
+    df = spark.createDataFrame([("abcdefg",)], "t string")
+    got = df.select(char_shingles("t", 5).alias("s")).first()["s"]
+    assert sorted(got) == ["abcde", "bcdef", "cdefg"]
+
+
+def test_token_count(spark):
+    df = spark.createDataFrame([("one  two\tthree",), ("", )], "t string")
+    got = [r[0] for r in df.select(token_count_expr("t")).collect()]
+    assert got[0] == 3
+
+
+def test_bpe_ish_token_count(spark):
+    df = spark.createDataFrame([("hello, world! 42",)], "t string")
+    got = df.select(bpe_ish_token_count_expr("t").alias("n")).first()["n"]
+    assert got >= 5  # hello , world ! 42
+
+
+def test_lang_id(spark):
+    df = spark.createDataFrame(
+        [
+            ("the cat and the dog went to the house for a nap",),
+            ("der hund und die katze ist nicht mit von zu haus",),
+            ("le chat et la maison les des un une est que pour",),
+            ("zzz qqq xxx",),
+        ],
+        "t string",
+    )
+    got = [r[0] for r in df.select(lang_id_expr("t")).collect()]
+    assert got == ["en", "de", "fr", "und"]
+
+
+def test_lang_id_tie_breaks_in_declared_order(spark):
+    """Score ties prefer en >= de >= fr — the ★lang_id oracle's CASE
+    semantics (max-struct ordering would pick 'fr' on ties)."""
+    df = spark.createDataFrame(
+        [("the le",), ("der le",), ("the der le",)], "t string"
+    )
+    got = [r[0] for r in df.select(lang_id_expr("t")).collect()]
+    assert got == ["en", "de", "en"]
+
+
+def test_quality_score_bounds(spark, pages):
+    rows = pages.select(quality_score_expr("text").alias("q")).collect()
+    assert all(0.0 <= r["q"] <= 1.0 for r in rows)
+    # clean english text should score reasonably
+    df = spark.createDataFrame([("the quick brown fox jumps over the lazy dog and that is for sure with a smile",)], "t string")
+    assert df.select(quality_score_expr("t").alias("q")).first()["q"] > 0.6
