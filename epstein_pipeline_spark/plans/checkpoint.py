@@ -19,8 +19,9 @@ in ``MANIFEST.log``) alone says what a snapshot is — its data files
 (name, rows, bytes per file, read from the parquet footers and aligned
 with ``paths`` across an append chain), its schema, and stage-level
 counters (docs_in, docs_out, pairs_emitted, plus shuffle_read_bytes /
-shuffle_write_bytes / tasks / task_ms measured around the write action
-from the AppStatusStore executor totals), read back via
+shuffle_write_bytes / tasks / task_ms / gc_ms measured around the write
+action from the AppStatusStore executor totals, and the write's own
+wall_ms), read back via
 ``latest(stage)["counters"]`` / ``stage_shuffle_write_mb``. ``read``
 loads exactly the listed files with the recorded schema, so it starts
 no Spark job and a stray file in a snapshot directory is never data.
@@ -49,17 +50,18 @@ _EXECUTOR_TOTALS = (
     ("shuffle_write_bytes", "totalShuffleWrite"),
     ("tasks", "totalTasks"),
     ("task_ms", "totalDuration"),
+    ("gc_ms", "totalGCTime"),
 )
 
 
 def _executor_totals(spark) -> dict[str, int] | None:
-    """Cumulative shuffle bytes read/written, tasks run and task time
-    (ms) across all executors, from the AppStatusStore that backs the
-    Spark UI (present even with ``spark.ui.enabled=false``). Executor
-    summaries are app-lifetime totals and are never evicted (unlike
-    per-stage data, which ``spark.ui.retainedStages`` rolls over), so
-    snapshot deltas around a stage's write action attribute that
-    stage's shuffle traffic — the "shuffle bytes" counter the north
+    """Cumulative shuffle bytes read/written, tasks run, task time and
+    JVM GC time (ms) across all executors, from the AppStatusStore that
+    backs the Spark UI (present even with ``spark.ui.enabled=false``).
+    Executor summaries are app-lifetime totals and are never evicted
+    (unlike per-stage data, which ``spark.ui.retainedStages`` rolls
+    over), so snapshot deltas around a stage's write action attribute
+    that stage's shuffle traffic — the "shuffle bytes" counter the north
     rule's lineage requires — and its task count, the per-task fixed
     cost that dominates small Python stages. Listener-bus delivery is
     async, so totals can lag task completion by a beat; counters here
@@ -274,17 +276,20 @@ class StageStore:
                 snap_id += 1
         out_dir = sdir / f"snapshot-{snap_id}"
         ex0 = _executor_totals(df.sparkSession)
+        t0 = time.perf_counter()
         df.write.mode("overwrite").parquet(str(out_dir))
+        wall_ms = round((time.perf_counter() - t0) * 1000)
         # the directory now claims the id; the reservation marker has
         # done its job (a crash before this line leaves an orphan
         # marker, which merely skips an id — harmless)
         (sdir / f".reserve-{snap_id}").unlink(missing_ok=True)
         ex1 = _executor_totals(df.sparkSession)
+        counters = dict(counters or {}, wall_ms=wall_ms)
         if ex0 is not None and ex1 is not None:
             # the write action is what executes the (lazy) stage plan,
             # so the delta is this stage's shuffle traffic and tasks;
             # clamped in case an executor summary was replaced mid-window
-            counters = dict(counters or {}, **{k: max(0, ex1[k] - ex0[k]) for k in ex1})
+            counters.update({k: max(0, ex1[k] - ex0[k]) for k in ex1})
 
         # the snapshot's file list from the parquet footers — driver-
         # side metadata reads, no Spark job. From here on the manifest,

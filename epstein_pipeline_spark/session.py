@@ -5,6 +5,25 @@ configs below are the ones that matter at 1000-executor scale too:
 AQE (runtime re-plan + skew-join splitting), Arrow for pandas UDF
 transfer, shuffle partitions sized to cores (sandbox) / 2-3x total
 cores (cluster).
+
+Two layers. ``ENGINE_CONF`` holds the settings that do not depend on
+the host: every session the engine starts carries them, the tests' and
+benchmarks' ``get_spark`` sessions and the spark-submit commands'
+``engine_session`` alike, so the production path runs what is tested.
+``get_spark`` adds the host sizing on top (master, cores, partitions,
+driver memory, split sizes, broadcast threshold); under spark-submit
+that sizing comes from ``--master`` / ``--conf`` instead.
+
+Why zstd: every shuffle, broadcast and spill block goes through
+``spark.io.compression.codec``. Spark's default, lz4, only matches
+repeated byte runs; the engine's exchange rows are url strings, 64-char
+hex hashes, signature arrays and array headers, which entropy coding
+shrinks much further. Measured on a 4-vCPU host (pyspark 4.1.2), a
+1000-page perfbench run wrote a median 0.696 MB of shuffle under lz4
+and 0.419 MB under zstd (``dedup_ascii``, 10 seeds; -40%, every seed
+lower), with docs/s, setup time and peak RSS within the host's noise.
+At 128k pages (``bench_extra.py dedup 4``) the stages wrote 306 MB
+under lz4 and 176 MB under zstd.
 """
 
 from __future__ import annotations
@@ -12,6 +31,40 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+# Settings that do not depend on host size, applied by get_spark and
+# engine_session. Builder options override spark-submit --conf values,
+# so these hold under spark-submit too.
+ENGINE_CONF: dict[str, str] = {
+    # shuffle, broadcast and spill blocks: ~40% fewer bytes than lz4
+    # on the dedup exchanges (module docstring)
+    "spark.io.compression.codec": "zstd",
+    # FileOutputCommitter v2: task outputs commit directly to the
+    # destination instead of a rename-per-file job commit (~60 ms
+    # per 16-file parquet write, x7 stage commits per dedup run).
+    # Safe under the StageStore contract: readers only ever see a
+    # snapshot AFTER its manifest publishes, so a crash mid-write
+    # leaves an unpublished (invisible) partial dir either way —
+    # the engine never relies on _SUCCESS or job-commit atomicity.
+    # v2 DOES rely on speculation staying off: a speculative
+    # duplicate attempt commits its files straight into the
+    # destination too, so two attempts of one task can both land
+    # in a snapshot (duplicate rows). Pinned here, and get_spark
+    # refuses an extra_conf that turns it back on.
+    "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
+    "spark.speculation": "false",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
+
+
+def engine_session(app: str) -> SparkSession:
+    """The session of a spark-submit command: master and sizing come
+    from spark-submit (``--master``, ``--conf``), ``ENGINE_CONF`` is
+    applied on top."""
+    spark = SparkSession.builder.appName(app).config(map=ENGINE_CONF).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
 
 
 def get_spark(
@@ -40,6 +93,7 @@ def get_spark(
     builder = (
         SparkSession.builder.master(master)
         .appName(app)
+        .config(map=ENGINE_CONF)
         # make local[N] mean N: size JVM internal pools (GC, JIT,
         # netty, parquet) to N, not to the machine's visible CPUs —
         # otherwise a "2-core" run borrows helper-thread time and
@@ -57,8 +111,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(16 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
@@ -72,20 +124,6 @@ def get_spark(
             os.environ.get("SPARK_MAX_PARTITION_BYTES", str(8 * 1024 * 1024)),
         )
         .config("spark.sql.files.openCostInBytes", str(1024 * 1024))
-        # FileOutputCommitter v2: task outputs commit directly to the
-        # destination instead of a rename-per-file job commit (~60 ms
-        # per 16-file parquet write, x7 stage commits per dedup run).
-        # Safe under the StageStore contract: readers only ever see a
-        # snapshot AFTER its manifest publishes, so a crash mid-write
-        # leaves an unpublished (invisible) partial dir either way —
-        # the engine never relies on _SUCCESS or job-commit atomicity.
-        # v2 DOES rely on speculation staying off: a speculative
-        # duplicate attempt commits its files straight into the
-        # destination too, so two attempts of one task can both land
-        # in a snapshot (duplicate rows). Pinned here, and get_spark
-        # refuses an extra_conf that turns it back on.
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .config("spark.speculation", "false")
     )
     for k, v in (extra_conf or {}).items():
         if k == "spark.speculation" and v.strip().lower() != "false":

@@ -26,15 +26,13 @@ import time
 
 
 def cmd_dedup(args) -> None:
-    from pyspark.sql import SparkSession
-
     from epstein_pipeline_spark.config import DedupConfig
     from epstein_pipeline_spark.plans.checkpoint import StageStore
     from epstein_pipeline_spark.plans.pipeline import run_dedup
+    from epstein_pipeline_spark.session import engine_session
     from epstein_pipeline_spark.sources.io import read_pages, write_clusters
 
-    spark = SparkSession.builder.appName("epstein_pipeline_spark.dedup").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = engine_session("epstein_pipeline_spark.dedup")
     pages = read_pages(spark, args.input)
     store = StageStore(args.store)
     t0 = time.time()
@@ -67,12 +65,10 @@ def cmd_compact(args) -> None:
     """Store maintenance: rewrite append chains into single snapshots
     (Iceberg rewrite_data_files analog). Compacts the given stages or,
     by default, every stage with a chained manifest."""
-    from pyspark.sql import SparkSession
-
     from epstein_pipeline_spark.plans.checkpoint import StageStore
+    from epstein_pipeline_spark.session import engine_session
 
-    spark = SparkSession.builder.appName("epstein_pipeline_spark.compact").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = engine_session("epstein_pipeline_spark.compact")
     store = StageStore(args.store)
     import os
 
@@ -114,14 +110,10 @@ def cmd_decontaminate(args) -> None:
     """Drop corpus pages sharing any n-token gram with a benchmark
     table (training-data decontamination): writes the clean corpus
     parquet and, optionally, the flagged report."""
-    from pyspark.sql import SparkSession
-
     from epstein_pipeline_spark.operators.decontam import decontaminate
+    from epstein_pipeline_spark.session import engine_session
 
-    spark = SparkSession.builder.appName(
-        "epstein_pipeline_spark.decontaminate"
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = engine_session("epstein_pipeline_spark.decontaminate")
     corpus = spark.read.parquet(args.input)
     bench = spark.read.parquet(args.benchmark)
     t0 = time.time()
@@ -152,15 +144,12 @@ def cmd_dedup_spans(args) -> None:
     et al. 2021): every >= n-token span occurring more than once loses
     all but one canonical occurrence. Writes the rewritten corpus and
     prints coverage stats."""
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from epstein_pipeline_spark.operators.dup_spans import strip_repeated_spans
+    from epstein_pipeline_spark.session import engine_session
 
-    spark = SparkSession.builder.appName(
-        "epstein_pipeline_spark.dedup_spans"
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = engine_session("epstein_pipeline_spark.dedup_spans")
     corpus = spark.read.parquet(args.input)
     t0 = time.time()
     out = strip_repeated_spans(
@@ -195,18 +184,15 @@ def cmd_dedup_lines(args) -> None:
     ``--seg-tokens``-token line occurring >= 2 times corpus-wide keeps
     only its first (id, line_idx) occurrence. Writes the cleaned
     corpus and prints removal stats."""
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from epstein_pipeline_spark.operators.line_dedup import (
         dedup_lines,
         dedup_lines_incremental,
     )
+    from epstein_pipeline_spark.session import engine_session
 
-    spark = SparkSession.builder.appName(
-        "epstein_pipeline_spark.dedup_lines"
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = engine_session("epstein_pipeline_spark.dedup_lines")
     corpus = spark.read.parquet(args.input)
     t0 = time.time()
     if args.store:
@@ -259,15 +245,12 @@ def cmd_curate(args) -> None:
     line dedup -> PII masking -> exact content dedup (plans/curate.py
     has the ordering/scale rationale). Writes the curated corpus (and
     optionally the full audit frame) and prints per-stage counters."""
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from epstein_pipeline_spark.plans.curate import curate_corpus, curation_stats
+    from epstein_pipeline_spark.session import engine_session
 
-    spark = SparkSession.builder.appName(
-        "epstein_pipeline_spark.curate"
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = engine_session("epstein_pipeline_spark.curate")
     corpus = spark.read.parquet(args.input)
     t0 = time.time()
     audit = curate_corpus(
@@ -335,9 +318,9 @@ def cmd_rollback(args) -> None:
 
 def cmd_lineage(args) -> None:
     """Audit a store without writing Spark code: per-stage manifest
-    summary (snapshot id, rows, bytes, counters incl. shuffle bytes
-    and the tasks / task_ms the commit's write ran, append-chain
-    length) plus per-partition row counts per snapshot — the
+    summary (snapshot id, rows, bytes, counters incl. shuffle bytes,
+    the tasks / task_ms / gc_ms the commit's write ran and its wall_ms,
+    append-chain length) plus per-partition row counts per snapshot — the
     north-rule resumability evidence, surfaced at the CLI. Everything
     comes from the manifests and their MANIFEST.log
     (``checkpoint.lineage_rows``): json reads only, no SparkSession,
@@ -383,8 +366,7 @@ def cmd_export(args) -> None:
     ``sqlite`` expects the documents schema (id, title, date, source,
     category, summary, pageCount, batesRange, tags, ocrText) and
     optionally runs an FTS smoke query afterwards."""
-    from pyspark.sql import SparkSession
-
+    from epstein_pipeline_spark.session import engine_session
     from epstein_pipeline_spark.sources.io import (
         fts_search,
         write_csv_docs,
@@ -395,8 +377,7 @@ def cmd_export(args) -> None:
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    spark = SparkSession.builder.appName("epstein_pipeline_spark.export").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = engine_session("epstein_pipeline_spark.export")
     df = spark.read.parquet(args.input)
 
     def to_docs_shape(d):
@@ -450,15 +431,13 @@ def cmd_ingest(args) -> None:
     prior ``dedup`` run — every stage touches O(new + affected) rows
     (plans/incremental.py; reference per-doc resume semantics
     state.py:86-111)."""
-    from pyspark.sql import SparkSession
-
     from epstein_pipeline_spark.config import DedupConfig
     from epstein_pipeline_spark.plans.checkpoint import StageStore
     from epstein_pipeline_spark.plans.incremental import run_incremental
+    from epstein_pipeline_spark.session import engine_session
     from epstein_pipeline_spark.sources.io import read_pages, write_clusters
 
-    spark = SparkSession.builder.appName("epstein_pipeline_spark.ingest").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = engine_session("epstein_pipeline_spark.ingest")
     pages = read_pages(spark, args.input)
     store = StageStore(args.store)
     t0 = time.time()
@@ -498,12 +477,10 @@ def cmd_resolve(args) -> None:
     (reference cli.py:2145-2199 resolve-entities): score blocked pairs
     with Fellegi-Sunter weights — EM-trained when --train — cluster at
     the threshold, report input/cluster/merge counts."""
-    from pyspark.sql import SparkSession
-
     from epstein_pipeline_spark.operators.resolution import resolve_persons
+    from epstein_pipeline_spark.session import engine_session
 
-    spark = SparkSession.builder.appName("epstein_pipeline_spark.resolve").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = engine_session("epstein_pipeline_spark.resolve")
     persons = spark.read.parquet(args.input)
     t0 = time.time()
     res = resolve_persons(
@@ -527,11 +504,10 @@ def cmd_resolve(args) -> None:
 
 
 def cmd_synth(args) -> None:
-    from pyspark.sql import SparkSession
-
+    from epstein_pipeline_spark.session import engine_session
     from epstein_pipeline_spark.synth import generate_corpus, pages_to_spark
 
-    spark = SparkSession.builder.appName("epstein_pipeline_spark.synth").getOrCreate()
+    spark = engine_session("epstein_pipeline_spark.synth")
     corpus = generate_corpus(n_pages=args.pages, seed=args.seed, mega_cluster_size=args.mega)
     pages_to_spark(spark, corpus, partitions=args.partitions).write.mode("overwrite").parquet(
         args.output

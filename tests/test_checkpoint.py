@@ -2,6 +2,7 @@
 (reference state.py:15-111 semantics)."""
 
 import shutil
+import time
 from pathlib import Path
 
 from pyspark.sql import functions as F
@@ -79,13 +80,19 @@ def test_shuffle_byte_counters(spark, tmp_path):
 
 
 def test_task_counters(spark, tmp_path):
-    """Each commit records the tasks its write ran and their summed
-    time, from the same executor-summary deltas as the shuffle bytes:
-    a 3-partition map-only write is exactly 3 tasks."""
+    """Each commit records the tasks its write ran, their summed time
+    and JVM GC time, from the same executor-summary deltas as the
+    shuffle bytes, plus the write's wall time: a 3-partition map-only
+    write is exactly 3 tasks."""
     store = StageStore(tmp_path)
+    t0 = time.perf_counter()
     m = store.commit("three", spark.range(0, 30, 1, numPartitions=3))
-    assert m["counters"]["tasks"] == 3
-    assert "task_ms" in m["counters"]
+    outer_ms = (time.perf_counter() - t0) * 1000
+    c = m["counters"]
+    assert c["tasks"] == 3
+    assert "task_ms" in c
+    assert isinstance(c["gc_ms"], int) and c["gc_ms"] >= 0
+    assert isinstance(c["wall_ms"], int) and 0 < c["wall_ms"] <= outer_ms + 1
 
 
 def test_two_writer_append_conflict(spark, tmp_path):
