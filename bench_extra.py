@@ -9,6 +9,12 @@ Usage:
       # shuffle bytes and records of every exchange each commit of one
       # run_dedup writes, over the perfbench dedup_ascii corpus (seed 201)
       # at local[4]; partitions defaults to perfbench's 4
+  python bench_extra.py floor
+      # the fixed floor of a small run at local[4] (L1/L2): a no-op
+      # mapInArrow at 4 and 16 tasks, cold and warm; the zipimporters a
+      # Python worker caches; the classes the JVM's codegen compiles for
+      # a warm-up run, two identical run_dedups and two folds over the
+      # perfbench dedup_ascii corpus (seed 201)
 """
 
 from __future__ import annotations
@@ -77,9 +83,10 @@ def exchanges(pages: int, partitions: int) -> None:
     (generate_corpus seed 201, its 50-member mega cluster, 8 parquet
     files), printing for each commit the ShuffleExchangeExec nodes of
     AQE's final plan of the commit's write, with their shuffle bytes and
-    records written, next to the commit's shuffle_write_bytes counter.
-    The plan and its metrics come from the SQL status store (the SQL
-    tab's data, kept with the UI off)."""
+    records written, next to the commit's shuffle_write_bytes counter,
+    and the plan's join nodes (the strategy AQE settled on). The plan
+    and its metrics come from the SQL status store (the SQL tab's data,
+    kept with the UI off)."""
     import tempfile
 
     sys.path.insert(0, str(Path(__file__).resolve().parent / "perfbench"))
@@ -118,6 +125,8 @@ def exchanges(pages: int, partitions: int) -> None:
         edges = [graph.edges().apply(i) for i in range(graph.edges().size())]
         out = []
         for n in nodes:
+            if n.name().endswith("Join"):
+                out.append({"join": re.sub(r"#\d+L?", "", n.desc())})
             if n.name() != "Exchange":
                 continue
             ms = {m.name(): values.get(m.accumulatorId()) for m in
@@ -153,16 +162,94 @@ def exchanges(pages: int, partitions: int) -> None:
             for st in res.stage_seconds:
                 if not store.has(st):
                     continue
-                ex = sorted(store.found.get(st, []), key=lambda x: -x["kb"])
+                found = store.found.get(st, [])
+                ex = sorted((x for x in found if "kb" in x), key=lambda x: -x["kb"])
                 stages[st] = {
                     "counter_kb": round(store.latest(st)["counters"].get("shuffle_write_bytes", 0) / 1024, 1),
                     "exchanges_kb": round(sum(x["kb"] for x in ex), 1),
                     "exchanges": ex,
+                    "joins": [x["join"] for x in found if "join" in x],
                 }
         total = sum(v["exchanges_kb"] for v in stages.values())
         print(json.dumps({"pages": pages, "partitions": partitions,
                           "codec": spark.sparkContext.getConf().get("spark.io.compression.codec", "lz4"),
                           "total_kb": round(total, 1), "stages": stages}, indent=1))
+    finally:
+        spark.stop()
+
+
+def floor() -> None:
+    """Run by `python bench_extra.py floor`; JSON on stdout. Cold is the
+    first run of a shape in the session (the first 4-task run also starts
+    the Python daemon and its workers), warm the median of three more."""
+    import statistics
+    import tempfile
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent / "perfbench"))
+    import corpus
+
+    from epstein_pipeline_spark.config import DedupConfig
+    from epstein_pipeline_spark.plans.checkpoint import StageStore
+    from epstein_pipeline_spark.plans.incremental import run_incremental
+    from epstein_pipeline_spark.plans.pipeline import run_dedup
+    from epstein_pipeline_spark.session import get_spark
+
+    paths = corpus.load(Path(__file__).resolve().parent / ".bench_cache", 1000, 201)["ascii"]
+    spark = get_spark("bench_extra_floor", cores=4, shuffle_partitions=4)
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    out: dict = {
+        "codegen_cache": spark.conf.get("spark.sql.codegen.cache.maxEntries"),
+        "daemon": spark.sparkContext.getConf().get("spark.python.daemon.module", "pyspark.daemon"),
+    }
+
+    def identity(batches):
+        yield from batches
+
+    def noop(tasks: int) -> float:
+        df = spark.range(0, 4000, numPartitions=tasks).selectExpr("id", "repeat('x', 2000) AS text")
+        t0 = time.perf_counter()
+        df.mapInArrow(identity, df.schema).write.format("noop").mode("overwrite").save()
+        return round(time.perf_counter() - t0, 3)
+
+    for tasks in (4, 16):
+        cold = noop(tasks)
+        out[f"arrow_noop_{tasks}"] = {"cold_s": cold, "warm_s": statistics.median(noop(tasks) for _ in range(3))}
+
+    def worker_imports(batches):
+        import pyarrow as pa
+        import pyspark
+
+        zips = [k for k, v in sys.path_importer_cache.items() if type(v).__name__ == "zipimporter"]
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({"zipimporters": [len(zips)], "pyspark": [pyspark.__file__]})
+
+    rows = (
+        spark.range(0, 4, numPartitions=4)
+        .mapInArrow(worker_imports, "zipimporters long, pyspark string")
+        .collect()
+    )
+    out["worker"] = {"zipimporters": max(r.zipimporters for r in rows), "pyspark": rows[0].pyspark}
+
+    cfg = DedupConfig()
+    compiled: list[dict] = []
+
+    def counted(name: str, fn) -> None:
+        n0, t0 = codegen.METRIC_COMPILATION_TIME().getCount(), time.perf_counter()
+        fn()
+        compiled.append({"run": name, "classes": codegen.METRIC_COMPILATION_TIME().getCount() - n0,
+                         "wall_s": round(time.perf_counter() - t0, 2)})
+
+    try:
+        with tempfile.TemporaryDirectory(dir="/dev/shm") as tmp:
+            stores = [StageStore(Path(tmp) / f"s{k}") for k in range(3)]
+            counted("warm_up", lambda: run_dedup(spark, spark.read.parquet(paths["warm"]), stores[0], cfg))
+            for k in (1, 2):
+                counted(f"run_dedup_{k}", lambda k=k: run_dedup(spark, spark.read.parquet(paths["base"]), stores[k], cfg))
+            for k in (1, 2):
+                counted(f"fold_{k}", lambda k=k: run_incremental(spark, spark.read.parquet(paths["delta"]), stores[k], cfg))
+        out["codegen"] = compiled
+        print(json.dumps(out, indent=1))
     finally:
         spark.stop()
 
@@ -185,6 +272,8 @@ def main() -> None:
     elif mode == "exchanges":
         exchanges(int(sys.argv[2]) if len(sys.argv) > 2 else 1000,
                   int(sys.argv[3]) if len(sys.argv) > 3 else 4)
+    elif mode == "floor":
+        floor()
     else:
         raise SystemExit(f"unknown mode {mode}")
 

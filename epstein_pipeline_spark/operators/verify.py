@@ -103,9 +103,9 @@ def verify_pairs(cand: DataFrame, docs: DataFrame, cfg: DedupConfig) -> DataFram
     # per-row compute, and AQE's byte-based coalescing would otherwise
     # pack it into one partition and serialize the work (explicit
     # partition counts are exempt from coalescing). Exactly one task
-    # per core — one wave: every Python task pays a fixed 0.2-0.35 s
-    # of worker setup even when its partition is empty, so a second
-    # wave costs more than the balance it buys (session.spread_to_cores).
+    # per core — one wave: every Python task pays a fixed ~0.1 s even
+    # when its partition is empty, so a second wave costs more than the
+    # balance it buys (session.spread_to_cores).
     nparts = docs.sparkSession.sparkContext.defaultParallelism
     joined = (
         cand.select("url1", "url2", F.col("score").alias("_est"))

@@ -20,8 +20,8 @@ in ``MANIFEST.log``) alone says what a snapshot is — its data files
 with ``paths`` across an append chain), its schema, and stage-level
 counters (docs_in, docs_out, pairs_emitted, plus shuffle_read_bytes /
 shuffle_write_bytes / tasks / task_ms / gc_ms measured around the write
-action from the AppStatusStore executor totals, and the write's own
-wall_ms), read back via
+action from the AppStatusStore executor totals, the codegen_classes the
+JVM compiled for it, and the write's own wall_ms), read back via
 ``latest(stage)["counters"]`` / ``stage_shuffle_write_mb``. ``read``
 loads exactly the listed files with the recorded schema, so it starts
 no Spark job and a stray file in a snapshot directory is never data.
@@ -65,9 +65,12 @@ def _executor_totals(spark) -> dict[str, int] | None:
     rule's lineage requires — and its task count, the per-task fixed
     cost that dominates small Python stages. Listener-bus delivery is
     async, so totals can lag task completion by a beat; counters here
-    are evidence, not accounting. Returns None when the internal API
-    is unavailable (counters are then simply omitted — never fail a
-    commit over metrics)."""
+    are evidence, not accounting. ``codegen_classes`` counts the
+    classes Spark's code generator compiled in the driver's JVM (the
+    executors' too on a local master; each is a miss of its class
+    cache, so a repeated plan compiles none). Returns None when the
+    internal API is unavailable (counters are then simply omitted —
+    never fail a commit over metrics)."""
     try:
         jsc = spark.sparkContext._jsc.sc()
         try:
@@ -83,6 +86,8 @@ def _executor_totals(spark) -> dict[str, int] | None:
             e = execs.apply(i)
             for k, getter in _EXECUTOR_TOTALS:
                 totals[k] += int(getattr(e, getter)())
+        codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        totals["codegen_classes"] = int(codegen.METRIC_COMPILATION_TIME().getCount())
         return totals
     except Exception:
         return None

@@ -139,8 +139,8 @@ def signatures_stage(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     re-dealt only when it has fewer partitions than cores (a tiny
     corpus in one parquet file would serialize the UDF on one task),
     and then to exactly one task per core. Each Python task costs a
-    fixed 0.2-0.35 s of worker setup however few rows it holds, so
-    re-dealing a 4-file snapshot to 4x cores would buy 16 task
+    fixed ~0.1 s however few rows it holds (``session.spread_to_cores``),
+    so re-dealing a 4-file snapshot to 4x cores would buy 16 task
     launches and a round-robin exchange of the whole text column, and
     no balance. At scale the extract snapshot already has >= 6
     splits/core (the adaptive split sizing above) and is read as is:

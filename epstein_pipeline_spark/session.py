@@ -24,13 +24,40 @@ and 0.419 MB under zstd (``dedup_ascii``, 10 seeds; -40%, every seed
 lower), with docs/s, setup time and peak RSS within the host's noise.
 At 128k pages (``bench_extra.py dedup 4``) the stages wrote 306 MB
 under lz4 and 176 MB under zstd.
+
+Why the codegen cache size: Spark's code generator compiles each
+distinct generated class once per JVM and keeps it in a cache that
+Spark sizes at 100 classes (``spark.sql.codegen.cache.maxEntries``,
+static: read when the JVM first generates code), evicting the oldest
+first. A batch
+run needs about 160 and a batch run plus a fold about 320, so with the
+default every run misses on nearly every class: on the perfbench
+corpus (``bench_extra.py floor``) a second identical ``run_dedup``
+compiled 142-144 classes and a second fold 231-232. With room for them
+all those runs compile 2-4 and 6-16, and each commit records its count
+as ``codegen_classes``.
+
+Why the worker entry: Spark starts each Python daemon with pyspark.zip,
+the py4j zip and the spark-core jar first on its path, and every Python
+task's ``importlib.invalidate_caches()`` re-reads those archives'
+central directories through their 16 cached zipimporters. The package's
+``daemon`` module drops the archives when an unpacked pyspark and py4j
+of the same versions import, then runs pyspark's daemon (see
+``daemon.py``). It is set only where the workers can import it
+(``workers_import_entry``): the daemon starts before ``--py-files``
+reach its path, and a daemon module that does not import fails every
+Python task.
 """
 
 from __future__ import annotations
 
 import os
+import re
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+from epstein_pipeline_spark import daemon
 
 # Settings that do not depend on host size, applied by get_spark and
 # engine_session. Builder options override spark-submit --conf values,
@@ -55,14 +82,66 @@ ENGINE_CONF: dict[str, str] = {
     "spark.speculation": "false",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # generated classes kept per JVM (Spark's default, 100, evicts the
+    # oldest first; module docstring). Distinct classes measured with
+    # an unbounded cache: 145 for the perfbench warm-up, 319 for a
+    # batch run plus a fold in one session, 2375 over the test suite.
+    "spark.sql.codegen.cache.maxEntries": "4096",
+    # the package's worker entry, dropped by engine_conf where the
+    # workers cannot import it (module docstring)
+    "spark.python.daemon.module": daemon.__name__,
 }
+
+_PACKAGE = Path(__file__).resolve().parent
+
+
+def workers_import_entry(master: str, pythonpath: str, cwd: str | None) -> bool:
+    """Whether the Python workers of a session on ``master`` import
+    this package's daemon module. Only a local master's workers are
+    children of the JVM the engine can see: they start as ``python -m``
+    in the JVM's working directory ``cwd`` (None when PYTHONSAFEPATH
+    keeps it off the path) with the JVM's ``pythonpath`` after Spark's
+    archives. ``--py-files`` reach the path only after the daemon has
+    started, so the first entry that holds the package as a plain
+    directory must be this checkout (a package imported from a zip
+    never is)."""
+    if not re.fullmatch(r"local(\[[^\]]*\])?", master.strip()):
+        return False
+    for entry in ([cwd] if cwd else []) + pythonpath.split(os.pathsep):
+        if entry and (Path(entry) / _PACKAGE.name / "__init__.py").is_file():
+            return Path(entry).resolve() == _PACKAGE.parent
+    return False
+
+
+def engine_conf(master: str) -> dict[str, str]:
+    """``ENGINE_CONF`` for a new session on ``master``, without the
+    worker entry where its workers would not import it (they keep
+    Spark's stock daemon). The workers' PYTHONPATH and working directory
+    are the JVM's: the running one's if the gateway is up (spark-submit,
+    or a stopped session's JVM), else this process's, which a JVM the
+    builder launches inherits."""
+    from pyspark import SparkContext
+
+    jvm = SparkContext._jvm
+    if jvm is None:
+        env, cwd = os.environ.get, os.getcwd()
+    else:
+        env, cwd = jvm.java.lang.System.getenv, jvm.java.lang.System.getProperty("user.dir")
+    conf = dict(ENGINE_CONF)
+    if not workers_import_entry(master, env("PYTHONPATH") or "", None if env("PYTHONSAFEPATH") else cwd):
+        del conf["spark.python.daemon.module"]
+    return conf
 
 
 def engine_session(app: str) -> SparkSession:
     """The session of a spark-submit command: master and sizing come
-    from spark-submit (``--master``, ``--conf``), ``ENGINE_CONF`` is
+    from spark-submit (``--master``, ``--conf``), ``engine_conf`` is
     applied on top."""
-    spark = SparkSession.builder.appName(app).config(map=ENGINE_CONF).getOrCreate()
+    from pyspark import SparkContext
+
+    SparkContext._ensure_initialized()  # joins spark-submit's JVM, else starts one
+    master = SparkContext._jvm.org.apache.spark.SparkConf().get("spark.master", "local[*]")
+    spark = SparkSession.builder.appName(app).config(map=engine_conf(master)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
@@ -93,7 +172,7 @@ def get_spark(
     builder = (
         SparkSession.builder.master(master)
         .appName(app)
-        .config(map=ENGINE_CONF)
+        .config(map=engine_conf(master))
         # make local[N] mean N: size JVM internal pools (GC, JIT,
         # netty, parquet) to N, not to the machine's visible CPUs —
         # otherwise a "2-core" run borrows helper-thread time and
@@ -143,13 +222,14 @@ def spread_to_cores(df: DataFrame) -> DataFrame:
     every Python signature stage.
 
     Sizing is one wave of Python tasks, never more: each Python task
-    pays a fixed ~0.2-0.35 s on its worker however few rows it holds
-    (pyspark's per-task ``setup_spark_files`` re-scans pyspark.zip's
-    central directory for every cached zipimporter, plus the daemon's
-    gc between tasks), so 2x-4x over-partitioning multiplies that
-    floor for no balance gain (a no-op pandas UDF over 1000 rows:
-    0.58 s at 4 partitions, 1.38 s at 16, 4.8 s at 64 on a 4-vCPU
-    host). An input that already has >= one task per core is left
+    pays a fixed ~0.1 s on its worker however few rows it holds (the
+    Arrow round trip, the daemon's gc between tasks, task launch), so
+    2x-4x over-partitioning multiplies that floor for no balance gain
+    (a no-op ``mapInArrow`` at local[4] on a 4-vCPU host,
+    ``bench_extra.py floor``: 0.16-0.25 s at 4 tasks, 0.31-0.66 s at
+    16; before the worker entry dropped Spark's archives, whose
+    zipimporters every task re-read, 0.31-0.51 s and 0.89-1.32 s).
+    An input that already has >= one task per core is left
     alone: re-dealing it would add a full exchange of the text column.
     The count is read from ``df.rdd``, which is free for a scan but
     would execute an upstream shuffle, so pass scan-shaped input."""

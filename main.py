@@ -319,7 +319,8 @@ def cmd_rollback(args) -> None:
 def cmd_lineage(args) -> None:
     """Audit a store without writing Spark code: per-stage manifest
     summary (snapshot id, rows, bytes, counters incl. shuffle bytes,
-    the tasks / task_ms / gc_ms the commit's write ran and its wall_ms,
+    the tasks / task_ms / gc_ms the commit's write ran, the
+    codegen_classes the JVM compiled for it and its wall_ms,
     append-chain length) plus per-partition row counts per snapshot — the
     north-rule resumability evidence, surfaced at the CLI. Everything
     comes from the manifests and their MANIFEST.log

@@ -185,3 +185,15 @@ def test_one_record_per_commit(result):
         assert other == {"MANIFEST.json", "MANIFEST.log", ".MANIFEST.lock"}, stage
         logged = [json.loads(x) for x in (sdir / "MANIFEST.log").read_text().splitlines()]
         assert logged and all("files" in e and "schema" in e for e in logged), stage
+
+
+def test_repeated_run_compiles_no_generated_classes(spark, pages, result, tmp_path):
+    """Each commit records the classes the JVM's codegen compiled for
+    its write. The session's codegen cache holds every class of a run,
+    so the same run again, into a new store, compiles none at any stage
+    (with Spark's default 100-class cache it recompiles about 20 per
+    stage)."""
+    store = StageStore(tmp_path)
+    run_dedup(spark, pages, store, CFG, use_extracted=True, lcs_check=True)
+    compiled = {s: store.latest(s)["counters"]["codegen_classes"] for s in STAGES}
+    assert compiled == dict.fromkeys(STAGES, 0)

@@ -45,14 +45,20 @@ def test_engine_conf_in_effect(spark):
 def test_engine_session_overrides_submit_conf(tmp_path):
     """The spark-submit commands' session: --conf values that contradict
     the engine settings lose to them (builder options win), so a
-    submitted run gets zstd, the v2 committer with speculation off, UTC
-    and Arrow whatever the cluster defaults say."""
+    submitted run gets zstd, the v2 committer with speculation off, UTC,
+    Arrow, the larger codegen cache and, on a local master whose workers
+    have the package on their PYTHONPATH, the worker entry, whatever the
+    cluster defaults say. The working directory is outside the checkout,
+    so the workers import the entry from PYTHONPATH: a Python task runs
+    and its pyspark comes from outside Spark's archives."""
     contrary = {
         "spark.io.compression.codec": "lz4",
         "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "1",
         "spark.speculation": "true",
         "spark.sql.session.timeZone": "America/New_York",
         "spark.sql.execution.arrow.pyspark.enabled": "false",
+        "spark.sql.codegen.cache.maxEntries": "100",
+        "spark.python.daemon.module": "pyspark.daemon",
     }
     assert contrary.keys() == ENGINE_CONF.keys()
     confs = " ".join(f"--conf {k}={v}" for k, v in contrary.items())
@@ -67,7 +73,8 @@ def test_engine_session_overrides_submit_conf(tmp_path):
         "s = engine_session('tests.engine_session')\n"
         "c = s.sparkContext.getConf()\n"
         "got = {k: [c.get(k), s.conf.get(k)] for k in ENGINE_CONF}\n"
-        "print(json.dumps(dict(got, master=c.get('spark.master'))))\n"
+        "f = s.range(1).rdd.map(lambda _: __import__('pyspark').__file__).first()\n"
+        "print(json.dumps(dict(got, master=c.get('spark.master'), worker_pyspark=f)))\n"
         "s.stop()\n"
     )
     out = subprocess.run(
@@ -78,6 +85,7 @@ def test_engine_session_overrides_submit_conf(tmp_path):
     got = json.loads(out.stdout.strip().splitlines()[-1])
     # the submit args were read (their master holds), the engine settings won
     assert got.pop("master") == "local[1]"
+    assert ".zip" not in got.pop("worker_pyspark")
     assert got == {k: [v, v] for k, v in ENGINE_CONF.items()}
 
 
@@ -106,3 +114,98 @@ def test_no_session_builder_outside_session_module():
     }
     assert sites == {}
     assert _builder_sites(ROOT / "epstein_pipeline_spark" / "session.py")
+
+
+def test_workers_import_an_unpacked_pyspark(spark):
+    """The fixture session runs the package's worker entry: inside a
+    Python worker pyspark comes from a plain directory, and no Spark
+    archive is left for ``invalidate_caches`` to re-read on every task
+    (Spark's stock daemon leaves 16 zipimporters over three archives)."""
+    def worker_imports(batches):
+        import importlib
+        import sys
+
+        import pyarrow as pa
+        import pyspark
+
+        importlib.invalidate_caches()  # what every task's setup_spark_files calls
+        archives = [
+            k for k, v in sys.path_importer_cache.items()
+            if type(v).__name__ == "zipimporter" and ("pyspark.zip" in k or "py4j" in k or ".jar" in k)
+        ]
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({"pyspark": [pyspark.__file__], "archives": [len(archives)]})
+
+    rows = spark.range(0, 4, numPartitions=4).mapInArrow(worker_imports, "pyspark string, archives long").collect()
+    assert len(rows) == 4
+    for r in rows:
+        assert ".zip" not in r.pyspark and ".jar" not in r.pyspark, r.pyspark
+        assert r.archives == 0, r.archives
+
+
+def _fake_archive(path: Path, files: dict[str, str]) -> str:
+    import zipfile
+
+    path.parent.mkdir(parents=True, exist_ok=True)
+    with zipfile.ZipFile(path, "w") as z:
+        for name, text in files.items():
+            z.writestr(name, text)
+    return str(path)
+
+
+def _fake_unpacked(root: Path, pyspark: str | None, py4j: str | None) -> str:
+    for name, version in (("pyspark", pyspark), ("py4j", py4j)):
+        if version is not None:
+            (root / name).mkdir(parents=True)
+            (root / name / "__init__.py").write_text("")
+            (root / name / "version.py").write_text(f"__version__: str = '{version}'\n")
+    return str(root)
+
+
+@pytest.mark.parametrize(
+    "unpacked, dropped",
+    [
+        (("4.1.2", "0.10.9.9"), True),
+        ((None, "0.10.9.9"), False),  # no unpacked pyspark
+        (("4.1.1", "0.10.9.9"), False),  # pyspark of another version
+        (("4.1.2", None), False),  # no unpacked py4j
+        (("4.1.2", "0.10.9.8"), False),  # py4j of another version
+    ],
+)
+def test_worker_entry_keeps_the_archives_without_a_matching_unpacked_pyspark(tmp_path, unpacked, dropped):
+    """The worker entry's decision, on a fake worker path of Spark's
+    three archives followed by a site directory: it drops the archives
+    only if the site directory holds pyspark and py4j of exactly the
+    archives' versions."""
+    from epstein_pipeline_spark.daemon import archives_to_drop
+
+    archives = [
+        _fake_archive(tmp_path / "spark/python/lib/pyspark.zip", {"pyspark/version.py": "__version__: str = '4.1.2'\n"}),
+        _fake_archive(tmp_path / "spark/python/lib/py4j-0.10.9.9-src.zip", {"py4j/version.py": "__version__ = '0.10.9.9'\n"}),
+        _fake_archive(tmp_path / "spark/jars/spark-core_2.13-4.1.2.jar", {"org/apache/spark/X.class": ""}),
+    ]
+    site = _fake_unpacked(tmp_path / "site", *unpacked)
+    assert archives_to_drop([str(tmp_path), *archives, site]) == (archives if dropped else [])
+
+
+def test_worker_entry_is_set_only_where_workers_import_it(tmp_path):
+    """A local master whose workers find this checkout first on their
+    path (the JVM's working directory, which ``python -m`` puts first,
+    or its PYTHONPATH) gets the worker entry; any other master, or a
+    path without the checkout or with another copy of the package
+    first, keeps Spark's stock daemon."""
+    from epstein_pipeline_spark.session import workers_import_entry
+
+    root, other = str(ROOT), str(tmp_path)
+    assert workers_import_entry("local[4]", "", root)
+    assert workers_import_entry("local", "", root)
+    assert workers_import_entry("local[*]", f"/x{os.pathsep}{root}", str(tmp_path))
+    assert not workers_import_entry("local[4]", "", other)
+    assert not workers_import_entry("local[4]", "", None)
+    assert not workers_import_entry("yarn", root, root)
+    assert not workers_import_entry("spark://h:7077", root, root)
+    assert not workers_import_entry("local-cluster[2,1,1024]", root, root)
+    (tmp_path / "epstein_pipeline_spark").mkdir()
+    (tmp_path / "epstein_pipeline_spark" / "__init__.py").write_text("")
+    assert not workers_import_entry("local[4]", root, other)

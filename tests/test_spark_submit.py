@@ -1,8 +1,15 @@
 """Packaging: the pipeline ships and runs via spark-submit --py-files
 (north_rule packaging requirement). Runs the real binary end-to-end on
-a small corpus, then verifies resume on a second submit."""
+a small corpus, then verifies resume on a second submit.
+
+Every submit runs from a working directory outside the checkout with no
+PYTHONPATH, as a production submit does: the package reaches the
+workers only through --py-files, after their daemon has started, so
+the engine must keep Spark's stock daemon (a daemon module the workers
+cannot import would fail every Python task)."""
 
 import json
+import os
 import shutil
 import subprocess
 import sys
@@ -27,7 +34,7 @@ def zipfile_path():
     return REPO / "dist" / "epstein_pipeline_spark.zip"
 
 
-def _submit(zip_path: Path, *args: str) -> str:
+def _submit(zip_path: Path, cwd: Path, *args: str) -> str:
     cmd = [
         "spark-submit",
         "--master", "local[4]",
@@ -38,7 +45,8 @@ def _submit(zip_path: Path, *args: str) -> str:
         str(REPO / "main.py"),
         *args,
     ]
-    out = subprocess.run(cmd, capture_output=True, text=True, timeout=600)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(cmd, cwd=cwd, env=env, capture_output=True, text=True, timeout=600)
     assert out.returncode == 0, out.stderr[-3000:]
     return out.stdout
 
@@ -48,12 +56,12 @@ def test_spark_submit_synth_then_dedup(zipfile_path, tmp_path):
     store = tmp_path / "store"
     clusters = tmp_path / "clusters"
 
-    out1 = _submit(zipfile_path, "synth", "--pages", "300", "--output", str(pages))
+    out1 = _submit(zipfile_path, tmp_path, "synth", "--pages", "300", "--output", str(pages))
     stats = json.loads(out1.strip().splitlines()[-1])
     assert stats["n_pages"] == 300
 
     out2 = _submit(
-        zipfile_path, "dedup", "--input", str(pages), "--store", str(store),
+        zipfile_path, tmp_path, "dedup", "--input", str(pages), "--store", str(store),
         "--output", str(clusters),
     )
     res = json.loads(out2.strip().splitlines()[-1])
@@ -61,7 +69,7 @@ def test_spark_submit_synth_then_dedup(zipfile_path, tmp_path):
 
     # second submit resumes: all stages skipped
     out3 = _submit(
-        zipfile_path, "dedup", "--input", str(pages), "--store", str(store),
+        zipfile_path, tmp_path, "dedup", "--input", str(pages), "--store", str(store),
         "--output", str(clusters),
     )
     res3 = json.loads(out3.strip().splitlines()[-1])
@@ -83,6 +91,7 @@ def test_spark_submit_synth_then_dedup(zipfile_path, tmp_path):
     assert lin["stages"]["signatures"]["counters"]["task_ms"] > 0
     assert lin["stages"]["signatures"]["counters"]["wall_ms"] > 0
     assert lin["stages"]["signatures"]["counters"]["gc_ms"] >= 0
+    assert lin["stages"]["signatures"]["counters"]["codegen_classes"] > 0  # a fresh JVM
     # per-partition rollup agrees with the manifests
     assert lin["lineage"]["extract/snapshot-0"]["rows_out"] == 300
     assert lin["lineage"]["labels/snapshot-0"]["partitions"] >= 1
@@ -99,7 +108,7 @@ def test_spark_submit_resolve_trained(zipfile_path, tmp_path, spark):
     _persons(spark, n=120).write.mode("overwrite").parquet(str(persons))
 
     out = _submit(
-        zipfile_path, "resolve", "--input", str(persons),
+        zipfile_path, tmp_path, "resolve", "--input", str(persons),
         "--output", str(tmp_path / "resolved"), "--train",
     )
     res = json.loads(out.strip().splitlines()[-1])
@@ -121,14 +130,14 @@ def test_spark_submit_ingest_after_dedup(zipfile_path, tmp_path, spark):
     pages.write.parquet(str(full_p))
 
     out_full = _submit(
-        zipfile_path, "dedup", "--input", str(full_p),
+        zipfile_path, tmp_path, "dedup", "--input", str(full_p),
         "--store", str(tmp_path / "fs"), "--output", str(tmp_path / "fc"),
     )
     full = json.loads(out_full.strip().splitlines()[-1])
 
-    _submit(zipfile_path, "dedup", "--input", str(base_p),
+    _submit(zipfile_path, tmp_path, "dedup", "--input", str(base_p),
             "--store", str(tmp_path / "s"), "--output", str(tmp_path / "c0"))
-    out = _submit(zipfile_path, "ingest", "--input", str(delta_p),
+    out = _submit(zipfile_path, tmp_path, "ingest", "--input", str(delta_p),
                   "--store", str(tmp_path / "s"), "--output", str(tmp_path / "c1"))
     res = json.loads(out.strip().splitlines()[-1])
     assert res["docs_total"] == 300
